@@ -51,7 +51,6 @@ def __getattr__(name: str):
         "vocab_top": "operators.corpus",
         "repetition_stats": "operators.corpus",
         "pagerank": "operators.graph",
-        "connected_components": "operators.dedup",
         "connected_components_ls": "operators.dedup",
         "pack_sequences": "operators.llmdata",
         "pii_scrub": "operators.llmdata",
@@ -98,7 +97,6 @@ __all__ = [
     "vocab_top",
     "repetition_stats",
     "pagerank",
-    "connected_components",
     "connected_components_ls",
     "pack_sequences",
     "pii_scrub",

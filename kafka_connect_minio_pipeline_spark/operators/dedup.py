@@ -35,6 +35,7 @@ from ..functions.barrier import filter_above
 from ..functions.vectors import cosine_from_parts, dot, to_double
 from ..registry import Query
 from ..scratch import scratch_dir
+from ..streaming.runner import source_bytes
 from ..tables import load, spread
 
 # ---------------------------------------------------------------------------
@@ -142,17 +143,7 @@ STAGE_FILES_MIN = 8
 
 
 def _stage_files(sf_dir: str, name: str) -> int:
-    import os
-
-    p = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(p):
-        bytes_ = sum(
-            os.path.getsize(f"{p}/{f}")
-            for f in os.listdir(p)
-            if f.endswith(".parquet")
-        )
-    else:
-        bytes_ = os.path.getsize(p)
+    bytes_ = source_bytes(sf_dir, name)
     return max(STAGE_FILES_MIN, -(-bytes_ // STAGE_TARGET_INPUT_BYTES))
 
 
@@ -186,13 +177,6 @@ def _staged_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stage_files(sf_dir, "documents")
     ).write.mode("overwrite").option("compression", "zstd").parquet(d)
     return spark.read.parquet(d)
-
-
-def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exploded (doc_id, s) distinct-shingle rows (inverted-index form)."""
-    return _doc_shingle_sets(spark, sf_dir).select(
-        "doc_id", F.explode("arr").alias("s")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -589,78 +573,13 @@ def minhash_band_rows_sql() -> str:
 # 3b. near-dup clusters (connected components over the pair graph)
 # ---------------------------------------------------------------------------
 
-
-def connected_components(
-    edges: DataFrame, src: str = "d1", dst: str = "d2", max_iter: int = 50
-) -> DataFrame:
-    """Connected components by min-label propagation: every node ends up
-    labeled with the smallest doc_id reachable from it.
-
-    Pair generation (Jaccard/LSH/phash) gives near-dup EDGES;
-    deduplication needs CLUSTERS (pick one canonical doc per component),
-    and transitivity means components can chain beyond direct pairs.
-    This is the alternating-join algorithm GraphX/GraphFrames use for
-    CC: each round every node takes the min label in its closed
-    neighborhood; the driver loop only checks a converged COUNT per
-    round (no data through the driver). Rounds ≈ graph diameter —
-    Jaccard near-dup components are shallow cliques (1-3 rounds) but a
-    loose pair graph (e.g. hamming-14 phash chains) can run tens deep.
-
-    Each round's result is ``localCheckpoint``-ed, not cache()d:
-    caching bounds EXECUTION per round but the logical plan still
-    doubles every iteration (labels appears in both the propagate join
-    and the convergence check), so analysis/optimization time grows
-    exponentially with depth — measured 1.2 s → 73 s per round by
-    iteration 9 on the phash graph. Checkpointing truncates lineage, so
-    every round plans and runs in O(round cost). On a multi-node
-    cluster prefer ``checkpoint()`` to a reliable dir (localCheckpoint
-    state dies with an executor); for extreme-diameter graphs the
-    log-rounds pointer-doubling variant (large-star/small-star) is the
-    published scale-out answer.
-
-    Raises if the cap is hit without convergence — truncated labels are
-    WRONG answers, never returned silently.
-    """
-    # Materialize the edge relation ONCE before fanning out: the pair
-    # generation upstream (a full set-similarity join) is expensive, and
-    # both union branches plus every loop round would otherwise re-derive
-    # it (measured 8.6 s → 4.1 s at sf0.1 for the Jaccard pair graph).
-    edges = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).cache()
-    edges.count()
-    sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    # closed neighborhood: each node is its own neighbor
-    nodes = sym.select(F.col("a")).distinct()
-    sym = sym.union(nodes.select("a", F.col("a").alias("b")))
-    sym = sym.localCheckpoint(eager=True)
-    labels = nodes.select("a", F.col("a").alias("label"))
-    converged = False
-    for _ in range(max_iter):
-        new_labels = (
-            sym.join(labels.withColumnRenamed("a", "b"), "b")
-            .groupBy("a")
-            .agg(F.min("label").alias("label"))
-        ).localCheckpoint(eager=True)
-        changed = (
-            new_labels.join(labels.withColumnRenamed("label", "old"), "a")
-            .filter(F.col("label") != F.col("old"))
-            .count()
-        )
-        # free the PRIOR round's checkpointed blocks (no-op on the round-0
-        # plain projection) — block-manager memory stays O(1) rounds, not
-        # O(rounds), in long-lived sessions
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} rounds"
-            " — graph diameter exceeds the cap; raise max_iter or switch to"
-            " pointer-doubling"
-        )
-    return labels.select(F.col("a").alias("doc_id"), F.col("label").alias("cluster_id"))
+# Large-star/small-star rounds between two convergence probes. A round
+# on a converged functional star forest returns it unchanged, so
+# batching never changes the labels; it costs at most one no-op round
+# and saves every other probe (about half a round each, and the loop is
+# job-launch-bound: 0.4-0.8 s per probe on the 1.2k-edge phash graph at
+# sf0.1).
+ROUNDS_PER_PROBE = 2
 
 
 def connected_components_ls(
@@ -669,27 +588,31 @@ def connected_components_ls(
     dst: str = "d2",
     max_iter: int = 25,
     canonical: bool = False,
-    rounds_per_probe: int = 2,
 ) -> DataFrame:
     """Connected components by alternating large-star/small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC 2014): converges in O(log n) rounds regardless of graph
-    DIAMETER, where min-label propagation (:func:`connected_components`)
-    needs diameter-many rounds — a 10^6-node path graph finishes in ~20
-    rounds here vs 10^6 there. This is the production path for loose
-    pair graphs (phash hamming chains run tens of hops deep already at
-    sf0.1); propagate stays registered as its cross-check oracle.
+    DIAMETER, where min-label propagation needs diameter-many rounds —
+    a 10^6-node path graph finishes in ~20 rounds here vs 10^6 there.
+    This is the engine's one connected-components loop: every pair
+    graph (phash hamming chains run tens of hops deep already at sf0.1)
+    and the graph_wcc binding go through it. Returns (doc_id,
+    cluster_id), cluster_id = the component's minimum node.
 
     Each round: large-star hangs every neighbor v > u onto u's minimum
     neighborhood label; small-star then flattens the ≤-neighborhood the
-    same way. The edge relation stays canonical (child > parent), is
-    ``localCheckpoint``-ed per round (lineage truncation — same measured
-    blowup as propagate without it), and the prior round's blocks are
-    freed. Convergence = edge-set fixpoint, checked with an exact
-    left-anti diff (never a hash signature: a spurious match would
-    silently return WRONG labels); at the fixpoint the forest is a star
-    per component, so the parent column IS the component min. Raises on
-    round-cap exhaustion — truncated labels are never returned.
+    same way. The edge relation stays canonical (child > parent) and is
+    ``localCheckpoint``-ed per round: without the lineage cut the
+    logical plan doubles every round and planning time grows
+    exponentially with depth (measured 1.2 s → 73 s per round by round
+    9 of a min-label loop on the phash graph). On a multi-node cluster
+    prefer ``checkpoint()`` to a reliable dir: localCheckpoint blocks
+    die with their executor. Convergence is an exact
+    structural probe — the parent relation is a functional star forest
+    — never a hash signature (a spurious match would silently return
+    WRONG labels); at that fixpoint the parent column IS the component
+    min. Raises on round-cap exhaustion — truncated labels are never
+    returned.
     """
     # ONE materialization of the canonical edge set (r14): nodes and the
     # parent relation both used to checkpoint independently, which ran
@@ -722,7 +645,6 @@ def connected_components_ls(
     # parent relation, canonical direction: u (child) -> v (parent), v < u
     b = e.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
     converged = False
-    pending: list[DataFrame] = []
     rounds = 0
     while True:
         # Convergence = the parent relation is a FUNCTIONAL star forest:
@@ -747,22 +669,8 @@ def connected_components_ls(
         # materializes every not-yet-probed round — one scheduled job
         # per PROBE where the old loop ran three per round (eager
         # checkpoint, count, anti-diff). Both legs run under one
-        # CollectLimit job.
-        #
-        # ``rounds_per_probe`` (r15, session 2): probe every K rounds,
-        # not every round — Kiveris-style batched convergence checking.
-        # Running large-star/small-star on an already-converged
-        # functional star forest returns it UNCHANGED (the fixpoint
-        # argument above), so batching can never corrupt the labels;
-        # the only cost is up to K−1 no-op rounds when convergence
-        # lands inside a block. The probe's own cost is about half a
-        # round (a groupBy min/max plus a semi-join over the parent
-        # relation), so K=2 saves ~rounds/2 probe executions for at
-        # most one cheap no-op round — positive at bench scale (the
-        # loop is sequential-job-launch-bound: measured 0.4-0.8 s per
-        # probe on sf0.1's 1.2k-edge phash graph, 5 probes for 4
-        # rounds) and at cluster scale (probe work saved grows with
-        # the edge relation exactly like the wasted round does).
+        # CollectLimit job. The probe runs every ROUNDS_PER_PROBE
+        # rounds (see the constant).
         star_viol = (
             b.alias("c")
             .join(b.alias("p"), F.col("c.v") == F.col("p.u"), "left_semi")
@@ -779,12 +687,7 @@ def connected_components_ls(
             break
         if rounds >= max_iter:
             break
-        # the probe job above materialized every round in b's lineage —
-        # the older rounds' checkpointed blocks are now droppable
-        for old in pending:
-            old.unpersist()
-        pending = []
-        for _ in range(max(1, min(rounds_per_probe, max_iter - rounds))):
+        for _ in range(min(ROUNDS_PER_PROBE, max_iter - rounds)):
             # large-star: over the SYMMETRIC relation, every neighbor
             # v > u re-attaches to min(N(u) ∪ {u}); output is already
             # canonical because the new parent m ≤ u < v. No dedup
@@ -803,7 +706,7 @@ def connected_components_ls(
             # small-star: parents and children of each u collapse onto
             # the minimum parent; roots emit their own (u, m) link
             m_sm = large.groupBy("u").agg(F.min("v").alias("m"))
-            small = (
+            b = (
                 large.join(m_sm, "u")
                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
                 .union(m_sm.select(F.col("u"), F.col("m").alias("v")))
@@ -813,8 +716,6 @@ def connected_components_ls(
                 # the materializing action for the whole round block
                 .localCheckpoint(eager=False)
             )
-            pending.append(b)
-            b = small
             rounds += 1
     if not converged:
         raise RuntimeError(
@@ -822,14 +723,12 @@ def connected_components_ls(
             " rounds — pathological for a log-rounds algorithm; check the"
             " edge relation for non-determinism"
         )
-    labels = nodes.join(
+    return nodes.join(
         b.withColumnRenamed("u", "n"), "n", "left"
     ).select(
         F.col("n").alias("doc_id"),
         F.coalesce(F.col("v"), F.col("n")).alias("cluster_id"),
     )
-    b.unpersist()
-    return labels
 
 
 # ---------------------------------------------------------------------------

@@ -3,8 +3,8 @@ the customer–supplier interaction graph (SURVEY.md §2.4 extension
 surface; tail registry position, verified by the local DuckDB parity net).
 
 The reference has no graph operators; this is the second iterative
-DataFrame algorithm in the engine (with ``dedup_clusters``' label
-propagation): rank vectors and edge lists as plain relations, one
+DataFrame algorithm in the engine (with ``dedup_clusters``'
+large-star/small-star loop): rank vectors and edge lists as plain relations, one
 join + one aggregation per iteration, the loop unrolled in the driver
 while every pass stays fully distributed. The cross-engine exactness
 trick is the usual one — per-edge contributions are quantized to
@@ -990,8 +990,9 @@ def kcore(
     aggregated degree count — every relation ≤ |V| rows, all hashed on
     the same key. The driver loop sees only a count per round (peeling
     never adds nodes, so an unchanged count IS the set fixpoint);
-    per-round ``localCheckpoint`` + prior-round unpersist keep lineage
-    and block-manager memory O(1), the connected_components discipline.
+    per-round ``localCheckpoint`` keeps lineage O(1) (``unpersist()``
+    does not free checkpointed blocks; the ContextCleaner does once a
+    round's relation is unreferenced).
     Rounds = peel-cascade depth (measured ≤ 4 on this graph family at
     sf0.001-0.1); the cap raises LOUDLY — a truncated peel is a
     superset of the core, never returned silently. The oracle unrolls
@@ -1034,14 +1035,12 @@ def kcore(
             .filter(F.col("deg") >= k)
         ).localCheckpoint(eager=True)
         cur = new_degrees.count()
-        degrees.unpersist()
         degrees = new_degrees
         rounds += 1
         if cur == prev:
             converged = True
             break
         prev = cur
-    directed.unpersist()
     if not converged:
         raise RuntimeError(
             f"kcore did not reach a fixpoint within {max_rounds} rounds"
@@ -1218,132 +1217,47 @@ def _hits_sql() -> str:
 SQL_GRAPH_HITS = _hits_sql()
 
 
-WCC_MAX_ROUNDS = 15
 WCC_ORACLE_ROUNDS = 5  # oracle unrolls this many no-op-padded rounds
 
 
-def connected_components(
-    edges: DataFrame,
-    max_rounds: int = WCC_MAX_ROUNDS,
-    oracle_rounds: int | None = None,
-) -> DataFrame:
-    """Weakly-connected components by min-label propagation to
-    fixpoint: every node starts labeled with its own id; each round
-    takes the min over its neighbors' labels (and its own); labels stop
-    changing exactly when every node carries its component's minimum
-    id. Returns (node, component, component_size).
+def connected_components(edges: DataFrame, canonical: bool = False) -> DataFrame:
+    """Weakly-connected components of an (a, b) edge relation: every
+    node labeled with its component's minimum id, plus the component's
+    size. Returns (node, component, component_size).
 
-    Per round: one co-partitioned join of the label relation onto the
-    symmetrized edges + one partial-aggregated min per node — both
-    relations ≤ |E| / |V| rows hashed on the node key; per-round
-    ``localCheckpoint`` + prior-round unpersist keep lineage and
-    block-manager memory O(1) (the kcore discipline). Convergence is a
-    changed-label count per round; the cap raises LOUDLY — a truncated
-    propagation is NOT a component labeling. Round count = max distance
-    from any node to its component's min-id node; on this co-occurrence
-    graph it fixpoints in ≤3 (measured sf0.001–0.01). At 100 TB
-    diameters, swap the per-hop loop for the log-rounds large-star/
-    small-star alternation (Kiveris et al., 'Connected Components in
-    MapReduce and Beyond', SoCC 2014) — the dedup_clusters machinery;
-    the relation contract here is identical. The oracle unrolls
-    {WCC_ORACLE_ROUNDS} fixed rounds (extra rounds are no-ops at the
-    fixpoint), so convergence ≤ that unroll is also asserted.
-    Component sizes ride one label-keyed window over the final
-    node-sized relation.
-    """
-    directed = (
-        edges.select(F.col("a").alias("s"), F.col("b").alias("d"))
-        .unionAll(edges.select(F.col("b").alias("s"), F.col("a").alias("d")))
-        .localCheckpoint(eager=True)
-    )
-    lab = (
-        directed.select(F.col("s").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    rounds = 0
-    converged = False
-    for _ in range(max_rounds):
-        nbr_min = (
-            directed.join(
-                lab.select(F.col("node").alias("d"), F.col("label").alias("nl")),
-                "d",
-            )
-            .groupBy("s")
-            .agg(F.min("nl").alias("nmin"))
-        )
-        new_lab = (
-            lab.join(nbr_min, lab.node == nbr_min.s, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            lab.select("node", F.col("label").alias("old"))
-            .join(new_lab, "node")
-            .filter(F.col("old") != F.col("label"))
-            .count()
-        )
-        lab.unpersist()
-        lab = new_lab
-        rounds += 1
-        if changed == 0:
-            converged = True
-            break
-    directed.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not fixpoint within {max_rounds} rounds"
-        )
-    if oracle_rounds is not None and rounds > oracle_rounds:
-        raise RuntimeError(
-            f"connected_components needed {rounds} rounds but the oracle"
-            f" unrolls only {oracle_rounds} — raise WCC_ORACLE_ROUNDS"
-        )
-    w = Window.partitionBy("label")
-    return lab.select(
-        "node",
-        F.col("label").alias("component"),
-        F.count("*").over(w).alias("component_size"),
-    )
-
-
-def q_graph_wcc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry binding: weakly-connected components of the part
-    co-occurrence graph (one giant component on the TPC-H-ish corpus —
-    the multi-component arms are pinned by the hand-built fixture in
-    tests/test_graph.py).
-
-    Production path (r11): the large-star/small-star alternation
-    (Kiveris et al., SoCC 2014 — ``dedup.connected_components_ls``, the
-    same machinery dedup_clusters ships), which fixpoints in O(log n)
-    rounds regardless of graph DIAMETER; the r10 min-label loop
-    (:func:`connected_components`) needed diameter-many rounds, a
-    100 TB scale killer on deep graphs (VERDICT r10 item 7). Min-label
-    stays registered as the cross-check: tests/test_graph.py pins both
-    paths identical on this graph and on a deep path graph where the
-    round-count gap is the point. The labeling both compute is the
-    same (component = min node id), so the unrolled min-label oracle is
-    unchanged. Component sizes ride one label-keyed window over the
-    final node-sized relation, exactly as before.
+    The labels come from the large-star/small-star loop
+    (``dedup.connected_components_ls``), which fixpoints in O(log n)
+    rounds regardless of graph DIAMETER. ``canonical=True`` is the
+    caller's promise that a < b with distinct rows (skips the normalize
+    exchange). Component sizes ride one label-keyed window over the
+    final node-sized relation.
     """
     from .dedup import connected_components_ls
 
     labels = connected_components_ls(
-        # the staged co-occurrence edges are canonical by construction
-        # (a < b, distinct) — skip the normalize pass + its exchange
-        part_cooccurrence_edges(spark, sf_dir), src="a", dst="b", canonical=True
+        edges, src="a", dst="b", canonical=canonical
     )
     w = Window.partitionBy("component")
     return labels.select(
         F.col("doc_id").alias("node"),
         F.col("cluster_id").alias("component"),
     ).withColumn("component_size", F.count("*").over(w))
+
+
+def q_graph_wcc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Registry binding: weakly-connected components of the part
+    co-occurrence graph (one giant component on the TPC-H-ish corpus —
+    the multi-component arms are pinned by the hand-built fixture in
+    tests/test_graph.py). Both engines compute component = min node id:
+    Spark with the log-rounds loop, the oracle with a
+    WCC_ORACLE_ROUNDS-unrolled min-label propagation; tests/test_graph.py
+    checks the unroll covers every graded graph's depth.
+    """
+    # the staged co-occurrence edges are canonical by construction
+    # (a < b, distinct) — skip the normalize pass + its exchange
+    return connected_components(
+        part_cooccurrence_edges(spark, sf_dir), canonical=True
+    )
 
 
 def _wcc_sql() -> str:

@@ -492,10 +492,8 @@ def q_multimodal_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup media CLUSTERS: connected components over the perceptual-
     hash pair graph. Hamming-ball pair graphs CHAIN (a→b→c each within
     the threshold), so the component diameter is unbounded — this uses
-    the log-rounds large-star/small-star variant: round count stays
-    O(log n) however deep the chains get (and it measured faster than
-    propagate on this graph at sf0.1: 2.6 s vs 3.0 s same-session).
-    Downstream: keep one representative per cluster, exactly like
+    the log-rounds large-star/small-star loop: round count stays
+    O(log n) however deep the chains get. Downstream: keep one representative per cluster, exactly like
     ``llm_dedup_keep_best`` does for text."""
     from .dedup import connected_components_ls
 

@@ -193,7 +193,8 @@ _QUERY_MODULES = (
 #          stream_dedup_minhash / stream_quality_classifier /
 #          text_classifier_calibration / corpus_quality_report;
 #          r11 CHANGED: graph_wcc (production path swapped to
-#          large-star/small-star, min-label kept as cross-check) and
+#          large-star/small-star; the min-label loop has since been
+#          deleted, the union-find test is the cross-check) and
 #          dedup_minhash_lsh (band derivation refactored into the shared
 #          minhash_band_rows helper the stream gate reuses).
 #   11-43: ALL 33 remaining round-5-vintage rows — the r5 vintage CLEARS
@@ -215,8 +216,8 @@ _QUERY_MODULES = (
 #          ts_attribution (first/last-touch credit), agg_cuped (CUPED
 #          pre-experiment variance reduction, exact-decimal co-moments),
 #          agg_srm (sample-ratio-mismatch gate — the experimentation
-#          trio srm -> cuped -> conversion_ci), graph_wcc (min-label
-#          connected components vs the unrolled fixed-round oracle);
+#          trio srm -> cuped -> conversion_ci), graph_wcc (connected
+#          components vs the unrolled fixed-round min-label oracle);
 #          CHANGED: join_min_price_supplier (positive-quantity guard on
 #          the unit-price division — the r10 relational fuzz net found
 #          the ANSI DIVIDE_BY_ZERO on zero-quantity lines) and

@@ -119,3 +119,24 @@ def assert_matches_contract_oracle(spark_df, sql: str, sf_dir: str) -> None:
     assert not mismatches, (
         f"{len(mismatches)}/{len(g)} rows differ; first 3: {mismatches[:3]}"
     )
+
+
+def union_find_labels(pairs) -> dict:
+    """Ground truth for every connected-components test: plain Python
+    union-find over an edge list, each node labeled with its component's
+    minimum node. Attaching the larger root under the smaller keeps
+    every root its component's minimum."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}

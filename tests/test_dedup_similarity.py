@@ -19,6 +19,7 @@ from kafka_connect_minio_pipeline_spark.operators.multimodal import (
     decode_image,
     extract_features,
 )
+from oracle_utils import union_find_labels
 
 
 def _pairs(df, cols=("d1", "d2")):
@@ -281,17 +282,17 @@ def test_connected_components_transitive_chain(spark):
     even though (a,c) is not a direct pair — the property pair output
     alone cannot give. Two separate components must stay separate."""
     from kafka_connect_minio_pipeline_spark.operators.dedup import (
-        connected_components,
+        connected_components_ls,
     )
 
-    edges = spark.createDataFrame(
-        [(5, 3), (3, 9), (20, 21)], "d1 long, d2 long"
-    )
+    pairs = [(5, 3), (3, 9), (20, 21)]
+    edges = spark.createDataFrame(pairs, "d1 long, d2 long")
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in connected_components(edges).collect()
+        for r in connected_components_ls(edges).collect()
     }
     assert got == {3: 3, 5: 3, 9: 3, 20: 20, 21: 20}
+    assert got == union_find_labels(pairs)
 
 
 def test_class_centroids_match_numpy(spark, sf_dir):
@@ -320,14 +321,13 @@ def test_class_centroids_match_numpy(spark, sf_dir):
         assert r["n"] == len(by_label[r["label"]])
 
 
-def test_connected_components_ls_matches_propagate_and_union_find(spark):
-    """large-star/small-star must produce EXACTLY the labels of min-label
-    propagation and of a Python union-find reference on a seeded random
-    graph (cliques + chains + isolated pairs)."""
+def test_connected_components_ls_matches_union_find(spark):
+    """large-star/small-star must produce EXACTLY the labels of the
+    Python union-find reference on a seeded random graph (cliques +
+    chains + isolated pairs)."""
     import random
 
     from kafka_connect_minio_pipeline_spark.operators.dedup import (
-        connected_components,
         connected_components_ls,
     )
 
@@ -339,37 +339,10 @@ def test_connected_components_ls_matches_propagate_and_union_find(spark):
         if a != b:
             edges.append((a, b))
     df = spark.createDataFrame(edges, "d1 long, d2 long")
-
-    parent = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {}
-    for a, b in edges:
-        want[a] = min(want.get(a, a), find(a))
-        want[b] = min(want.get(b, b), find(b))
-    # union-find roots are not necessarily component minima; normalize
-    comp: dict[int, int] = {}
-    for n in want:
-        comp[find(n)] = min(comp.get(find(n), n), n)
-    want = {n: comp[find(n)] for n in want}
-
-    got_ls = {
+    got = {
         r["doc_id"]: r["cluster_id"] for r in connected_components_ls(df).collect()
     }
-    got_prop = {
-        r["doc_id"]: r["cluster_id"] for r in connected_components(df).collect()
-    }
-    assert got_ls == want
-    assert got_prop == want
+    assert got == union_find_labels(edges)
 
 
 def test_connected_components_ls_deep_chain_log_rounds(spark):
@@ -398,30 +371,13 @@ def test_connected_components_ls_canonical_contract(spark):
     is ALREADY a star forest must converge without computing any round
     (labels == the star's parents) even at max_iter=1, where any
     round-diff formulation would need at least one full round to observe
-    no change."""
+    no change. A 120-node chain takes many rounds, so convergence can
+    land between two probes."""
     import random
 
     from kafka_connect_minio_pipeline_spark.operators.dedup import (
         connected_components_ls,
     )
-
-    def union_find_labels(pairs):
-        """Independent ground truth: plain Python union-find, each node
-        labeled with its component minimum."""
-        parent = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in pairs:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        return {n: find(n) for n in parent}
 
     def run(df, **kw):
         rows = connected_components_ls(df, **kw).collect()
@@ -443,57 +399,26 @@ def test_connected_components_ls_canonical_contract(spark):
     assert run(df) == truth
     assert run(df, canonical=True) == truth
 
+    chain = [(i, i + 1) for i in range(1, 120)]
+    df = spark.createDataFrame(chain, "d1 long, d2 long")
+    assert run(df, canonical=True) == union_find_labels(chain)
+
     # star forest: 1 -> {2,3,4}, 10 -> {11,12}; already the fixpoint.
-    stars = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4), (10, 11), (10, 12)], "d1 long, d2 long"
-    )
-    got = run(stars, canonical=True, max_iter=1)
+    stars = [(1, 2), (1, 3), (1, 4), (10, 11), (10, 12)]
+    df = spark.createDataFrame(stars, "d1 long, d2 long")
+    got = run(df, canonical=True, max_iter=1)
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10}
+    assert got == union_find_labels(stars)
 
     # multi-parent child (ADVICE r14 HIGH): {(1,3),(2,3)} has no
     # parent-as-child, so a star-forest-only probe "converges" before any
     # round and splits the component {1,2,3}. The fixed probe must also
     # require every child to have a unique parent.
-    vee = spark.createDataFrame([(1, 3), (2, 3)], "d1 long, d2 long")
-    assert run(vee, canonical=True) == {1: 1, 2: 1, 3: 1}
-    assert run(vee) == {1: 1, 2: 1, 3: 1}
-
-
-def test_connected_components_ls_probe_batching(spark):
-    """r15 session 2: ``rounds_per_probe`` batches K large/small-star
-    rounds between convergence probes. Labels must be IDENTICAL for any
-    K (a converged functional star forest passes a round unchanged, so
-    batching only ever adds no-op rounds), the one-row-per-node
-    invariant must hold, and a pre-converged star forest must still
-    converge before any round at every K. Covers a deep chain (many
-    rounds — convergence can land mid-block) and the multi-parent vee."""
-    from kafka_connect_minio_pipeline_spark.operators.dedup import (
-        connected_components_ls,
-    )
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 120)], "d1 long, d2 long"
-    )
-    vee = spark.createDataFrame([(1, 3), (2, 3)], "d1 long, d2 long")
-    stars = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4), (10, 11), (10, 12)], "d1 long, d2 long"
-    )
-
-    def labels(df, **kw):
-        rows = connected_components_ls(df, **kw).collect()
-        ids = [r["doc_id"] for r in rows]
-        assert len(ids) == len(set(ids)), "duplicate doc_id rows"
-        return {r["doc_id"]: r["cluster_id"] for r in rows}
-
-    chain_want = {i: 1 for i in range(1, 121)}
-    vee_want = {1: 1, 2: 1, 3: 1}
-    for k in (1, 2, 3):
-        assert labels(chain, canonical=True, rounds_per_probe=k) == chain_want
-        assert labels(vee, canonical=True, rounds_per_probe=k) == vee_want
-        # zero-round convergence is independent of the batch size
-        assert labels(stars, canonical=True, max_iter=1, rounds_per_probe=k) == {
-            1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10,
-        }
+    vee = [(1, 3), (2, 3)]
+    df = spark.createDataFrame(vee, "d1 long, d2 long")
+    assert union_find_labels(vee) == {1: 1, 2: 1, 3: 1}
+    assert run(df, canonical=True) == union_find_labels(vee)
+    assert run(df) == union_find_labels(vee)
 
 
 def test_containment_finds_quote_missed_by_jaccard(spark, tmp_path):

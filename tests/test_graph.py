@@ -4,10 +4,13 @@ hand-computed correctness on a tiny known graph."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
 from kafka_connect_minio_pipeline_spark.operators.graph import pagerank, q_graph_pagerank
+from oracle_utils import union_find_labels
 
 
 def test_pagerank_mass_and_degree(spark, sf_dir):
@@ -378,95 +381,85 @@ def test_wcc_matches_union_find(spark, sf_dir):
         (r["a"], r["b"])
         for r in part_cooccurrence_edges(spark, sf_dir).collect()
     ]
-    parent: dict[int, int] = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        parent[find(a)] = find(b)
-    comp: dict[int, list] = {}
-    for n in parent:
-        comp.setdefault(find(n), []).append(n)
-    expect = {}
-    for members in comp.values():
-        root, size = min(members), len(members)
-        for n in members:
-            expect[n] = (root, size)
     got = {
         r["node"]: (r["component"], r["component_size"])
         for r in q_graph_wcc(spark, sf_dir).collect()
     }
-    assert got == expect and got
+    assert got == _union_find_components(pairs) and got
+
+
+def _union_find_components(pairs) -> dict:
+    """node -> (component minimum, component size), from the union-find
+    reference."""
+    labels = union_find_labels(pairs)
+    sizes = Counter(labels.values())
+    return {n: (c, sizes[c]) for n, c in labels.items()}
 
 
 def test_wcc_path_graph_ls_vs_min_label(spark):
-    """The r11 production-path swap (VERDICT r10 item 7): on a DEEP path
-    graph — the adversarial case for per-hop propagation — the
-    large-star/small-star path q_graph_wcc now runs must (a) converge
-    well under the round budget min-label propagation would exhaust and
-    (b) produce the identical partition. A 64-node path has diameter 63:
-    min-label needs 63 rounds (here run with a raised cap as the
-    cross-check), large-star/small-star needs O(log n).
+    """On a DEEP path graph — the adversarial case for per-hop min-label
+    propagation — the large-star/small-star path q_graph_wcc runs must
+    converge well under the round budget min-label would exhaust and
+    produce the exact partition. A 64-node path has diameter 63:
+    min-label needs 63 rounds, large-star/small-star O(log n) and must
+    finish inside its default 25-round cap.
     """
-    from kafka_connect_minio_pipeline_spark.operators.dedup import (
-        connected_components_ls,
-    )
     from kafka_connect_minio_pipeline_spark.operators.graph import (
         connected_components,
     )
 
     n = 64
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)] + [(100, 101)], "a long, b long"
-    )
-    # the log-rounds path: must finish inside its default 25-round cap
-    ls = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components_ls(edges, src="a", dst="b").collect()
+    pairs = [(i, i + 1) for i in range(n - 1)] + [(100, 101)]
+    edges = spark.createDataFrame(pairs, "a long, b long")
+    got = {
+        r["node"]: (r["component"], r["component_size"])
+        for r in connected_components(edges, canonical=True).collect()
     }
-    # the diameter-bound cross-check, cap raised to cover the path
-    ml = {
-        r["node"]: r["component"]
-        for r in connected_components(edges, max_rounds=n + 2).collect()
-    }
-    expect = {i: 0 for i in range(n)} | {100: 100, 101: 100}
-    assert ls == expect
-    assert ml == expect
+    expect = {i: (0, n) for i in range(n)} | {100: (100, 2), 101: (100, 2)}
+    assert got == expect == _union_find_components(pairs)
 
 
 @pytest.mark.parametrize(
     "graded_sf", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 )
 def test_wcc_oracle_round_budget_at_graded_sf(spark, graded_sf):
-    """ADVICE r11: the old min-label production path raised loudly if
-    convergence needed more rounds than the WCC_ORACLE_ROUNDS-unrolled
-    DuckDB oracle; the large-star/small-star path converges regardless
-    of depth, so an under-unrolled oracle on a deeper graph would now
-    surface only as an unexplained parity mismatch. Keep the cheap
-    guard: at each graded sf, min-label propagation with
-    oracle_rounds=WCC_ORACLE_ROUNDS must converge inside the oracle's
-    unroll (it raises RuntimeError otherwise) and must agree with the
-    production labels."""
+    """The DuckDB oracle for graph_wcc unrolls WCC_ORACLE_ROUNDS
+    min-label rounds, while the Spark path converges regardless of
+    depth, so an under-unrolled oracle on a deeper graph would surface
+    only as an unexplained parity mismatch. Guard it in Python: at each
+    graded sf, min-label propagation needs (largest hop distance from
+    a node to its component's minimum) + 1 confirming round, which must
+    fit the unroll. The production labels must equal union-find."""
     from kafka_connect_minio_pipeline_spark.operators.graph import (
         WCC_ORACLE_ROUNDS,
-        connected_components,
         part_cooccurrence_edges,
         q_graph_wcc,
     )
 
-    edges = part_cooccurrence_edges(spark, graded_sf)
-    ml = {
-        r["node"]: (r["component"], r["component_size"])
-        for r in connected_components(
-            edges, oracle_rounds=WCC_ORACLE_ROUNDS
-        ).collect()
-    }
+    pairs = [
+        (r["a"], r["b"])
+        for r in part_cooccurrence_edges(spark, graded_sf).collect()
+    ]
+    adj: dict[int, list] = {}
+    for a, b in pairs:
+        adj.setdefault(a, []).append(b)
+        adj.setdefault(b, []).append(a)
+    max_dist = 0
+    for root in set(union_find_labels(pairs).values()):
+        dist = {root: 0}
+        frontier = [root]
+        while frontier:
+            nxt = []
+            for u in frontier:
+                for v in adj[u]:
+                    if v not in dist:
+                        dist[v] = dist[u] + 1
+                        nxt.append(v)
+            frontier = nxt
+        max_dist = max(max_dist, *dist.values())
+    assert max_dist + 1 <= WCC_ORACLE_ROUNDS, max_dist
     prod = {
         r["node"]: (r["component"], r["component_size"])
         for r in q_graph_wcc(spark, graded_sf).collect()
     }
-    assert ml == prod and ml
+    assert prod == _union_find_components(pairs) and prod
