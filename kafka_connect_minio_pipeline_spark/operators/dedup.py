@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from ..functions.barrier import filter_above
 from ..functions.vectors import cosine_from_parts, dot, to_double
 from ..registry import Query
-from ..scratch import scratch_dir
+from ..staging import session_cached, stage
 from ..streaming.runner import source_bytes
 from ..tables import load, spread
 
@@ -166,17 +166,12 @@ def _staged_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     job-scoped staging table. A fresh temp dir per invocation keeps
     bench timings honest (no state reuse across the driver's double
     runs)."""
-    d = scratch_dir("kcm_shingle_sets_")
-    # zstd staging (guide §6): measured write+readback of this relation
-    # at sf0.1 — snappy 0.73 s / uncompressed 0.61 / zstd 0.52 / lz4 0.51,
-    # with zstd also the smallest file (1.5 MB vs 2.2 snappy). Every
-    # near-dup query pays this write per invocation, so the codec is on
-    # the timed path; zstd is also the right default on real object
-    # storage (smaller at similar read speed).
-    _doc_shingle_sets(spark, sf_dir).coalesce(
-        _stage_files(sf_dir, "documents")
-    ).write.mode("overwrite").option("compression", "zstd").parquet(d)
-    return spark.read.parquet(d)
+    return stage(
+        _doc_shingle_sets(spark, sf_dir).coalesce(
+            _stage_files(sf_dir, "documents")
+        ),
+        "kcm_shingle_sets_",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -741,8 +736,8 @@ def connected_components_ls(
 # used to recompute the whole candidate/verify pipeline per call. The
 # pair set is deterministic pure dataflow (portable hashes, exact
 # verify), so a cached relation is bit-identical to a recomputed one —
-# the `_trained` pattern the ANN models and the quality classifier
-# already run (the DuckDB oracles recompute per statement and still
+# the `staging.session_cached` pattern the ANN models and the quality
+# classifier already run (the DuckDB oracles recompute per statement and still
 # hash-match, which PROVES exactness-neutrality every run). The
 # producing queries themselves (dedup_minhash_lsh, dedup_ngram_jaccard)
 # stay uncached: bench times the operator, consumers reuse its output —
@@ -753,28 +748,26 @@ def connected_components_ls(
 def verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached verified MinHash-LSH pair relation (d1, d2,
     jaccard) — see the block comment above for why reuse is exact."""
-    from .similarity import _trained
-
-    return _trained(
+    return session_cached(
         spark,
-        (sf_dir, "lsh_verified_pairs", N_PERM, N_BANDS, JACCARD_THRESHOLD),
+        sf_dir,
+        ("documents",),
+        ("lsh_verified_pairs", N_PERM, N_BANDS, JACCARD_THRESHOLD),
         lambda: q_dedup_minhash_lsh(spark, sf_dir).localCheckpoint(eager=True),
-        table="documents.parquet",
     )
 
 
 def verified_pairs_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached exact n-gram Jaccard pair relation (d1, d2,
     jaccard) — the prefix-filtered inverted-index operator's output."""
-    from .similarity import _trained
-
-    return _trained(
+    return session_cached(
         spark,
-        (sf_dir, "ngram_verified_pairs", JACCARD_THRESHOLD),
+        sf_dir,
+        ("documents",),
+        ("ngram_verified_pairs", JACCARD_THRESHOLD),
         lambda: q_dedup_ngram_jaccard(spark, sf_dir).localCheckpoint(
             eager=True
         ),
-        table="documents.parquet",
     )
 
 
@@ -784,18 +777,17 @@ def cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair graph. Cached one level ABOVE the pair relation because the CC
     loop itself is ~10 sequential tiny jobs a consumer like
     llm_dedup_keep_best would otherwise replay per call."""
-    from .similarity import _trained
-
-    return _trained(
+    return session_cached(
         spark,
-        (sf_dir, "ngram_cluster_labels", JACCARD_THRESHOLD),
+        sf_dir,
+        ("documents",),
+        ("ngram_cluster_labels", JACCARD_THRESHOLD),
         # the verified pair relation is canonical by construction
         # (d1 < d2 from the candidate join, one row per pair)
         lambda: connected_components_ls(
             verified_pairs_ngram(spark, sf_dir).select("d1", "d2"),
             canonical=True,
         ).localCheckpoint(eager=True),
-        table="documents.parquet",
     )
 
 
@@ -808,13 +800,12 @@ def exact_dup_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure dataflow (md5 of the sorted token set), so the cached relation
     is bit-identical to a recomputed one — the DuckDB oracles recompute
     per statement, proving exactness-neutrality on every grade."""
-    from .similarity import _trained
-
-    return _trained(
+    return session_cached(
         spark,
-        (sf_dir, "exact_dup_table"),
+        sf_dir,
+        ("documents",),
+        ("exact_dup_table",),
         lambda: q_dedup_exact(spark, sf_dir).localCheckpoint(eager=True),
-        table="documents.parquet",
     )
 
 
@@ -824,13 +815,12 @@ def simhash_near_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands, Hamming ≤ 1 verify). Same cache rationale as
     :func:`exact_dup_table`; keyed on the signature hyperparameters so a
     monkeypatched band-width study never reuses stale signatures."""
-    from .similarity import _trained
-
-    return _trained(
+    return session_cached(
         spark,
-        (sf_dir, "simhash_near_table", SIMHASH_BITS, HAMMING_MAX),
+        sf_dir,
+        ("documents",),
+        ("simhash_near_table", SIMHASH_BITS, HAMMING_MAX),
         lambda: q_dedup_simhash(spark, sf_dir).localCheckpoint(eager=True),
-        table="documents.parquet",
     )
 
 

@@ -16,59 +16,24 @@ recursive SQL oracle exactly.
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.barrier import filter_above
 from ..functions.exact import dec9
 from ..registry import Query
-from ..scratch import scratch_dir
+from ..staging import session_cached, stage
 from ..tables import load
 
 DAMPING = 0.85
 N_ITER = 5
 
-# Session-scoped staging cache for the graph family's shared edge
-# relations, keyed by (Spark application, resolved input dir, builder
-# tag). Seven registry queries consume the SAME co-occurrence edge
-# relation (triangles / jaccard / adamic-adar / clustering / degree
-# stats / LPA / k-core); before round 5 each invocation re-ran the
-# lineitem self-join and wrote a fresh scratch copy, so a session
-# sweeping the family paid the identical |E| derivation seven times
-# (VERDICT r4). The inputs are immutable per sf_dir, so the staged
-# parquet is reusable for the life of the application; on a cluster
-# this is a job-scoped staging table on executor-local or shared
-# scratch storage. Bench honesty: no graph query is in the headline
-# set, and the first derivation in any fresh driver process still pays
-# full cost, so recorded timings stay comparable.
-_STAGE_CACHE: dict[tuple[str, str, str], str] = {}
-
-
-def _staged(
-    spark: SparkSession,
-    sf_dir: str,
-    tag: str,
-    build: Callable[[], DataFrame],
-) -> DataFrame:
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir), tag)
-    d = _STAGE_CACHE.get(key)
-    if d is None or not os.path.isdir(d):
-        d = scratch_dir(f"kcm_{tag}_")
-        # zstd for the session-staged edge relation too (guide §6; same
-        # measured codec A/B as _staged_shingle_sets — readers of this
-        # relation re-scan it every timed pass)
-        build().write.mode("overwrite").option("compression", "zstd").parquet(d)
-        _STAGE_CACHE[key] = d
-    return spark.read.parquet(d)
-
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric customer↔supplier edges from lineitem facts, staged to
-    temp parquet ONCE per session (see ``_STAGE_CACHE``) — the loop
-    consumes the edge relation every iteration, and a narrow
+    temp parquet ONCE per session (:func:`staging.session_cached` over
+    :func:`staging.stage`, rebuilt if lineitem or orders change) — the
+    loop consumes the edge relation every iteration, and a narrow
     re-derivation would re-join lineitem⋈orders ``N_ITER`` times (the
     same measured trade as ``_staged_shingle_sets``: staging beats both
     recompute and a persist() cache boundary). Node ids are prefixed
@@ -91,7 +56,13 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             pairs.select(F.col("supp").alias("src"), F.col("cust").alias("dst"))
         )
 
-    return _staged(spark, sf_dir, "graph_edges", build)
+    return session_cached(
+        spark,
+        sf_dir,
+        ("lineitem", "orders"),
+        ("graph_edges",),
+        lambda: stage(build(), "kcm_graph_edges_"),
+    )
 
 
 def pagerank(
@@ -391,15 +362,15 @@ def part_cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-order fanout is bounded by order size (TPC-H ≤ 7 lines), so the
     edge relation is O(|lineitem|), not quadratic in parts.
 
-    Staged to temp parquet like :func:`_edges`, and since round 5 cached
-    for the SESSION (``_STAGE_CACHE``): every consumer (triangles
+    Staged to temp parquet like :func:`_edges` and cached for the
+    SESSION (:func:`staging.session_cached`): every consumer (triangles
     references edges 3×, neighbor-Jaccard 4×) would otherwise re-run the
     lineitem self-join per reference — measured 31 exchanges in the
     un-staged Jaccard plan vs 7 staged, with no runtime ReusedExchange
     unification across the differently-shaped join subtrees — and the
     seven graph-family queries would each re-derive the identical
-    relation. The staged write is one derivation per (app, sf_dir);
-    readers get file stats + pruning."""
+    relation. The staged write is one derivation per session and
+    lineitem version; readers get file stats + pruning."""
 
     def build() -> DataFrame:
         li = (
@@ -418,7 +389,13 @@ def part_cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    return _staged(spark, sf_dir, "cooc_edges", build)
+    return session_cached(
+        spark,
+        sf_dir,
+        ("lineitem",),
+        ("cooc_edges",),
+        lambda: stage(build(), "kcm_cooc_edges_"),
+    )
 
 
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import SQL_SUM_REVENUE, dec2, revenue
 from ..registry import Query
+from ..scratch import scratch_dir_keyed
 from ..tables import load
 
 
@@ -462,16 +463,17 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkey-keyed join. The oracle is the plain (shuffled) join — the
     bucketed layout must change the plan, never the result.
     """
-    import tempfile
-
     def write_bucketed(df: DataFrame, key: str, table: str) -> None:
-        # external table at a fresh temp location: re-invocations (the
-        # driver runs every query twice) replace the catalog entry without
-        # ever colliding with a stale managed-table directory left by a
-        # previous session's metastore.
+        # external table at a per-session scratch location: a re-run in
+        # the same session drops the catalog entry and overwrites the same
+        # directory, never colliding with a stale managed-table directory
+        # left by a previous session's metastore.
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         df.write.mode("overwrite").option(
-            "path", tempfile.mkdtemp(prefix=f"{table}_")
+            "path",
+            scratch_dir_keyed(
+                f"{table}_", spark.sparkContext.applicationId, table
+            ),
         ).bucketBy(N_BUCKETS, key).sortBy(key).saveAsTable(table)
 
     write_bucketed(

@@ -453,9 +453,14 @@ def phash_near_dup_pairs(
     return pairs.orderBy("a_id", "b_id") if ordered else pairs
 
 
-def q_multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry binding: perceptual-hash near-dup pairs over payloads."""
-    return phash_near_dup_pairs(compute_phash(binary_table(spark, sf_dir)))
+def q_multimodal_phash_pairs(
+    spark: SparkSession, sf_dir: str, ordered: bool = True
+) -> DataFrame:
+    """Registry binding: perceptual-hash near-dup pairs over payloads
+    (``ordered=False`` drops the closing sort, for set consumers)."""
+    return phash_near_dup_pairs(
+        compute_phash(binary_table(spark, sf_dir)), ordered=ordered
+    )
 
 
 SQL_MULTIMODAL_PHASH = f"""
@@ -501,9 +506,9 @@ def q_multimodal_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orderBy is output determinism only — checkpointing it here paid a
     # range exchange + global sort of every pair per invocation that the
     # component labels never depend on (guide §2.4)
-    pairs = phash_near_dup_pairs(
-        compute_phash(binary_table(spark, sf_dir)), ordered=False
-    ).select("a_id", "b_id")
+    pairs = q_multimodal_phash_pairs(spark, sf_dir, ordered=False).select(
+        "a_id", "b_id"
+    )
     # the pair relation is canonical by construction (a_id < b_id in the
     # band join, one DISTINCT row per pair) — skip the normalize pass
     return connected_components_ls(pairs, src="a_id", dst="b_id", canonical=True)

@@ -18,9 +18,6 @@ All cosine math is the shared double-fold from functions/vectors.py
 
 from __future__ import annotations
 
-import os
-import threading
-
 import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -28,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_from_parts, dot, to_double
 from ..registry import Query
+from ..staging import session_cached
 from ..tables import load, spread
 
 TOP_K = 5
@@ -399,127 +397,6 @@ SQL_SIMILARITY_KNN_LABEL = f"""
 
 
 # ---------------------------------------------------------------------------
-# trained-model cache (the FAISS train / add / search separation)
-# ---------------------------------------------------------------------------
-
-# (applicationId, id(session), sf_dir, data fingerprint, kind,
-#  hyperparams, shuffle conf)
-#   -> (session strong-ref, localCheckpointed bounded model relation)
-_MODEL_CACHE: dict[tuple, tuple] = {}
-_MODEL_CACHE_MAX = 64  # many (session, sf, param) combos only under pytest
-_MODEL_LOCK = threading.RLock()  # concurrent first-callers must not double-train
-
-
-def _data_fingerprint(sf_dir: str, table: str = "embeddings.parquet") -> tuple:
-    """(size, mtime_ns) fingerprint of ``table`` under ``sf_dir`` —
-    folded into the cache key so a regenerated file at the SAME path
-    within one session retrains instead of silently serving stale
-    centroids/codebooks/weights (the DuckDB oracle retrains per
-    statement, so a stale cache would be the one way Spark could
-    diverge). Handles both a single parquet file and a directory of
-    part files; a missing path fingerprints as empty and lets the load
-    itself raise."""
-    p = os.path.join(sf_dir, table)
-    try:
-        st = os.stat(p)
-        if os.path.isdir(p):
-            parts = sorted(os.listdir(p))
-            sts = [os.stat(os.path.join(p, f)) for f in parts]
-            return (
-                tuple(parts),
-                sum(s.st_size for s in sts),
-                max((s.st_mtime_ns for s in sts), default=0),
-            )
-        return (st.st_size, st.st_mtime_ns)
-    except OSError:
-        return ()
-
-
-def _shuffle_partitions_conf(spark: SparkSession) -> str:
-    """Current shuffle-partition setting as a cache-key field, total on
-    sessions that never set the key explicitly."""
-    try:
-        return str(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return ""
-
-
-def _session_live(session) -> bool:
-    try:
-        return not session.sparkContext._jsc.sc().isStopped()
-    except Exception:
-        return False
-
-
-def _trained(
-    spark: SparkSession,
-    key: tuple,
-    build,
-    table: str = "embeddings.parquet",
-):
-    """Train-once cache for the bounded ANN model relations (IVF coarse
-    centroids, PQ codebooks).
-
-    FAISS separates train() from add()/search(): the quantizer/codebook
-    is a deployment artifact trained once and reused by every index
-    build and every query, not retrained per search. r7 trained these
-    bounded (≤2048-row-sample) models per query call, which put a ~2 s
-    Lloyd-round scheduling constant in front of EVERY IVF/PQ query
-    (BASELINE.md round 7 — the r7 bench regression). The models are
-    deterministic pure dataflow (decimal-exact, order-free), so a cached
-    relation is bit-identical to a retrained one — the DuckDB oracles,
-    which retrain per statement, still hash-match, and the cached plan
-    is the same LogicalRDD scan a fresh ``localCheckpoint`` yields, so
-    plan pins are unaffected.
-
-    Key fields keep the cache honest: applicationId + id(session) scope
-    it to one live SparkContext/session (the strong session ref in the
-    value pins ``id`` against reuse); the embeddings.parquet fingerprint
-    (:func:`_data_fingerprint`), so a regenerated file at the same path
-    retrains; the training hyperparameters (so a monkeypatched PQ_K=1
-    study never sees K=16 codebooks); and the shuffle-partition conf, so
-    the parallelism-invariance net still trains fresh under each
-    partitioning it checks rather than silently reusing one run's model.
-    At 100 TB the same artifact is a written table keyed the same way;
-    the in-session dict is the local stand-in.
-
-    The whole lookup-or-train runs under one re-entrant lock: concurrent
-    first-callers would otherwise race past the miss and double-train
-    (harmless for correctness — the trainers are deterministic — but a
-    wasted multi-second job). Overflow evicts dead-context entries first
-    (their checkpoint blocks are unreachable anyway) and falls back to a
-    full clear only if 64 entries belong to LIVE sessions — which no
-    real workload reaches.
-    """
-    # key[0] is the sf_dir by convention of every caller
-    full_key = (
-        spark.sparkContext.applicationId,
-        id(spark),
-        # no-default get: Spark 4 TYPE-VALIDATES a provided default, so
-        # conf.get(key, "") raises INVALID_CONF_VALUE in a session that
-        # never set the key (r11 finding — every earlier caller ran
-        # after load() had set it)
-        _shuffle_partitions_conf(spark),
-        _data_fingerprint(key[0], table),
-    ) + key
-    with _MODEL_LOCK:
-        hit = _MODEL_CACHE.get(full_key)
-        if hit is None:
-            if len(_MODEL_CACHE) >= _MODEL_CACHE_MAX:
-                dead = [
-                    k for k, (s, _) in _MODEL_CACHE.items()
-                    if not _session_live(s)
-                ]
-                for k in dead:
-                    del _MODEL_CACHE[k]
-                if len(_MODEL_CACHE) >= _MODEL_CACHE_MAX:
-                    _MODEL_CACHE.clear()
-            hit = (spark, build())
-            _MODEL_CACHE[full_key] = hit
-        return hit[1]
-
-
-# ---------------------------------------------------------------------------
 # IVF ANN (the other scale path: coarse quantizer + cell-probe search)
 # ---------------------------------------------------------------------------
 
@@ -632,10 +509,13 @@ def ivf_quantizer(e: DataFrame) -> DataFrame:
 
 def ivf_centroids(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
     """The trained coarse quantizer for (session, sf) — train-once via
-    :func:`_trained` (see its docstring for why reuse is exact)."""
-    return _trained(
+    :func:`staging.session_cached` (see its docstring for why reuse is
+    exact)."""
+    return session_cached(
         spark,
-        (sf_dir, "ivf_centroids", IVF_CELLS, IVF_ITERS, IVF_TRAIN_SAMPLE),
+        sf_dir,
+        ("embeddings",),
+        ("ivf_centroids", IVF_CELLS, IVF_ITERS, IVF_TRAIN_SAMPLE),
         lambda: ivf_quantizer(e),
     )
 
@@ -685,8 +565,9 @@ def q_similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fetch the 16-cell coarse quantizer (:func:`ivf_centroids` — bounded
     training relation, decimal-exact dataflow Lloyd, trained ONCE per
     (session, sf) and shared with the IVF-PQ composition — the FAISS
-    train/add/search separation; see :func:`_trained`), assign every vector
-    to its nearest cell (the inverted file), then score each query only
+    train/add/search separation; see :func:`staging.session_cached`),
+    assign every vector to its nearest cell (the inverted file), then
+    score each query only
     against its IVF_PROBE closest cells' vectors — at scale the inverted
     file is partitioned BY cell, so a probe reads only its cells'
     partitions instead of the corpus. Exact cosine rerank on the

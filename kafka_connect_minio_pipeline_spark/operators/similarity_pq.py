@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_from_parts, dot, to_double
 from ..registry import Query
+from ..staging import session_cached
 from ..tables import load
 from .similarity import (
     IVF_CELLS,
@@ -26,7 +27,6 @@ from .similarity import (
     _ivf_relation,
     _ivf_train_ctes,
     _probe_cells,
-    _trained,
     _with_cc,
     _with_norms,
     ivf_assign,
@@ -132,10 +132,13 @@ def pq_codebooks(e: DataFrame) -> DataFrame:
 
 def pq_books(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
     """The trained PQ codebooks for (session, sf) — train-once via
-    :func:`_trained` (see its docstring for why reuse is exact)."""
-    return _trained(
+    :func:`staging.session_cached` (see its docstring for why reuse is
+    exact)."""
+    return session_cached(
         spark,
-        (sf_dir, "pq_codebooks", PQ_M, PQ_K, PQ_ITERS, PQ_TRAIN_SAMPLE),
+        sf_dir,
+        ("embeddings",),
+        ("pq_codebooks", PQ_M, PQ_K, PQ_ITERS, PQ_TRAIN_SAMPLE),
         lambda: pq_codebooks(e),
     )
 
@@ -669,10 +672,11 @@ def pq_residual_books(
     bounded training sample instead of raw vectors. Cache key carries
     both PQ and IVF hyperparameters (the codebooks depend on the coarse
     quantizer)."""
-    return _trained(
+    return session_cached(
         spark,
+        sf_dir,
+        ("embeddings",),
         (
-            sf_dir,
             "pq_residual_codebooks",
             PQ_M,
             PQ_K,

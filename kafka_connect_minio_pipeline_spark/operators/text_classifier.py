@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import dec12 as _dec12
 from ..registry import Query
+from ..staging import session_cached
 from ..tables import load, load_meta, spread
 from .dedup import SQL_TOKENS, tokens
 from .text import _STOP_SQL, quality_features
@@ -97,8 +98,8 @@ def classifier_model(
     gradient steps, and the (j, mu, sd) standardization stats (part of
     the deployment artifact: a served model is weights ⊕ stats).
 
-    Trained ONCE per (session, sf, hyperparams) via the
-    ``similarity._trained`` cache — the FAISS train/add/search
+    Trained ONCE per (session, sf, hyperparams) via
+    :func:`staging.session_cached` — the FAISS train/add/search
     separation the IVF/PQ family already applies: the training
     dataflow is deterministic and decimal-exact, so a cached relation
     is bit-identical to a retrained one (the DuckDB oracles, which
@@ -108,18 +109,17 @@ def classifier_model(
     floor, not data). The cache key carries the documents fingerprint
     and every hyperparameter; the bench's fresh-process runs still pay
     one full training per session (honesty note in BASELINE.md)."""
-    from .similarity import _trained
-
-    return _trained(
+    return session_cached(
         spark,
-        (sf_dir, "clf_model", CLF_DIM, CLF_STEPS, CLF_ETA, CLF_GATE,
+        sf_dir,
+        ("documents",),
+        ("clf_model", CLF_DIM, CLF_STEPS, CLF_ETA, CLF_GATE,
          CLF_HOLDOUT_MOD, bigrams),
         lambda: _classifier_model_build(
             spark,
             spread(load(spark, sf_dir, "documents"), "doc_id"),
             bigrams=bigrams,
         ),
-        table="documents.parquet",
     )
 
 

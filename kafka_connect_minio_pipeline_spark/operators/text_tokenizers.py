@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import dec9, dec12 as _dec12
 from ..registry import Query
+from ..staging import session_cached
 from ..tables import load, load_meta, spread
 from .dedup import SQL_TOKENS, tokens
 
@@ -872,20 +873,19 @@ def unigram_model(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
     """The trained unigram-LM model tuple (p, e, seeds, keep,
-    prune_stats) for (session, sf) — trained once via the
-    ``similarity._trained`` cache (deterministic dataflow ⇒ the cached
+    prune_stats) for (session, sf) — trained once via
+    :func:`staging.session_cached` (deterministic dataflow ⇒ the cached
     vocabulary-sized relations are bit-identical to a retrain; the
     oracles retrain per statement and keep proving it)."""
-    from .similarity import _trained
-
-    return _trained(
+    return session_cached(
         spark,
-        (sf_dir, "unigram_model", UNI_PIECE_MAX, UNI_WORD_MAX,
+        sf_dir,
+        ("documents",),
+        ("unigram_model", UNI_PIECE_MAX, UNI_WORD_MAX,
          UNI_EM_ROUNDS, UNI_PRUNE_TARGETS),
         lambda: _unigram_model_build(
             spark, spread(load(spark, sf_dir, "documents"), "doc_id")
         ),
-        table="documents.parquet",
     )
 
 

@@ -18,31 +18,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..scratch import scratch_dir
+from ..staging import table_parts
 from ..tables import TABLE_NAMES, _ensure_session_confs, _normalize_ts
 
 
 def _stream_dir(sf_dir: str, name: str) -> str:
     """The file-stream source wants a directory, and its per-batch reads
-    reject a bare-file basePath — so stage a symlink to the (read-only)
-    parquet file inside a throwaway directory and stream that. When the
-    table is itself a DIRECTORY of part files (any Spark-written table —
-    the fuzz fixtures, and every production table), symlink the data
-    files individually: the source does not recurse into a linked
+    reject a bare-file basePath — so symlink every data file of the
+    (read-only) table (:func:`staging.table_parts`) into a throwaway
+    directory and stream that. A directory-of-parts table (any
+    Spark-written table — the fuzz fixtures, and every production table)
+    is linked file by file: the source does not recurse into a linked
     subdirectory, so a single directory symlink would list ZERO files
     and the stream would silently converge empty (caught by the r10
     docs-fuzz closure on stream_quality/stream_multimodal)."""
+    parts = table_parts(sf_dir, name)
+    if not parts:
+        raise FileNotFoundError(f"no part files under {sf_dir}/{name}.parquet")
     d = scratch_dir(f"kcm_src_{name}_")
-    target = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(target):
-        n = 0
-        for f in sorted(os.listdir(target)):
-            if f.endswith(".parquet"):
-                os.symlink(f"{target}/{f}", f"{d}/{name}_{n}.parquet")
-                n += 1
-        if n == 0:
-            raise FileNotFoundError(f"no part files under {target}")
-    else:
-        os.symlink(target, f"{d}/{name}.parquet")
+    for n, f in enumerate(parts):
+        os.symlink(f, f"{d}/{name}_{n}.parquet")
     return d
 
 

@@ -61,8 +61,8 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT on the data-derived state-partition rule: applyInPandasWithState
     # ships every row to Python, so partitions here are Python COMPUTE
     # parallelism, not just state-store count — the scaled count measured
-    # slower on mins twice (plans/r15/ab_stream.py 2.13 vs 1.83,
-    # ab_focused.py 1.98 vs 1.75); behavior stays as in r14
+    # slower on mins twice (2.13 vs 1.83 and 1.98 vs 1.75 s, see
+    # OPTIMIZATION_r15.md §Item 6); behavior stays as in r14
     updates = run_to_memory(W.stateful_user_tracker(spark, sf_dir), "update")
     return updates.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),

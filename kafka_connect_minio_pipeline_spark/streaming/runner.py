@@ -16,6 +16,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 
 from ..scratch import scratch_dir
+from ..staging import table_parts
 
 _counter = itertools.count()
 
@@ -35,7 +36,7 @@ _counter = itertools.count()
 # partitions"), floored for minimum parallelism. Keys per partition —
 # the thing state-store memory actually bounds — track input volume, so
 # the rule holds from sf0.001 to a 100 TB/day topic (production numbers
-# in SCALING.md §streaming). Overridable for A/Bs via env.
+# in SCALING.md §streaming).
 STATE_PARTITION_TARGET_BYTES = 32 * 1024 * 1024
 STATE_PARTITIONS_MIN = 4
 
@@ -43,25 +44,13 @@ STATE_PARTITIONS_MIN = 4
 def source_bytes(sf_dir: str, *names: str) -> int:
     """On-disk bytes of the given source tables (file or directory-of-
     parts) — the availableNow trigger's input volume."""
-    total = 0
-    for name in names:
-        p = f"{sf_dir}/{name}.parquet"
-        if os.path.isdir(p):
-            total += sum(
-                os.path.getsize(f"{p}/{f}")
-                for f in os.listdir(p)
-                if f.endswith(".parquet")
-            )
-        else:
-            total += os.path.getsize(p)
-    return total
+    return sum(
+        os.path.getsize(f) for name in names for f in table_parts(sf_dir, name)
+    )
 
 
 def state_partitions(input_bytes: int) -> int:
     """max(MIN, ceil(input_bytes / TARGET)) — documented above."""
-    override = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
-    if override:
-        return int(override)
     return max(
         STATE_PARTITIONS_MIN,
         -(-input_bytes // STATE_PARTITION_TARGET_BYTES),

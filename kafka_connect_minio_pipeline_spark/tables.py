@@ -13,9 +13,6 @@ and Catalyst handles split planning, predicate pushdown and column pruning.
 
 from __future__ import annotations
 
-import os
-import sys
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -216,31 +213,10 @@ def load_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-_warned_no_contract = False
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table with normalized types and the NOT NULL
-    contract on required fields (see ``REQUIRED_FIELDS``).
-
-    ``SPARK_GRAFT_NO_CONTRACT=1`` bypasses the contract — a DIAGNOSTIC
-    knob only (bench A/B isolating the contract's scan cost, VERDICT r5
-    item 2); correctness guarantees do not hold under it, so the bypass
-    announces itself loudly on stderr (once per process) — a leaked env
-    var must never disable ingestion guarantees invisibly (ADVICE r6)."""
-    raw = load_raw(spark, sf_dir, name)
-    if os.environ.get("SPARK_GRAFT_NO_CONTRACT") == "1":
-        global _warned_no_contract
-        if not _warned_no_contract:
-            _warned_no_contract = True
-            print(
-                "WARNING: SPARK_GRAFT_NO_CONTRACT=1 — ingestion contract"
-                " DISABLED for all tables; diagnostic mode only,"
-                " correctness guarantees void",
-                file=sys.stderr,
-            )
-        return raw
-    return _contract(raw, name)
+    contract on required fields (see ``REQUIRED_FIELDS``)."""
+    return _contract(load_raw(spark, sf_dir, name), name)
 
 
 def load_meta(spark: SparkSession, sf_dir: str, name: str, *cols: str) -> DataFrame:

@@ -1,8 +1,8 @@
 """Focused re-A/B of the arms the first (stormy) session left ambiguous:
-ivf/adc kernel vs relational, the restructured sweep vs the per-point
-loop, and stream_stateful scaled vs 32 state partitions."""
+ivf/adc kernel vs relational, and the restructured sweep vs the
+per-point loop."""
 
-import os, sys, time
+import sys, time
 
 sys.path.insert(0, "/root/repo")
 
@@ -32,7 +32,6 @@ from kafka_connect_minio_pipeline_spark.functions.vectors import (
     to_double,
 )
 from kafka_connect_minio_pipeline_spark.tables import load
-from kafka_connect_minio_pipeline_spark.streaming import queries as SQ
 
 SF_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
 PASSES = int(sys.argv[1]) if len(sys.argv) > 1 else 10
@@ -161,17 +160,6 @@ def old_sweep(spark, sf_dir):
     )
 
 
-def with_parts(n, fn):
-    if n is None:
-        os.environ.pop("SPARK_GRAFT_STATE_PARTITIONS", None)
-    else:
-        os.environ["SPARK_GRAFT_STATE_PARTITIONS"] = str(n)
-    try:
-        return fn()
-    finally:
-        os.environ.pop("SPARK_GRAFT_STATE_PARTITIONS", None)
-
-
 # exactness: new sweep == old sweep at the bench SF
 a = sorted(
     tuple(r) for r in similarity.q_similarity_ivf_probe_sweep(spark, SF_DIR).collect()
@@ -187,12 +175,6 @@ ARMS = {
     "adc_rel": lambda: run_adc(False),
     "sweep_new": lambda: mat(similarity.q_similarity_ivf_probe_sweep(spark, SF_DIR)),
     "sweep_old": lambda: mat(old_sweep(spark, SF_DIR)),
-    "stateful_scaled": lambda: with_parts(
-        None, lambda: mat(SQ.q_stream_stateful(spark, SF_DIR))
-    ),
-    "stateful_32": lambda: with_parts(
-        32, lambda: mat(SQ.q_stream_stateful(spark, SF_DIR))
-    ),
 }
 
 from kafka_connect_minio_pipeline_spark.registry import all_queries

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_connect_minio_pipeline_spark import staging
 from kafka_connect_minio_pipeline_spark.operators import (
     dedup,
     similarity,
@@ -177,9 +178,9 @@ def test_ann_adc_deterministic(spark, sf_dir):
     # clear the train-once model cache between runs so BOTH passes train
     # the codebooks from scratch — this is the end-to-end trainer
     # determinism check, not just the search side
-    similarity._MODEL_CACHE.clear()
+    staging._CACHE.clear()
     a = {tuple(r) for r in similarity_pq.q_similarity_ann_adc(spark, sf_dir).collect()}
-    similarity._MODEL_CACHE.clear()
+    staging._CACHE.clear()
     b = {tuple(r) for r in similarity_pq.q_similarity_ann_adc(spark, sf_dir).collect()}
     assert a == b
 
@@ -203,10 +204,10 @@ def test_pq_distortion_shrinks_with_finer_codebooks(spark, sf_dir, monkeypatch):
 
 def test_ann_ivf_deterministic(spark, sf_dir):
     # fresh quantizer training on both passes (see test_ann_adc_deterministic)
-    similarity._MODEL_CACHE.clear()
+    staging._CACHE.clear()
     a = {(r["query_id"], r["vec_id"]) for r in
          similarity.q_similarity_ann_ivf(spark, sf_dir).collect()}
-    similarity._MODEL_CACHE.clear()
+    staging._CACHE.clear()
     b = {(r["query_id"], r["vec_id"]) for r in
          similarity.q_similarity_ann_ivf(spark, sf_dir).collect()}
     assert a == b

@@ -249,42 +249,86 @@ def test_conf_bytes_parses_spark_size_formats():
     assert _conf_bytes(" 2gb ") == 2 << 30
 
 
+def _cached_values():
+    from kafka_connect_minio_pipeline_spark import staging
+
+    return {k: v[1] for k, v in staging._CACHE.items()}
+
+
 def test_staged_edges_cache_isolates_inputs(spark):
-    """The session stage cache is keyed by input dir: the sf0.001 and
-    sf0.01 co-occurrence relations must come back distinct (a key bug
-    would silently serve one corpus's edges to the other's queries) and
-    a repeated call must reuse the same staged files."""
+    """The session cache is keyed by input dir: the sf0.001 and sf0.01
+    co-occurrence relations must come back distinct (a key bug would
+    silently serve one corpus's edges to the other's queries) and a
+    repeated call must reuse the same staged relation."""
     from kafka_connect_minio_pipeline_spark.operators.graph import (
-        _STAGE_CACHE,
         part_cooccurrence_edges,
     )
 
     a = part_cooccurrence_edges(spark, "/root/testdata/sf0.001").count()
     b = part_cooccurrence_edges(spark, "/root/testdata/sf0.01").count()
     assert a != b
-    before = dict(_STAGE_CACHE)
+    before = _cached_values()
     assert part_cooccurrence_edges(spark, "/root/testdata/sf0.001").count() == a
-    assert dict(_STAGE_CACHE) == before  # no re-stage on the second call
+    assert _cached_values() == before  # no re-stage on the second call
 
 
-def test_staged_edges_cache_survives_eviction(spark):
+def test_staged_edges_cache_survives_eviction(spark, sf_dir):
     """RAM-backed scratch (/dev/shm) can be evicted mid-session: the
-    stage cache must detect the missing directory and re-stage instead
-    of handing out a dangling path."""
+    session cache must notice the staged files are gone and re-stage
+    instead of handing out a dangling relation."""
+    import os
     import shutil
+    from urllib.parse import urlparse
 
     from kafka_connect_minio_pipeline_spark.operators.graph import (
-        _STAGE_CACHE,
         part_cooccurrence_edges,
     )
 
-    n = part_cooccurrence_edges(spark, "/root/testdata/sf0.001").count()
-    key = next(
-        k for k in _STAGE_CACHE
-        if k[1].endswith("sf0.001") and k[2] == "cooc_edges"
+    edges = part_cooccurrence_edges(spark, sf_dir)
+    n = edges.count()
+    staged = {os.path.dirname(urlparse(f).path) for f in edges.inputFiles()}
+    assert len(staged) == 1
+    shutil.rmtree(staged.pop())
+    again = part_cooccurrence_edges(spark, sf_dir)
+    assert again is not edges
+    assert again.count() == n
+
+
+def test_staged_edges_follow_a_rewritten_input(spark, sf_dir, tmp_path):
+    """A rewritten input file must rebuild the session-cached edges, the
+    way the DuckDB oracle re-reads its files on every statement. The
+    table dir is a symlinked copy of sf0.001; replacing its
+    lineitem.parquet with the even-orderkey half must change the part
+    co-occurrence edges from 8,899 to the 4,947 a fresh derivation
+    gives (checked against a pure-Python derivation too)."""
+    import os
+    from collections import defaultdict
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from kafka_connect_minio_pipeline_spark.operators.graph import (
+        part_cooccurrence_edges,
     )
-    shutil.rmtree(_STAGE_CACHE[key])
-    assert part_cooccurrence_edges(spark, "/root/testdata/sf0.001").count() == n
+
+    for f in os.listdir(sf_dir):
+        os.symlink(os.path.join(sf_dir, f), tmp_path / f)
+    assert part_cooccurrence_edges(spark, str(tmp_path)).count() == 8899
+
+    li = pq.read_table(os.path.join(sf_dir, "lineitem.parquet"))
+    half = li.filter(pc.equal(pc.bit_wise_and(li["l_orderkey"], 1), 0))
+    os.unlink(tmp_path / "lineitem.parquet")
+    pq.write_table(half, tmp_path / "lineitem.parquet")
+
+    parts = defaultdict(set)
+    for o, p in zip(half["l_orderkey"].to_pylist(), half["l_partkey"].to_pylist()):
+        parts[o].add(p)
+    want = {
+        (a, b) for ps in parts.values() for a in ps for b in ps if a < b
+    }
+    assert len(want) == 4947
+    got = part_cooccurrence_edges(spark, str(tmp_path))
+    assert {(r["a"], r["b"]) for r in got.collect()} == want
 
 
 def test_hits_matches_pure_python_power_iteration(spark):

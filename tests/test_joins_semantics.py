@@ -180,3 +180,33 @@ def test_waiting_supplier_multi_lineitem_late_is_per_supplier(spark, tmp_path):
         for r in q_join_waiting_supplier(spark, str(tmp_path)).collect()
     ]
     assert got == [(101, 1)], got
+
+
+def test_join_bucketed_rewrites_one_location_per_session(spark):
+    """Re-running the bucketed join in one session rewrites the same
+    two table locations in place: same rows, same directories, and no
+    part files left over from the earlier write."""
+    import os
+    from urllib.parse import urlparse
+
+    from kafka_connect_minio_pipeline_spark.operators.joins import q_join_bucketed
+
+    def run():
+        rows = sorted(tuple(r) for r in q_join_bucketed(spark, SF).collect())
+        files = {
+            t: sorted(urlparse(f).path for f in spark.table(t).inputFiles())
+            for t in ("kcm_bucketed_orders", "kcm_bucketed_lineitem")
+        }
+        return rows, files
+
+    rows_a, files_a = run()
+    rows_b, files_b = run()
+    assert rows_a == rows_b
+    for t in files_a:
+        dirs = {os.path.dirname(f) for f in files_a[t] + files_b[t]}
+        assert len(dirs) == 1, dirs
+        on_disk = sorted(
+            os.path.join(d, f) for d in dirs for f in os.listdir(d)
+            if f.endswith(".parquet")
+        )
+        assert on_disk == files_b[t]

@@ -512,12 +512,12 @@ def test_quality_classifier_weights_nonzero_and_deterministic(
     session model cache (ADVICE r11: with the cache both calls serve
     ONE trained relation, so a == b would compare the cache against
     itself and never exercise the determinism claim) — an empty
-    _MODEL_CACHE forces a full real retrain for run b."""
-    from kafka_connect_minio_pipeline_spark.operators import similarity
+    session cache forces a full real retrain for run b."""
+    from kafka_connect_minio_pipeline_spark import staging
     from kafka_connect_minio_pipeline_spark.operators.text_classifier import q_text_quality_classifier
 
     a = {r["doc_id"]: r["score"] for r in q_text_quality_classifier(spark, sf_dir).collect()}
-    monkeypatch.setattr(similarity, "_MODEL_CACHE", {})
+    monkeypatch.setattr(staging, "_CACHE", {})
     b = {r["doc_id"]: r["score"] for r in q_text_quality_classifier(spark, sf_dir).collect()}
     assert a == b
     assert any(abs(s - 0.5) > 0.2 for s in a.values())
