@@ -1709,11 +1709,13 @@ def q_corpus_refresh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape (UserProfileTransform.java:23-86 filter→derive chain +
     verifier_ui.py:101-138 accounting): the same compose-gates-and-
     account pattern, lifted to corpus refresh."""
+    from ..functions.barrier import filter_above
     from .dedup import (
         JACCARD_THRESHOLD,
-        N_BANDS,
-        N_PERM,
-        minhash_signatures,
+        band_candidates,
+        minhash_band_rows,
+        overlap_jaccard,
+        pair_overlap,
         shingle_sets_of,
     )
     from .llmdata import BENCH_MOD, DECON_N
@@ -1772,67 +1774,17 @@ def q_corpus_refresh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("is_dup_exact", F.lit(True))
     )
-    # asymmetric NEAR layer (dedup_incremental's second layer): banded
-    # MinHash of the delta joined against the base's bands only —
-    # candidate volume scales with |delta| x collision rate — then the
-    # exact-Jaccard verify at the standard 0.8 threshold
-    r = N_PERM // N_BANDS
-    band_arr = F.array(
-        *[
-            F.concat_ws(
-                ",", *[F.col(f"sig{b * r + i}") for i in range(r)]
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    band_of = lambda sets_rel: minhash_signatures(sets_rel).select(  # noqa: E731
-        "doc_id", F.posexplode(band_arr).alias("band_idx", "band_val")
-    )
-    cand = (
-        band_of(d_sets)
-        .alias("a")
-        .hint("shuffle_hash")
-        .join(
-            band_of(b_sets).alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id"),
-            F.col("b.doc_id").alias("base_id"),
-        )
-        .distinct()
-    )
-    dup_near = (
-        cand.join(
-            d_sets.select(
-                "doc_id", F.col("arr").alias("arr1"), F.col("n_sh").alias("n1")
-            ),
-            "doc_id",
-        )
-        .join(
-            b_sets.select(
-                F.col("doc_id").alias("base_id"),
-                F.col("arr").alias("arr2"),
-                F.col("n_sh").alias("n2"),
-            ),
-            "base_id",
-        )
-        .withColumn("n_common", F.size(F.array_intersect("arr1", "arr2")))
-    )
-    # threshold above the projection, not in the join condition — pushed
-    # down, the Jaccard predicate re-evaluates array_intersect per
-    # candidate inside the join (functions/barrier.py)
-    from ..functions.barrier import filter_above
-
+    # asymmetric NEAR layer: the delta's bands joined against the
+    # base's only, then the exact verify at the standard 0.8 threshold,
+    # UNROUNDED (the oracle's dupn mirrors it) and above the projection
+    # (functions/barrier.py)
+    cand = band_candidates(minhash_band_rows(d_sets), minhash_band_rows(b_sets))
     dup_near = (
         filter_above(
-            dup_near,
-            F.col("n_common")
-            / (F.col("n1") + F.col("n2") - F.col("n_common"))
-            >= JACCARD_THRESHOLD,
+            pair_overlap(cand, d_sets, b_sets),
+            overlap_jaccard() >= JACCARD_THRESHOLD,
         )
-        .select("doc_id")
+        .select(F.col("d1").alias("doc_id"))
         .distinct()
         .withColumn("is_dup_near", F.lit(True))
     )
@@ -1915,28 +1867,13 @@ def _refresh_pipeline_sql() -> str:
     synthesis (benchmark docs excluded), Gopher gate over the delta CTE
     (the shared :func:`text.gopher_sql` template), BOTH asymmetric
     dedup layers of quality-passers vs the unchanged base (canonical
-    fingerprint equi-join + banded MinHash candidates with the
-    exact-Jaccard verify — the ``_incremental_oracle_sql`` machinery
-    re-derived over the snapshot relations), benchmark 8-gram probe,
-    CASE-priority verdicts, per-source rollup."""
-    from .dedup import JACCARD_THRESHOLD, MH_A, MH_B, MH_P, N_BANDS, N_PERM
+    fingerprint equi-join + banded MinHash candidates, via the shared
+    :func:`dedup.minhash_bands_sql` builder, with the exact-Jaccard
+    verify), benchmark 8-gram probe, CASE-priority verdicts, per-source
+    rollup."""
+    from .dedup import JACCARD_THRESHOLD, SQL_BAND_MATCH, minhash_bands_sql
     from .llmdata import BENCH_MOD, DECON_N
     from .text import gopher_sql
-
-    r = N_PERM // N_BANDS
-    sig_exprs = ",\n               ".join(
-        f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {MH_P})) AS sig{p}"
-        for p, (a, b) in enumerate(zip(MH_A, MH_B))
-    )
-    band_exprs = ",\n               ".join(
-        "("
-        + " || ',' || ".join(
-            f"CAST(sig{band * r + i} AS VARCHAR)" for i in range(r)
-        )
-        + f") AS b{band}"
-        for band in range(N_BANDS)
-    )
-    band_match = " OR ".join(f"a.b{k} = b.b{k}" for k in range(N_BANDS))
 
     h = "('0x' || substr(md5('{salt}' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT"
     rm = h.format(salt="snaprm|") + f" < {int(SNAP_RM_FRAC * _HASH_SPACE)}"
@@ -1990,27 +1927,13 @@ def _refresh_pipeline_sql() -> str:
         SELECT DISTINCT md5(array_to_string(arr, ' ')) AS fp FROM bsets),
     dupx AS MATERIALIZED (
         SELECT DISTINCT d.doc_id FROM dfp d JOIN bfp USING (fp)),
-    dband AS MATERIALIZED (
-        SELECT doc_id, arr, n, {band_exprs}
-        FROM (SELECT doc_id, arr, n, {sig_exprs}
-              FROM (SELECT doc_id, arr, n,
-                           list_transform(arr,
-                               s -> ('0x' || substr(md5(s), 1, 15))::BIGINT
-                                    % {MH_P}) AS hs
-                    FROM dsets))),
-    bband AS MATERIALIZED (
-        SELECT doc_id, arr, n, {band_exprs}
-        FROM (SELECT doc_id, arr, n, {sig_exprs}
-              FROM (SELECT doc_id, arr, n,
-                           list_transform(arr,
-                               s -> ('0x' || substr(md5(s), 1, 15))::BIGINT
-                                    % {MH_P}) AS hs
-                    FROM bsets))),
+    dband AS MATERIALIZED ({minhash_bands_sql("dsets")}),
+    bband AS MATERIALIZED ({minhash_bands_sql("bsets")}),
     dupn AS MATERIALIZED (
         SELECT DISTINCT doc_id
         FROM (SELECT a.doc_id,
                      a.arr AS arr1, a.n AS n1, b.arr AS arr2, b.n AS n2
-              FROM dband a JOIN bband b ON ({band_match}))
+              FROM dband a JOIN bband b ON ({SQL_BAND_MATCH}))
         WHERE LEN(list_intersect(arr1, arr2)) * 1.0
               / (n1 + n2 - LEN(list_intersect(arr1, arr2)))
               >= {JACCARD_THRESHOLD}),

@@ -225,6 +225,80 @@ SQL_DEDUP_EXACT = f"""
 JACCARD_THRESHOLD = 0.8
 
 
+def rare_first_prefix(sets_: DataFrame, threshold: float) -> DataFrame:
+    """(doc_id, n_sh, h): each doc's first ``n_sh - ceil(t*n_sh) + 1``
+    shingles under the global rare-first order (document frequency
+    ascending, then the shingle string), keyed by the shingle's 8-byte
+    xxhash64 — the prefix of the AllPairs/PPJoin prefix filter. A pair
+    whose overlap covers at least ``ceil(t*|d|)`` of doc d's set must
+    share a shingle inside d's prefix, and rare-first keeps the hot
+    shingles (long posting lists) out of every prefix.
+
+    Document frequency is a window over s, not groupBy + join back:
+    that would compute the exploded relation twice (once for the agg,
+    once for the probe side), and a broadcast of the frequencies would
+    kill the exchange reuse. Two windows, two shuffles, one derivation.
+
+    The candidate join only needs EQUALITY of prefix shingles, so it
+    joins on the hash instead of the string (r14, a narrower key
+    type): the shuffled rows shrink by the string width and the probe
+    compares longs. A collision can only ADD a candidate pair (equal
+    strings always hash equal), and every candidate is verified against
+    the exact shingle arrays (:func:`pair_overlap`) — losslessness is
+    unchanged and re-proven by the quadratic oracles each grade. The
+    prefix itself is still chosen under the exact (df, s) string order,
+    which stays a total order on the shingle universe."""
+    prefix_len = (
+        F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
+    ).cast("int")
+    return (
+        sets_.select("doc_id", "n_sh", F.explode("arr").alias("s"))
+        .withColumn("df", F.count("*").over(Window.partitionBy("s")))
+        .withColumn(
+            "rnk",
+            F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "s")),
+        )
+        .filter(F.col("rnk") <= prefix_len)
+        .select("doc_id", "n_sh", F.xxhash64("s").alias("h"))
+    )
+
+
+def pair_overlap(pairs: DataFrame, left: DataFrame, right: DataFrame) -> DataFrame:
+    """The exact verify of every near-dup candidate generator: join each
+    side's ``(arr, n_sh)`` onto a two-column candidate pair relation and
+    add ``n_common = |arr1 ∩ arr2|``. Output: the two pair columns,
+    ``arr1, n1`` (from ``left``, keyed by the first pair column),
+    ``arr2, n2`` (from ``right``, keyed by the second), ``n_common``.
+
+    The sides are the NARROW set relation (scan + project, no shuffle to
+    rebuild) with one row per doc, so the intersection runs in place on
+    the small candidate set instead of re-exploding the posting lists
+    and re-aggregating. Each caller derives its own score from
+    ``n_common`` and applies its threshold with ``filter_above``: pushed
+    into the join condition, the predicate would re-evaluate
+    array_intersect per candidate (r14; OPTIMIZATION_r14.md,
+    functions/barrier.py)."""
+    k1, k2 = pairs.columns
+
+    def side(sets_: DataFrame, key: str, i: int) -> DataFrame:
+        return sets_.select(
+            F.col("doc_id").alias(key),
+            F.col("arr").alias(f"arr{i}"),
+            F.col("n_sh").alias(f"n{i}"),
+        )
+
+    return (
+        pairs.join(side(left, k1, 1), k1)
+        .join(side(right, k2, 2), k2)
+        .withColumn("n_common", F.size(F.array_intersect("arr1", "arr2")))
+    )
+
+
+def overlap_jaccard() -> Column:
+    """|A ∩ B| / |A ∪ B| over :func:`pair_overlap`'s columns (unrounded)."""
+    return F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common"))
+
+
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs with 3-gram-shingle Jaccard ≥ 0.8.
 
@@ -242,33 +316,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic inverted-index spec, so pruning is proven lossless at sf0.01.
     """
     sets_ = _staged_shingle_sets(spark, sf_dir)
-    sh = sets_.select("doc_id", "n_sh", F.explode("arr").alias("s"))
-    # Document frequency as a window over s (not groupBy+join back: that
-    # computes the exploded relation twice — once for the agg, once for
-    # the probe side — and a broadcast of dfreq would kill the exchange
-    # reuse). Two windows, two shuffles, one derivation.
-    prefix_len = (
-        F.col("n_sh") - F.ceil(F.lit(JACCARD_THRESHOLD) * F.col("n_sh")) + 1
-    ).cast("int")
-    prefix = (
-        sh.withColumn("df", F.count("*").over(Window.partitionBy("s")))
-        .withColumn(
-            "rnk",
-            F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "s")),
-        )
-        .filter(F.col("rnk") <= prefix_len)
-        # the self-join only needs EQUALITY of prefix shingles, so it
-        # joins on the 8-byte xxhash64 of the shingle instead of the
-        # string (r14, guide §2.3 narrower types): the shuffled rows
-        # shrink by the string width and the probe compares longs. A
-        # hash collision can only ADD a candidate pair (equal strings
-        # always hash equal), and every candidate is verified against
-        # the exact shingle arrays below — losslessness is unchanged
-        # and re-proven by the quadratic oracle each grade. The PREFIX
-        # itself is still chosen under the exact (df, s) string order,
-        # which stays a total order on the shingle universe.
-        .select("doc_id", "n_sh", F.xxhash64("s").alias("h"))
-    )
+    prefix = rare_first_prefix(sets_, JACCARD_THRESHOLD)
     # shuffle_hash: at scale neither side of the inverted-index self-join
     # is broadcastable, and both sides being the same subtree means the
     # shuffle is built once and reused (ReusedExchange) — a broadcast
@@ -287,32 +335,8 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
         .distinct()
     )
-    # verify against the NARROW set relation (scan+project, no shuffle to
-    # rebuild — the rarity order matters only for the prefix, not here).
-    # filter_above keeps the threshold out of the join condition: pushed
-    # down, the Jaccard predicate re-evaluates array_intersect 2x in the
-    # condition plus 1x in the projection (r14; measured numbers in
-    # OPTIMIZATION_r14.md; see functions/barrier.py).
-    scored = (
-        cand.join(
-            sets_.select(
-                F.col("doc_id").alias("d1"), F.col("arr").alias("arr1"), F.col("n_sh").alias("n1")
-            ),
-            "d1",
-        )
-        .join(
-            sets_.select(
-                F.col("doc_id").alias("d2"), F.col("arr").alias("arr2"), F.col("n_sh").alias("n2")
-            ),
-            "d2",
-        )
-        .withColumn("n_common", F.size(F.array_intersect("arr1", "arr2")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common")), 6
-            ),
-        )
+    scored = pair_overlap(cand, sets_, sets_).withColumn(
+        "jaccard", F.round(overlap_jaccard(), 6)
     )
     return filter_above(scored, F.col("jaccard") >= JACCARD_THRESHOLD).select(
         "d1", "d2", "jaccard"
@@ -387,14 +411,16 @@ def minhash_signatures(sets_: DataFrame, carry: tuple[str, ...] = ()) -> DataFra
     return hashed.select("doc_id", *carry, *sigs)
 
 
-def minhash_band_rows(sets_: DataFrame) -> DataFrame:
-    """(doc_id, band_idx, band_val) — one row per LSH band bucket claim.
+def minhash_band_rows(sets_: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """(doc_id, *carry, band_idx, band_val) — one row per LSH band bucket
+    claim; the only MinHash banding.
 
     Band key = the band's r signature values joined as a string —
-    portable across engines, unlike hashing the tuple. Shared by the
-    batch candidate join and the streaming near-dup gate (the bucket
-    relation IS the streaming state key)."""
-    sigs = minhash_signatures(sets_)
+    portable across engines, unlike hashing the tuple. Shared by every
+    banded candidate join (:func:`band_candidates`) and the streaming
+    near-dup gate (the bucket relation IS the streaming state key).
+    ``carry`` columns ride along as in :func:`minhash_signatures`."""
+    sigs = minhash_signatures(sets_, carry)
     r = N_PERM // N_BANDS
     bands = F.array(
         *[
@@ -402,7 +428,45 @@ def minhash_band_rows(sets_: DataFrame) -> DataFrame:
             for b in range(N_BANDS)
         ]
     )
-    return sigs.select("doc_id", F.posexplode(bands).alias("band_idx", "band_val"))
+    return sigs.select(
+        "doc_id", *carry, F.posexplode(bands).alias("band_idx", "band_val")
+    )
+
+
+def band_candidates(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Distinct (d1, d2) doc pairs that share at least one band bucket,
+    d1 from ``left`` and d2 from ``right`` (both
+    :func:`minhash_band_rows` relations).
+
+    A symmetric index passes the same relation twice and filters
+    ``d1 < d2`` (the optimizer pushes it into the join condition); an
+    incremental one passes the delta's bands against the base's, so
+    candidate volume scales with |delta| · collision rate, never
+    |corpus|². The left side is hinted shuffle_hash: neither side of a
+    banded signature join broadcasts at scale, and in the symmetric
+    case the two identical subtrees share one exchange."""
+    a = left.alias("a").hint("shuffle_hash")
+    b = right.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_val") == F.col("b.band_val")),
+        )
+        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
+        .distinct()
+    )
+
+
+def minhash_scored_pairs(sets_: DataFrame) -> DataFrame:
+    """Every banded MinHash candidate pair (d1 < d2) of ``sets_`` with
+    its exact 6-place Jaccard — unthresholded, so the LSH query filters
+    it and the threshold sweep aggregates the same relation."""
+    banded = minhash_band_rows(sets_)
+    cand = band_candidates(banded, banded).filter(F.col("d1") < F.col("d2"))
+    return pair_overlap(cand, sets_, sets_).withColumn(
+        "jaccard", F.round(overlap_jaccard(), 6)
+    )
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -416,65 +480,24 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     simulates the same LSH rather than comparing against the exact
     operator (whose output LSH only approaches at recall < 1).
     """
-    sets_ = _staged_shingle_sets(spark, sf_dir)
-    banded = minhash_band_rows(sets_)
-    # same rationale as the Jaccard prefix self-join: neither side of a
-    # banded signature join broadcasts at scale, and shuffle-hash lets the
-    # two identical subtrees share one exchange
-    a = banded.alias("a").hint("shuffle_hash")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
+    scored = minhash_scored_pairs(_staged_shingle_sets(spark, sf_dir))
+    return filter_above(scored, F.col("jaccard") >= JACCARD_THRESHOLD).select(
+        "d1", "d2", "jaccard"
     )
-    # exact verification of candidates only: join each side's shingle-set
-    # array (one row per doc, not per shingle) and intersect in-place —
-    # two hash joins on the small candidate set instead of re-exploding
-    # the full posting lists and re-aggregating.
-    verified = (
-        cand.join(
-            sets_.select(
-                F.col("doc_id").alias("d1"),
-                F.col("arr").alias("arr1"),
-                F.col("n_sh").alias("n1"),
-            ),
-            "d1",
-        )
-        .join(
-            sets_.select(
-                F.col("doc_id").alias("d2"),
-                F.col("arr").alias("arr2"),
-                F.col("n_sh").alias("n2"),
-            ),
-            "d2",
-        )
-        .withColumn("n_common", F.size(F.array_intersect("arr1", "arr2")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common")), 6
-            ),
-        )
-    )
-    # threshold above the projection, not in the join condition — the
-    # pushed-down predicate re-evaluates the intersection 2x per
-    # candidate (see functions/barrier.py)
-    verified = filter_above(verified, F.col("jaccard") >= JACCARD_THRESHOLD)
-    return verified.select("d1", "d2", "jaccard")
 
 
-def _minhash_oracle_sql() -> str:
-    """DuckDB twin of the full LSH pipeline: identical base hash, affine
-    permutations, band keys, candidate OR-join (quadratic is fine at
-    oracle scale), and exact verify."""
+# the OR-join of two banded relations a, b: the pair shares a bucket
+SQL_BAND_MATCH = " OR ".join(f"a.b{k} = b.b{k}" for k in range(N_BANDS))
+
+
+def minhash_bands_sql(src: str) -> str:
+    """SELECT text: every column of ``src`` (a FROM clause with ``arr``
+    among its columns) plus the band keys ``b0 .. b{N_BANDS-1}`` — the
+    DuckDB twin of :func:`minhash_signatures` + :func:`minhash_band_rows`
+    (identical base hash, affine permutations and band strings), shared
+    by every MinHash oracle; the Spark side stays independent of it."""
     r = N_PERM // N_BANDS
-    sig_exprs = ",\n               ".join(
+    sig_exprs = ",\n                     ".join(
         f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {MH_P})) AS sig{p}"
         for p, (a, b) in enumerate(zip(MH_A, MH_B))
     )
@@ -486,36 +509,40 @@ def _minhash_oracle_sql() -> str:
         + f") AS b{band}"
         for band in range(N_BANDS)
     )
-    band_match = " OR ".join(f"a.b{k} = b.b{k}" for k in range(N_BANDS))
+    sigs = ", ".join(f"sig{p}" for p in range(N_PERM))
+    return f"""
+        SELECT * EXCLUDE (hs, {sigs}),
+               {band_exprs}
+        FROM (SELECT *,
+                     {sig_exprs}
+              FROM (SELECT *,
+                           list_transform(arr,
+                               s -> ('0x' || substr(md5(s), 1, 15))::BIGINT
+                                    % {MH_P}) AS hs
+                    FROM {src}))"""
+
+
+def _minhash_oracle_sql(threshold: float = JACCARD_THRESHOLD) -> str:
+    """DuckDB twin of the full LSH pipeline: identical base hash, affine
+    permutations, band keys, candidate OR-join (quadratic is fine at
+    oracle scale), and exact verify at ``threshold``."""
     return f"""
     WITH {SQL_SHINGLES_CTE},
     sets AS (
         SELECT doc_id, LIST(s) AS arr, COUNT(*) AS n
         FROM shingle GROUP BY doc_id),
-    hashed AS (
-        SELECT doc_id, arr, n,
-               list_transform(arr,
-                   s -> ('0x' || substr(md5(s), 1, 15))::BIGINT % {MH_P}) AS hs
-        FROM sets WHERE n > 0),
-    sigs AS (
-        SELECT doc_id, arr, n,
-               {sig_exprs}
-        FROM hashed),
-    banded AS (
-        SELECT doc_id, arr, n,
-               {band_exprs}
-        FROM sigs),
+    banded AS ({minhash_bands_sql("sets WHERE n > 0")}),
     cand AS (
         SELECT a.doc_id AS d1, b.doc_id AS d2,
                a.arr AS arr1, a.n AS n1, b.arr AS arr2, b.n AS n2
         FROM banded a JOIN banded b
-          ON a.doc_id < b.doc_id AND ({band_match}))
+          ON a.doc_id < b.doc_id AND ({SQL_BAND_MATCH}))
     SELECT d1, d2,
            ROUND(LEN(list_intersect(arr1, arr2)) * 1.0
                  / (n1 + n2 - LEN(list_intersect(arr1, arr2))), 6) AS jaccard
     FROM cand
     WHERE LEN(list_intersect(arr1, arr2)) * 1.0
-          / (n1 + n2 - LEN(list_intersect(arr1, arr2))) >= {JACCARD_THRESHOLD}
+          / (n1 + n2 - LEN(list_intersect(arr1, arr2))) >= {threshold}
 """
 
 
@@ -526,19 +553,6 @@ def minhash_band_rows_sql() -> str:
     """CTE chain ending in ``brows (doc_id, band_idx, band_val)`` — the
     DuckDB twin of :func:`minhash_band_rows`, shared by the streaming
     near-dup gate's oracle."""
-    r = N_PERM // N_BANDS
-    sig_exprs = ",\n               ".join(
-        f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {MH_P})) AS sig{p}"
-        for p, (a, b) in enumerate(zip(MH_A, MH_B))
-    )
-    band_exprs = ",\n               ".join(
-        "("
-        + " || ',' || ".join(
-            f"CAST(sig{band * r + i} AS VARCHAR)" for i in range(r)
-        )
-        + f") AS b{band}"
-        for band in range(N_BANDS)
-    )
     union = "\n        UNION ALL ".join(
         f"SELECT doc_id, {k} AS band_idx, b{k} AS band_val FROM banded"
         for k in range(N_BANDS)
@@ -547,19 +561,7 @@ def minhash_band_rows_sql() -> str:
     sets AS (
         SELECT doc_id, LIST(s) AS arr, COUNT(*) AS n
         FROM shingle GROUP BY doc_id),
-    hashed AS (
-        SELECT doc_id,
-               list_transform(arr,
-                   s -> ('0x' || substr(md5(s), 1, 15))::BIGINT % {MH_P}) AS hs
-        FROM sets WHERE n > 0),
-    sigs AS (
-        SELECT doc_id,
-               {sig_exprs}
-        FROM hashed),
-    banded AS MATERIALIZED (
-        SELECT doc_id,
-               {band_exprs}
-        FROM sigs),
+    banded AS MATERIALIZED ({minhash_bands_sql("sets WHERE n > 0")}),
     brows AS MATERIALIZED (
         {union})"""
 
@@ -1397,30 +1399,19 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning is proven lossless against the quadratic oracle at sf0.01.
     """
     sets_ = _staged_shingle_sets(spark, sf_dir)
-    sh = sets_.select("doc_id", "n_sh", F.explode("arr").alias("s"))
-    prefix_len = (
-        F.col("n_sh")
-        - F.ceil(F.lit(CONTAINMENT_THRESHOLD) * F.col("n_sh"))
-        + 1
-    ).cast("int")
-    prefix = (
-        sh.withColumn("df", F.count("*").over(Window.partitionBy("s")))
-        .withColumn(
-            "rnk",
-            F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "s")),
-        )
-        .filter(F.col("rnk") <= prefix_len)
-        # join on the 8-byte shingle hash, not the string (r14): a
-        # collision only ADDS a candidate, the exact verify below
-        # removes it — see q_dedup_ngram_jaccard's prefix for the full
-        # argument; here the win is larger because the probe side is
-        # the FULL posting relation
-        .select("doc_id", "n_sh", F.xxhash64("s").alias("h"))
-    )
     # inner prefix is the small side → build it in a shuffled hash join
-    # against the full posting relation (neither is broadcastable at scale)
-    a = prefix.alias("a").hint("shuffle_hash")
-    b = sh.select("doc_id", "n_sh", F.xxhash64("s").alias("h")).alias("b")
+    # against the full posting relation (neither is broadcastable at
+    # scale); both sides join on the 8-byte shingle hash — here the win
+    # is larger than in the Jaccard self-join because the probe side is
+    # the FULL posting relation
+    a = rare_first_prefix(sets_, CONTAINMENT_THRESHOLD).alias("a").hint(
+        "shuffle_hash"
+    )
+    b = (
+        sets_.select("doc_id", "n_sh", F.explode("arr").alias("s"))
+        .select("doc_id", "n_sh", F.xxhash64("s").alias("h"))
+        .alias("b")
+    )
     cand = (
         a.join(
             b,
@@ -1438,37 +1429,16 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    scored = (
-        cand.join(
-            sets_.select(
-                F.col("doc_id").alias("inner_id"),
-                F.col("arr").alias("arr_i"),
-                F.col("n_sh").alias("n_inner"),
-            ),
-            "inner_id",
-        )
-        .join(
-            sets_.select(
-                F.col("doc_id").alias("outer_id"),
-                F.col("arr").alias("arr_o"),
-                F.col("n_sh").alias("n_outer"),
-            ),
-            "outer_id",
-        )
-        .withColumn("n_common", F.size(F.array_intersect("arr_i", "arr_o")))
-        .withColumn(
-            "containment", F.round(F.col("n_common") / F.col("n_inner"), 6)
-        )
+    scored = pair_overlap(cand, sets_, sets_).withColumn(
+        "containment", F.round(F.col("n_common") / F.col("n1"), 6)
     )
-    # threshold above the projection — pushed into the join condition it
-    # re-evaluates the intersection per candidate (functions/barrier.py)
     return filter_above(
         scored, F.col("containment") >= CONTAINMENT_THRESHOLD
     ).select(
         "inner_id",
         "outer_id",
-        F.col("n_inner").cast("long").alias("n_inner"),
-        F.col("n_outer").cast("long").alias("n_outer"),
+        F.col("n1").cast("long").alias("n_inner"),
+        F.col("n2").cast("long").alias("n_outer"),
         "containment",
     )
 
@@ -1508,10 +1478,11 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The corpus splits deterministically (portable salted hash on doc_id)
     into base (~80%) and new (~20%). Two asymmetric layers:
     exact — canonical shingle-set fingerprint equi-join (new ⨝ base on
-    md5 of the sorted set); near — the same banded MinHash machinery as
-    ``dedup_minhash_lsh`` but joining NEW bands against BASE bands only
-    (candidate volume scales with |delta| · collision-rate, not
-    |corpus|²), then exact-Jaccard verify at the 0.8 threshold. Each new
+    md5 of the sorted set); near — the shared banding and candidate join
+    (:func:`minhash_band_rows`, :func:`band_candidates`) with NEW bands
+    joined against BASE bands only (candidate volume scales with
+    |delta| · collision-rate, not |corpus|²), then the shared exact
+    verify (:func:`pair_overlap`) at the 0.8 Jaccard threshold. Each new
     doc reports its best match: exact beats near, then highest Jaccard,
     then smallest base id — one deterministic max_by(struct). At 100 TB
     the base side's fingerprints/signatures are a maintained index
@@ -1558,57 +1529,16 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    sigs = minhash_signatures(sets_, carry=("is_new",))
-    r = N_PERM // N_BANDS
-    bands = F.array(
-        *[
-            F.concat_ws(",", *[F.col(f"sig{b * r + i}") for i in range(r)])
-            for b in range(N_BANDS)
-        ]
+    banded = minhash_band_rows(sets_, carry=("is_new",))
+    cand = band_candidates(
+        banded.filter("is_new"), banded.filter(~F.col("is_new"))
     )
-    banded = sigs.select(
-        "doc_id", "is_new", F.posexplode(bands).alias("band_idx", "band_val")
+    near = pair_overlap(cand, sets_, sets_).withColumn(
+        "jaccard", F.round(overlap_jaccard(), 6)
     )
-    new_b = banded.filter("is_new").alias("a").hint("shuffle_hash")
-    base_b = banded.filter(~F.col("is_new")).alias("b")
-    cand = (
-        new_b.join(
-            base_b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val")),
-        )
-        .select(F.col("a.doc_id").alias("doc_id"), F.col("b.doc_id").alias("base_id"))
-        .distinct()
-    )
-    near = (
-        cand.join(
-            sets_.select(
-                F.col("doc_id"), F.col("arr").alias("arr1"), F.col("n_sh").alias("n1")
-            ),
-            "doc_id",
-        )
-        .join(
-            sets_.select(
-                F.col("doc_id").alias("base_id"),
-                F.col("arr").alias("arr2"),
-                F.col("n_sh").alias("n2"),
-            ),
-            "base_id",
-        )
-        .withColumn("n_common", F.size(F.array_intersect("arr1", "arr2")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common")), 6
-            ),
-        )
-    )
-    # threshold above the projection, not in the join condition
-    # (functions/barrier.py — the near layer's verify is the same shape
-    # as dedup_minhash_lsh's)
     near = filter_above(near, F.col("jaccard") >= JACCARD_THRESHOLD).select(
-        "doc_id",
-        F.col("base_id").alias("match_id"),
+        F.col("d1").alias("doc_id"),
+        F.col("d2").alias("match_id"),
         F.lit(0).alias("prio"),
         "jaccard",
     )
@@ -1635,20 +1565,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _incremental_oracle_sql() -> str:
     """DuckDB twin: identical split hash, fingerprints, signatures, bands,
     asymmetric candidate join, verify, and best-match fold."""
-    r = N_PERM // N_BANDS
-    sig_exprs = ",\n               ".join(
-        f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {MH_P})) AS sig{p}"
-        for p, (a, b) in enumerate(zip(MH_A, MH_B))
-    )
-    band_exprs = ",\n               ".join(
-        "("
-        + " || ',' || ".join(
-            f"CAST(sig{band * r + i} AS VARCHAR)" for i in range(r)
-        )
-        + f") AS b{band}"
-        for band in range(N_BANDS)
-    )
-    band_match = " OR ".join(f"a.b{k} = b.b{k}" for k in range(N_BANDS))
     new_cut = int(INCR_NEW_FRAC * (1 << 60))
     return f"""
     WITH {SQL_SHINGLES_CTE},
@@ -1667,24 +1583,12 @@ def _incremental_oracle_sql() -> str:
         SELECT a.doc_id, MIN(b.doc_id) AS match_id, 1 AS prio, 1.0 AS jaccard
         FROM fp a JOIN fp b ON a.fp = b.fp AND a.is_new AND NOT b.is_new
         GROUP BY a.doc_id),
-    hashed AS (
-        SELECT doc_id, arr, n,
-               list_transform(arr,
-                   s -> ('0x' || substr(md5(s), 1, 15))::BIGINT % {MH_P}) AS hs
-        FROM sets WHERE n > 0),
-    sigs AS (
-        SELECT doc_id, arr, n,
-               {sig_exprs}
-        FROM hashed),
-    banded AS (
-        SELECT g.doc_id, f.is_new, g.arr, g.n,
-               {band_exprs}
-        FROM sigs g JOIN flags f USING (doc_id)),
+    banded AS ({minhash_bands_sql("sets JOIN flags USING (doc_id)")}),
     cand AS (
         SELECT a.doc_id, b.doc_id AS base_id,
                a.arr AS arr1, a.n AS n1, b.arr AS arr2, b.n AS n2
         FROM banded a JOIN banded b
-          ON a.is_new AND NOT b.is_new AND ({band_match})),
+          ON a.is_new AND NOT b.is_new AND ({SQL_BAND_MATCH})),
     near AS (
         SELECT doc_id, base_id AS match_id, 0 AS prio,
                ROUND(LEN(list_intersect(arr1, arr2)) * 1.0
@@ -1717,64 +1621,17 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched) the LSH index yields at each candidate verify threshold —
     the artifact a curation team inspects before committing to a cut.
 
-    One pass: the banded MinHash candidate set is generated ONCE
-    (identical machinery to ``dedup_minhash_lsh``), every candidate's
-    exact Jaccard is computed once, and the sweep is a conditional
-    aggregation over the scored pairs — thresholds never re-run the
-    pipeline. Caveat by construction: the banding is tuned for J ≥ 0.8,
-    so lower thresholds report the pairs THIS index surfaces (candidate
-    recall decays below the tuning point — that decay is exactly what
-    the report shows the operator of the index). Output is
-    |thresholds| rows.
+    One pass: the sweep aggregates the scored candidate relation that
+    ``dedup_minhash_lsh`` thresholds (:func:`minhash_scored_pairs` —
+    every banded candidate's exact Jaccard, computed once), as a
+    conditional aggregation — thresholds never re-run the pipeline.
+    Caveat by construction: the banding is tuned for J ≥ 0.8, so lower
+    thresholds report the pairs THIS index surfaces (candidate recall
+    decays below the tuning point — that decay is exactly what the
+    report shows the operator of the index). Output is |thresholds|
+    rows.
     """
-    sets_ = _staged_shingle_sets(spark, sf_dir)
-    sigs = minhash_signatures(sets_)
-    r = N_PERM // N_BANDS
-    bands = F.array(
-        *[
-            F.concat_ws(",", *[F.col(f"sig{b * r + i}") for i in range(r)])
-            for b in range(N_BANDS)
-        ]
-    )
-    banded = sigs.select("doc_id", F.posexplode(bands).alias("band_idx", "band_val"))
-    a = banded.alias("a").hint("shuffle_hash")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
-    scored = (
-        cand.join(
-            sets_.select(
-                F.col("doc_id").alias("d1"),
-                F.col("arr").alias("arr1"),
-                F.col("n_sh").alias("n1"),
-            ),
-            "d1",
-        )
-        .join(
-            sets_.select(
-                F.col("doc_id").alias("d2"),
-                F.col("arr").alias("arr2"),
-                F.col("n_sh").alias("n2"),
-            ),
-            "d2",
-        )
-        .withColumn("n_common", F.size(F.array_intersect("arr1", "arr2")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common")), 6
-            ),
-        )
-        .select("d1", "d2", "jaccard")
-    )
+    scored = minhash_scored_pairs(_staged_shingle_sets(spark, sf_dir))
     t = F.explode(
         F.array(*[F.lit(x) for x in SWEEP_THRESHOLDS])
     ).alias("threshold")
@@ -1791,9 +1648,7 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _threshold_sweep_sql() -> str:
-    pair_sql = _minhash_oracle_sql().replace(
-        f">= {JACCARD_THRESHOLD}", ">= 0"
-    )
+    pair_sql = _minhash_oracle_sql(0)
     ts = ", ".join(f"({t})" for t in SWEEP_THRESHOLDS)
     return f"""
     WITH scored AS ({pair_sql}),

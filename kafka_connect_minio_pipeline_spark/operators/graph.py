@@ -180,7 +180,11 @@ def wedge_triangles(edges: DataFrame) -> DataFrame:
     single-enumeration fix below (39.0 → 19.2 s min-of-3, identical
     rows — plans/r15/ab_wedge_common.py). The build side is the edge
     relation itself, whose per-partition hash table shrinks with the
-    shuffle partition count at any scale."""
+    shuffle partition count at any scale. The hint is unconditional, so
+    ``spark.sql.autoBroadcastJoinThreshold`` no longer picks this join's
+    strategy: an edge side small enough to broadcast is still shuffled
+    and hashed, and a skewed partition of a huge edge relation builds
+    its whole hash table in one task."""
     e1, e2 = edges.alias("e1"), edges.alias("e2")
     e3 = edges.alias("e3").hint("shuffle_hash")
     return (

@@ -95,7 +95,8 @@ _QUERY_MODULES = (
 #          similarity_ann_ivf, similarity_ann_adc, similarity_ann_ivfpq,
 #          similarity_ann_ivfpq_eval, similarity_ann_ivfpq_residual,
 #          similarity_ivf_probe_sweep, dedup_threshold_sweep (shares
-#          minhash_signatures, whose signature gained a carry param).
+#          dedup_minhash_lsh's scored pairs; minhash_band_rows is the
+#          one banding, with a carry param for dedup_incremental).
 #   23-37: the 15 STATEFUL streaming queries — r15 moved them onto the
 #          data-volume-derived state-partition rule (runner.py): results
 #          are partition-count-invariant by construction, re-graded to
@@ -195,8 +196,9 @@ _QUERY_MODULES = (
 #          r11 CHANGED: graph_wcc (production path swapped to
 #          large-star/small-star; the min-label loop has since been
 #          deleted, the union-find test is the cross-check) and
-#          dedup_minhash_lsh (band derivation refactored into the shared
-#          minhash_band_rows helper the stream gate reuses).
+#          dedup_minhash_lsh (band derivation refactored into
+#          minhash_band_rows, now the only banding: the stream gate and
+#          every banded candidate join use it).
 #   11-43: ALL 33 remaining round-5-vintage rows — the r5 vintage CLEARS
 #          (VERDICT r10 item 1): corpus_shard_skew/split_leakage/
 #          weighted_median, the dedup eval quartet, llm transforms,

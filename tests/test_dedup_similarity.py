@@ -29,13 +29,48 @@ def _pairs(df, cols=("d1", "d2")):
 
 def test_minhash_lsh_vs_exact_jaccard(spark, sf_dir):
     """LSH output ⊆ exact output (precision 1.0 — candidates are verified),
-    and recall is high at J ≥ 0.8 (theory: ≥ 96% per pair at j=0.8)."""
-    exact = _pairs(dedup.q_dedup_ngram_jaccard(spark, sf_dir))
-    lsh = _pairs(dedup.q_dedup_minhash_lsh(spark, sf_dir))
-    assert lsh <= exact, f"LSH produced non-duplicates: {sorted(lsh - exact)[:5]}"
+    and recall is high at J ≥ 0.8 (theory: ≥ 96% per pair at j=0.8).
+    Every LSH pair carries the exact operator's Jaccard, and the
+    threshold sweep's 0.8 row counts exactly the LSH pairs and their
+    distinct left docs (both aggregate one scored relation)."""
+    exact = {
+        (r.d1, r.d2): r.jaccard
+        for r in dedup.q_dedup_ngram_jaccard(spark, sf_dir).collect()
+    }
+    lsh = {
+        (r.d1, r.d2): r.jaccard
+        for r in dedup.q_dedup_minhash_lsh(spark, sf_dir).collect()
+    }
+    extra = set(lsh) - set(exact)
+    assert not extra, f"LSH produced non-duplicates: {sorted(extra)[:5]}"
     assert len(exact) > 0, "fixture has no near-dup pairs; test is vacuous"
     recall = len(lsh) / len(exact)
     assert recall >= 0.8, f"LSH recall {recall:.2f} too low ({len(lsh)}/{len(exact)})"
+    for pair, j in lsh.items():
+        assert j == exact[pair], (pair, j, exact[pair])
+    sweep = {
+        r.threshold: r
+        for r in dedup.q_dedup_threshold_sweep(spark, sf_dir).collect()
+    }
+    at_cut = sweep[dedup.JACCARD_THRESHOLD]
+    assert at_cut.n_pairs == len(lsh)
+    assert at_cut.n_left_docs == len({d1 for d1, _ in lsh})
+
+
+def test_ngram_jaccard_threshold_is_inclusive(spark, tmp_path):
+    """The verify keeps J >= 0.8 inclusive: a planted pair at exactly
+    8/10 shared shingles survives with jaccard == 0.8, a pair at 7/9
+    (0.778) does not."""
+    words = [f"w{i}" for i in range(11)]
+    u = [f"u{i}" for i in range(10)]
+    docs = [
+        (1, " ".join(words)),  # 9 shingles
+        (2, " ".join(words[:10] + ["x"])),  # 9 shingles, 8 shared with doc 1
+        (3, " ".join(u)),  # 8 shingles
+        (4, " ".join(u[:9] + ["y"])),  # 8 shingles, 7 shared with doc 3
+    ]
+    got = dedup.q_dedup_ngram_jaccard(spark, _write_docs(spark, tmp_path, docs))
+    assert [(r.d1, r.d2, r.jaccard) for r in got.collect()] == [(1, 2, 0.8)]
 
 
 def test_embedding_lsh_vs_exact_cosine(spark, sf_dir):
