@@ -11,8 +11,8 @@ computes cell + codes in one ``mapInArrow`` pass — zero exchanges, no
 intermediate blow-up. At 100 TB this is the guide §4.2 shape: Spark
 distributes the scan, numpy does the per-batch math.
 
-Adoption boundary (r15 A/B, plans/r15/ab_ann.py + ab_focused.py): the
-kernel is used ONLY where it collapses BOTH passes — ivfpq_index and
+Adoption boundary (r15 A/B, OPTIMIZATION_r15.md): the kernel is used
+ONLY where it collapses BOTH passes — ivfpq_index and
 ivfpq_residual_index (+24-28%). Single-pass twins for ivf_assign and
 pq_encode measured flat-to-slower (the fixed Python-boundary roundtrip
 outweighs one pass's exchange savings) and were rejected; those stay

@@ -402,11 +402,10 @@ SQL_SIMILARITY_KNN_LABEL = f"""
 
 IVF_CELLS = 16
 IVF_PROBE = 2  # cells searched per query
-IVF_ITERS = 2  # Lloyd iterations (deterministic init → deterministic result;
-#                2 rounds over a 128-points-per-cell sample is the quality
-#                FAISS-style coarse quantizers train to, and each round is
-#                a fixed plan-depth/scheduling cost — the kmeans_assign
-#                iteration count)
+IVF_ITERS = 2  # Lloyd update rounds (deterministic init → deterministic
+#                result; 2 rounds over a 128-points-per-cell sample is the
+#                quality FAISS-style coarse quantizers train to, and each
+#                round is a fixed plan-depth/scheduling cost)
 IVF_TRAIN_SAMPLE = 2048  # quantizer training sample (FAISS-style)
 
 
@@ -417,42 +416,152 @@ def _ivf_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cell_score() -> F.Column:
-    """argmin_c ||v-c||² == argmin_c (||c||² - 2 v·c): the per-vector
-    ||v||² term is a constant shift that cancels in every comparison, so
-    neither engine computes it — one 64-dim fold per (vector, cell)
-    saved on the corpus-sized assignment pass. The ORDER among cells is
-    float-formula-dependent, so the oracle uses the IDENTICAL two-term
-    expression (never the three-term one)."""
-    return F.col("dcc") - 2 * dot(F.col("v"), F.col("c"))
-
-
-def _with_cc(cents: DataFrame) -> DataFrame:
+def _with_dcc(cents: DataFrame) -> DataFrame:
+    """(…, c, dcc): each centroid row with its ||c||²."""
     return cents.withColumn("dcc", dot(F.col("c"), F.col("c")))
 
 
+def _score() -> F.Column:
+    """argmin_c ||v-c||² == argmin_c (||c||² - 2 v·c): the per-vector
+    ||v||² term is a constant shift that cancels in every comparison, so
+    neither engine computes it — one fold per (vector, centroid) saved
+    on the corpus-sized passes. The ORDER among centroids is
+    float-formula-dependent, so every oracle uses the IDENTICAL two-term
+    expression (never the three-term one); a caller that reports a true
+    squared distance adds ||v||² afterwards (``dvv + score``)."""
+    return F.col("dcc") - 2 * dot(F.col("v"), F.col("c"))
+
+
+def nearest(
+    points: DataFrame,
+    cents: DataFrame,
+    group: tuple[str, ...] = (),
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """(vec_id, *group, k, score, *carry): every point's nearest centroid.
+
+    ``points`` is (vec_id, *group, v, …) and ``cents`` is (*group, k, c);
+    a point only competes for the centroids of its own group (the PQ
+    subspace, ``group=("sub",)``), otherwise for all of them. The bounded
+    centroid relation is broadcast — a crossJoin without groups, a
+    BroadcastHashJoin on the group keys with them — and the argmin is a
+    map-side-combined ``min(struct(score, k))`` per point, so ties take
+    the smallest k. ``carry`` columns pass through ``first()``: exact,
+    since each depends only on the (vec_id, *group) key, so no caller
+    needs a join-back to recover them."""
+    cc = F.broadcast(_with_dcc(cents))
+    joined = points.join(cc, list(group)) if group else points.crossJoin(cc)
+    best = (
+        joined.withColumn("score", _score())
+        .groupBy("vec_id", *group)
+        .agg(
+            F.min(F.struct("score", "k")).alias("b"),
+            *[F.first(x).alias(x) for x in carry],
+        )
+    )
+    return best.select("vec_id", *group, "b.k", "b.score", *carry)
+
+
+def lloyd(
+    train: DataFrame, seeds: DataFrame, rounds: int, group: tuple[str, ...] = ()
+) -> DataFrame:
+    """``rounds`` Lloyd rounds as pure dataflow; returns (*group, k, c).
+
+    ``train`` is (vec_id, *group, v) and ``seeds`` the initial (*group,
+    k, c). Each round assigns with :func:`nearest` (``v`` carried, no
+    join-back), then takes the order-free decimal(16,6) mean per
+    (*group, k, dim): the same quantized sums as similarity_centroids,
+    cast back to double for one correctly-rounded division by the count,
+    so the DuckDB oracle (:func:`lloyd_ctes`) reproduces every centroid
+    bit-for-bit. An emptied centroid drops out of the next round on both
+    engines. The round lineage is LINEAR, so rounds stay one lazy plan
+    and callers materialize only the ends."""
+    cents = seeds
+    for _ in range(rounds):
+        assigned = nearest(train, cents, group, carry=("v",))
+        cents = (
+            assigned.select(*group, "k", F.posexplode("v").alias("pos", "x"))
+            .groupBy(*group, "k", "pos")
+            .agg(
+                (
+                    F.sum(F.col("x").cast("decimal(16,6)")).cast("double")
+                    / F.count("*")
+                ).alias("m")
+            )
+            .groupBy(*group, "k")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                    lambda st: st["m"],
+                ).alias("c")
+            )
+        )
+    return cents
+
+
+def lloyd_ctes(
+    src: str, seeds: int, rounds: int, prefix: str, group: tuple[str, ...] = ()
+) -> str:
+    """DuckDB twin of :func:`lloyd`: the CTE fragment ``{p}c0, {p}a1,
+    {p}u1, {p}c1, …`` ending in ``{p}c{rounds}`` of (*group, k, c).
+    ``src`` names a CTE of (vec_id, *group, v); the seeds are its
+    ``seeds`` smallest vec_ids per group, k = vec_id. Each round ranks
+    by the same two-term score as :func:`_score` (ties → smallest k),
+    carries ``v`` like the Spark side, and takes the decimal(16,6) mean.
+    The prefix keeps chains apart when one oracle composes two (IVF-PQ
+    trains the coarse quantizer and the PQ codebooks in one ``WITH``).
+    Each round CTE is referenced exactly once (linear — the
+    exponential-inlining trap does not apply)."""
+    g = "".join(f"{x}, " for x in group)
+    sg = "".join(f"s.{x}, " for x in group)
+    part = ", ".join(["s.vec_id", *[f"s.{x}" for x in group]])
+    ctes = [
+        f"""
+    {prefix}c0 AS (
+        SELECT {g}vec_id AS k, v AS c FROM {src} WHERE vec_id < {seeds})"""
+    ]
+    for i in range(1, rounds + 1):
+        prev = f"{prefix}c{i - 1}"
+        on = f"JOIN {prev} c USING ({', '.join(group)})"
+        join = on if group else f"CROSS JOIN {prev} c"
+        ctes.append(f"""
+    {prefix}a{i} AS (
+        SELECT {g}k, v FROM (
+            SELECT {sg}c.k, s.v,
+                   ROW_NUMBER() OVER (PARTITION BY {part}
+                       ORDER BY list_dot_product(c.c, c.c)
+                                - 2 * list_dot_product(s.v, c.c),
+                                c.k) AS rn
+            FROM {src} s {join}) WHERE rn = 1),
+    {prefix}u{i} AS (
+        SELECT {g}k, i AS pos,
+               CAST(SUM(CAST(v[i] AS DECIMAL(16,6))) AS DOUBLE)
+                   / COUNT(*) AS m
+        FROM {prefix}a{i}, LATERAL UNNEST(generate_series(1, len(v))) t(i)
+        GROUP BY {g}k, i),
+    {prefix}c{i} AS (
+        SELECT {g}k, LIST(m ORDER BY pos) AS c FROM {prefix}u{i} GROUP BY {g}k)""")
+    return ",".join(ctes)
+
+
 def ivf_quantizer(e: DataFrame) -> DataFrame:
-    """Deterministic coarse quantizer as PURE DATAFLOW: IVF_ITERS Lloyd
-    rounds over the bounded training relation (vec_id < IVF_TRAIN_SAMPLE
-    — the quantizer needs O(cells) representative points, not the corpus;
-    FAISS trains on ~30-256 points per centroid, and at 100 TB the
-    training relation is still ≤2048 rows). Returns (k, c double[]).
+    """Deterministic coarse quantizer as PURE DATAFLOW: IVF_ITERS
+    :func:`lloyd` rounds over the bounded training relation (vec_id <
+    IVF_TRAIN_SAMPLE — the quantizer needs O(cells) representative
+    points, not the corpus; FAISS trains on ~30-256 points per centroid,
+    and at 100 TB the training relation is still ≤2048 rows). Returns
+    (k, c double[]).
 
     This replaces the r2-r6 driver-side numpy Lloyd: same algorithm, but
-    expressed in the decimal-exact relational algebra ``kmeans_assign``
-    proved cross-engine — assign is a broadcast of the C-row centroid
-    relation with the min-struct argmin over the shared sequential double
-    fold (map-side partial agg, and v carried through first(): exact,
-    since v is functionally dependent on the vec_id group key — no
-    join-back shuffle); update is the order-free decimal(16,6) mean per
-    (cell, dim). The DuckDB oracle reproduces every centroid
-    bit-for-bit, so the WHOLE IVF query is hash-checked instead of
-    rows-only. Seeding: the IVF_CELLS smallest vec_ids, k = vec_id (the
-    oracle CTE c0). An emptied cell drops out of the next round on both
-    engines (the numpy version kept its stale centroid — spec
-    simplification, identical both sides). Training cost is
-    scale-invariant: the sample never grows, so at 100 TB it is a ~2 s
-    constant ahead of the corpus-sized passes.
+    expressed in the decimal-exact relational algebra of :func:`lloyd`,
+    so the DuckDB oracle reproduces every centroid bit-for-bit and the
+    WHOLE IVF query is hash-checked instead of rows-only. Seeding: the
+    IVF_CELLS smallest vec_ids, k = vec_id (the oracle CTE ``ic0``). An
+    emptied cell drops out of the next round on both engines (the numpy
+    version kept its stale centroid — spec simplification, identical
+    both sides). Training cost is scale-invariant: the sample never
+    grows, so at 100 TB it is a ~2 s constant ahead of the corpus-sized
+    passes.
 
     Rejected alternatives (measured at sf0.1): inlining centroids as
     plan literals — the lsh_signatures fixed-planes trick — loses badly
@@ -460,8 +569,7 @@ def ivf_quantizer(e: DataFrame) -> DataFrame:
     of codegen into interpreted HOF evaluation) or flat least() with
     per-round driver reshaping (6.7 s: megabyte expression trees
     recompiled and redeserialized per task per pass); the broadcast join
-    keeps the fold inside codegen and the plan small. The round lineage
-    is LINEAR, so rounds stay one lazy plan and only the ends
+    keeps the fold inside codegen and the plan small. Only the ends
     materialize (training relation, final centroids)."""
     # compute-spread before the checkpoint: the filtered sample is one
     # scan partition (single parquet file locally; one row-group slice at
@@ -473,38 +581,10 @@ def ivf_quantizer(e: DataFrame) -> DataFrame:
         .repartition(n, F.col("vec_id"))
         .localCheckpoint()
     )
-    cents = s.filter(F.col("vec_id") < IVF_CELLS).select(
+    seeds = s.filter(F.col("vec_id") < IVF_CELLS).select(
         F.col("vec_id").alias("k"), F.col("v").alias("c")
     )
-    for _ in range(IVF_ITERS):
-        assigned = (
-            s.crossJoin(F.broadcast(_with_cc(cents)))
-            .withColumn("score", _cell_score())
-            .groupBy("vec_id")
-            .agg(
-                F.min(F.struct("score", "k")).alias("b"),
-                F.first("v").alias("v"),
-            )
-            .select(F.col("b.k").alias("k"), "v")
-        )
-        cents = (
-            assigned.select("k", F.posexplode("v").alias("pos", "x"))
-            .groupBy("k", "pos")
-            .agg(
-                (
-                    F.sum(F.col("x").cast("decimal(16,6)")).cast("double")
-                    / F.count("*")
-                ).alias("m")
-            )
-            .groupBy("k")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda st: st["m"],
-                ).alias("c")
-            )
-        )
-    return cents.localCheckpoint()  # bounded: ≤ IVF_CELLS rows
+    return lloyd(s, seeds, IVF_ITERS).localCheckpoint()  # ≤ IVF_CELLS rows
 
 
 def ivf_centroids(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
@@ -528,29 +608,22 @@ def ivf_assign(e: DataFrame, cents: DataFrame) -> DataFrame:
     probe reads only its cells' partitions instead of the corpus.
 
     r15 A/B (guide §4.2, VERDICT r14 item 5): a bit-exact numpy
-    mapInArrow twin was measured (plans/r15/ab_ann.py + ab_focused.py) —
+    mapInArrow twin was measured (OPTIMIZATION_r15.md) —
     kernel 1.23-1.51 s vs relational 1.14-1.15 s min-of-8/10 for
     ann_ivf. The fixed Python-boundary roundtrip outweighs ONE pass's
     exchange savings at any per-pass volume this small, so the kernel
     was adopted only where it collapses TWO passes (ivfpq_index /
     ivfpq_residual_index, +24-28%); this single-pass assign stays
     relational."""
-    best = (
-        e.crossJoin(F.broadcast(_with_cc(cents)))
-        .withColumn("score", _cell_score())
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("score", "k")).alias("b"))
+    return nearest(e, cents).select(
+        "vec_id", F.col("k").cast("int").alias("cell")
     )
-    return best.select("vec_id", F.col("b.k").cast("int").alias("cell"))
 
 
 def _probe_cells(e: DataFrame, cents: DataFrame, n: int) -> DataFrame:
     """Per query vector: its ``n`` nearest cells (query relation is
     N_QUERIES rows — a row_number window over C·|Q| rows is free)."""
-    d = (
-        e.crossJoin(F.broadcast(_with_cc(cents)))
-        .withColumn("score", _cell_score())
-    )
+    d = e.crossJoin(F.broadcast(_with_dcc(cents))).withColumn("score", _score())
     w = Window.partitionBy("vec_id").orderBy("score", "k")
     return (
         d.withColumn("rn", F.row_number().over(w))
@@ -618,53 +691,24 @@ def q_similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_train_ctes(prefix: str = "") -> str:
-    """CTE fragment ``s, c0, {p}a1, {p}u1, c1, …`` ending in
-    ``c{IVF_ITERS}`` — the unrolled bounded Lloyd chain (the
-    kmeans_assign oracle pattern). Assumes an ``e AS (vec_id, v)`` CTE
-    is already defined. Round CTEs take a ``prefix`` so the fragment
-    composes with the PQ training chain (which owns the bare
-    ``a{i}``/``u{i}`` names) inside the IVF-PQ oracle; each chained CTE
-    is referenced exactly once (linear — the exponential-inlining trap
-    does not apply; ``s`` is a cheap base filter)."""
-    sdist = (
-        "list_dot_product(c.c, c.c)"
-        " - 2 * list_dot_product(s.v, c.c)"
-    )
-    rounds = []
-    prev_c = "c0"
-    for i in range(1, IVF_ITERS + 1):
-        rounds.append(f"""
-    {prefix}a{i} AS (
-        SELECT vec_id, k FROM (
-            SELECT s.vec_id, c.k,
-                   ROW_NUMBER() OVER (PARTITION BY s.vec_id
-                                      ORDER BY {sdist}, c.k) AS rn
-            FROM s CROSS JOIN {prev_c} c) WHERE rn = 1),
-    {prefix}u{i} AS (
-        SELECT a.k, i AS pos,
-               CAST(SUM(CAST(s.v[i] AS DECIMAL(16,6))) AS DOUBLE)
-                   / COUNT(*) AS m
-        FROM {prefix}a{i} a JOIN s USING (vec_id),
-             LATERAL UNNEST(generate_series(1, len(s.v))) t(i)
-        GROUP BY a.k, i),
-    c{i} AS (SELECT k, LIST(m ORDER BY pos) AS c
-             FROM {prefix}u{i} GROUP BY k)""")
-        prev_c = f"c{i}"
+def _ivf_train_ctes() -> str:
+    """CTE fragment ``s, ic0, ia1, iu1, ic1, …`` ending in
+    :data:`_IVF_FINAL_C` — the bounded training sample and its
+    :func:`lloyd_ctes` chain. Assumes an ``e AS (vec_id, v)`` CTE is
+    already defined."""
     return f"""
-    s AS (SELECT vec_id, v FROM e WHERE vec_id < {IVF_TRAIN_SAMPLE}),
-    c0 AS (SELECT vec_id AS k, v AS c FROM s
-           WHERE vec_id < {IVF_CELLS}),{",".join(rounds)}"""
+    s AS (SELECT vec_id, v FROM e WHERE vec_id < {IVF_TRAIN_SAMPLE}),{
+        lloyd_ctes("s", IVF_CELLS, IVF_ITERS, "i")}"""
 
 
-_IVF_FINAL_C = f"c{IVF_ITERS}"
+_IVF_FINAL_C = f"ic{IVF_ITERS}"
 
 
 def _ann_ivf_sql() -> str:
     """DuckDB twin of the full IVF pipeline: unrolled Lloyd rounds on the
     bounded training CTE (:func:`_ivf_train_ctes`), one assignment pass,
     per-query probe ranking, exact cosine rerank. The cell score is the
-    TWO-term ||c||² - 2 v·c (see _cell_score — must match the Spark
+    TWO-term ||c||² - 2 v·c (see _score — must match the Spark
     expression, not merely its argmin)."""
     dist = (
         "list_dot_product(c.c, c.c)"
@@ -1177,127 +1221,69 @@ SQL_SIMILARITY_MMR = _mmr_sql()
 
 
 KMEANS_K = 8
-KMEANS_ITERS = 2
+KMEANS_ITERS = 2  # assignment passes: KMEANS_ITERS - 1 Lloyd update rounds,
+#                   then the final assignment that is reported
 
 
-def kmeans_assign(
-    emb: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITERS
-) -> DataFrame:
+def kmeans_assign(emb: DataFrame, k: int = KMEANS_K) -> DataFrame:
     """Distributed k-means (Lloyd), fixed iteration count, fully
     deterministic — the clustering pass a corpus pipeline runs to build
     IVF cells, dedup buckets, or topic groups over an embedding column.
 
-    Every round is two distributed relational steps: ASSIGN — cross join
-    against the K-row centroid relation (broadcast; K·|corpus| narrow
-    rows, argmin as min(struct(dist, k)) so ties take the smallest
-    cluster id) with distances from the shared sequential double fold
-    (dist² = |v|² − 2v·c + |c|², each dot bit-identical to DuckDB's
-    list_dot_product); UPDATE — posexplode to (cluster, dim) cells and a
-    decimal-exact mean per cell (the same order-free quantized sums as
-    similarity_centroids), K·D output rows rebuilt into arrays by
-    sorted collect. No driver loop state: iterations unroll into one
-    lazy plan; K and iters are small constants, so plan depth stays
-    shallow while every data-sized step is a hash shuffle or broadcast
-    join. Seeding is the K smallest vec_ids (deterministic, matching the
-    oracle CTE); an empty cluster simply drops out of the next round on
-    both engines. At 100 TB: same plan, with the centroid relation still
-    K rows — the classic MLlib shape expressed in pure DataFrame algebra.
+    KMEANS_ITERS - 1 :func:`lloyd` rounds, then one final
+    :func:`nearest` pass: assignment is a cross join against the K-row
+    centroid relation (broadcast; argmin as min(struct(score, k)) so
+    ties take the smallest cluster id) and the update is the
+    decimal-exact mean per (cluster, dim), K·D rows rebuilt into arrays
+    by sorted collect. The reported dist_sq is the true squared distance
+    ||v||² + (||c||² − 2v·c): the shared two-term score plus the
+    per-vector ||v||² fold, carried through the final argmin. No driver
+    loop state: rounds unroll into one lazy plan; K and the round count
+    are small constants, so plan depth stays shallow while every
+    data-sized step is a hash shuffle or broadcast join. Seeding is the
+    K smallest vec_ids (deterministic, matching the oracle CTE ``kc0``);
+    an empty cluster simply drops out of the next round on both engines.
+    At 100 TB: same plan, with the centroid relation still K rows — the
+    classic MLlib shape expressed in pure DataFrame algebra.
     """
-    # e is re-derived by each consumer (2·iters + 1 references): measured
-    # A/B at sf0.1 put scratch-parquet staging at 2.48 s vs 1.85 s for
-    # the narrow recompute — the staging write costs more than the saved
-    # scan+fold on a compact embedding table. At real index scale the
-    # trade flips exactly as it did for shingle sets (stage once, read
-    # thrice); see BASELINE.md.
+    # e is re-derived by each consumer (KMEANS_ITERS + 1 references: the
+    # seeds and every assignment pass):
+    # measured A/B at sf0.1 put scratch-parquet staging at 2.48 s vs
+    # 1.85 s for the narrow recompute — the staging write costs more
+    # than the saved scan+fold on a compact embedding table. At real
+    # index scale the trade flips exactly as it did for shingle sets
+    # (stage once, read thrice); see BASELINE.md.
     e = emb.select("vec_id", to_double(F.col("embedding")).alias("v"))
     e = e.select("vec_id", "v", dot(F.col("v"), F.col("v")).alias("dvv"))
-    cents = (
-        e.filter(F.col("vec_id") < k)
-        .select(F.col("vec_id").alias("k"), F.col("v").alias("c"))
+    seeds = e.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("k"), F.col("v").alias("c")
     )
-
-    def assign(cents_df: DataFrame) -> DataFrame:
-        cc = cents_df.withColumn("dcc", dot(F.col("c"), F.col("c")))
-        d = (
-            e.crossJoin(F.broadcast(cc))
-            .withColumn("dvc", dot(F.col("v"), F.col("c")))
-            .withColumn(
-                "dist", F.col("dvv") - 2 * F.col("dvc") + F.col("dcc")
-            )
-        )
-        best = d.groupBy("vec_id").agg(F.min(F.struct("dist", "k")).alias("b"))
-        return best.select(
-            "vec_id", F.col("b.k").alias("k"), F.col("b.dist").alias("dist")
-        )
-
-    def update(assigned: DataFrame) -> DataFrame:
-        cells = (
-            assigned.join(e, "vec_id")
-            .select("k", F.posexplode("v").alias("pos", "x"))
-            .groupBy("k", "pos")
-            .agg(
-                (
-                    F.sum(F.col("x").cast("decimal(16,6)")).cast("double")
-                    / F.count("*")
-                ).alias("m")
-            )
-        )
-        return cells.groupBy("k").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("c")
-        )
-
-    for _ in range(iters - 1):
-        cents = update(assign(cents))
-    out = assign(cents)
-    return out.select(
+    cents = lloyd(e, seeds, KMEANS_ITERS - 1)
+    return nearest(e, cents, carry=("dvv",)).select(
         "vec_id",
         F.col("k").cast("bigint").alias("cluster"),
-        F.round("dist", 6).alias("dist_sq"),
+        F.round(F.col("dvv") + F.col("score"), 6).alias("dist_sq"),
     )
 
 
 def q_similarity_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry binding: 2-round k-means over ``embeddings`` (K=8)."""
+    """Registry binding: 2-pass k-means over ``embeddings`` (K=8)."""
     return kmeans_assign(spread(load(spark, sf_dir, "embeddings"), "vec_id"))
 
 
 def _kmeans_sql() -> str:
-    dist = (
-        "list_dot_product(e.v, e.v)"
-        " - 2 * list_dot_product(e.v, c.c)"
-        " + list_dot_product(c.c, c.c)"
-    )
-    rounds = []
-    prev_c = "c0"
-    for i in range(1, KMEANS_ITERS):
-        rounds.append(f"""
-    a{i} AS (
-        SELECT vec_id, k, dist FROM (
-            SELECT e.vec_id, c.k, {dist} AS dist,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                                      ORDER BY {dist}, c.k) AS rn
-            FROM e CROSS JOIN {prev_c} c) WHERE rn = 1),
-    u{i} AS (
-        SELECT a.k, i AS pos,
-               CAST(SUM(CAST(e.v[i] AS DECIMAL(16,6))) AS DOUBLE) / COUNT(*) AS m
-        FROM a{i} a JOIN e USING (vec_id),
-             LATERAL UNNEST(generate_series(1, len(e.v))) t(i)
-        GROUP BY a.k, i),
-    c{i} AS (SELECT k, LIST(m ORDER BY pos) AS c FROM u{i} GROUP BY k)""")
-        prev_c = f"c{i}"
+    score = "list_dot_product(c.c, c.c) - 2 * list_dot_product(e.v, c.c)"
     return f"""
     WITH e AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    c0 AS (SELECT vec_id AS k, v AS c FROM e WHERE vec_id < {KMEANS_K}),{",".join(rounds)}
-    SELECT vec_id, CAST(k AS BIGINT) AS cluster, ROUND(dist, 6) AS dist_sq
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),{
+        lloyd_ctes("e", KMEANS_K, KMEANS_ITERS - 1, "k")}
+    SELECT vec_id, CAST(k AS BIGINT) AS cluster, ROUND(dvv + score, 6) AS dist_sq
     FROM (
-        SELECT e.vec_id, c.k, {dist} AS dist,
+        SELECT e.vec_id, c.k, list_dot_product(e.v, e.v) AS dvv,
+               {score} AS score,
                ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {dist}, c.k) AS rn
-        FROM e CROSS JOIN {prev_c} c) WHERE rn = 1
+                                  ORDER BY {score}, c.k) AS rn
+        FROM e CROSS JOIN kc{KMEANS_ITERS - 1} c) WHERE rn = 1
 """
 
 
@@ -1411,8 +1397,8 @@ def q_similarity_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth_n = truth.agg(F.count("*").alias("n_truth"))
     qd = (
         plain.filter(F.col("vec_id") < N_QUERIES)
-        .crossJoin(F.broadcast(_with_cc(cents)))
-        .withColumn("score", _cell_score())
+        .crossJoin(F.broadcast(_with_dcc(cents)))
+        .withColumn("score", _score())
     )
     wq = Window.partitionBy("vec_id").orderBy("score", "k")
     probes_all = (

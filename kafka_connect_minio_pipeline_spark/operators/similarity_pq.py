@@ -23,15 +23,16 @@ from .similarity import (
     N_QUERIES,
     SQL_SIMILARITY_TOPK_BATCH,
     _IVF_FINAL_C,
-    _cell_score,
     _ivf_relation,
     _ivf_train_ctes,
     _probe_cells,
-    _with_cc,
+    _score,
+    _with_dcc,
     _with_norms,
-    ivf_assign,
     ivf_centroids,
-    ivf_quantizer,
+    lloyd,
+    lloyd_ctes,
+    nearest,
     q_similarity_topk_batch,
 )
 
@@ -42,51 +43,44 @@ from .similarity import (
 PQ_M = 8  # subspaces (64-dim vectors → 8 × 8-dim sub-vectors)
 PQ_SUBDIM = 8
 PQ_K = 16  # codes per subspace codebook (M·K = 128 codebook rows total)
-PQ_ITERS = 2  # Lloyd rounds per subspace (same budget as ivf_quantizer)
+PQ_ITERS = 2  # Lloyd update rounds per subspace (same budget as IVF_ITERS)
 PQ_TRAIN_SAMPLE = 2048  # bounded training relation (FAISS-style)
 ADC_SHORTLIST = 32  # ADC candidates kept per query for the exact rerank
 
 
-def _pq_subs(e: DataFrame) -> DataFrame:
-    """(vec_id, sub int, sv double[]) — every vector split into its PQ_M
-    contiguous sub-vectors. One posexplode of an array-of-slices: narrow,
-    codegen-friendly, no shuffle."""
-    return e.select(
-        "vec_id",
-        F.posexplode(
-            F.array(
-                *[F.slice("v", m * PQ_SUBDIM + 1, PQ_SUBDIM) for m in range(PQ_M)]
-            )
-        ).alias("sub", "sv"),
+def _sub_slices(col: str) -> F.Column:
+    """array of the PQ_M contiguous sub-vector slices of ``col``."""
+    return F.array(
+        *[F.slice(col, m * PQ_SUBDIM + 1, PQ_SUBDIM) for m in range(PQ_M)]
     )
 
 
-def _code_score() -> F.Column:
-    """argmin_c ||sv-c||² via the two-term ||c||² - 2 sv·c (the per-row
-    ||sv||² shift cancels — same rationale and exact expression shape as
-    :func:`_cell_score`, which the oracle must mirror term-for-term)."""
-    return F.col("dcc") - 2 * dot(F.col("sv"), F.col("c"))
+def _pq_subs(e: DataFrame) -> DataFrame:
+    """(vec_id, sub int, v double[]) — every vector split into its PQ_M
+    contiguous sub-vectors. One posexplode of an array-of-slices: narrow,
+    codegen-friendly, no shuffle."""
+    return e.select("vec_id", F.posexplode(_sub_slices("v")).alias("sub", "v"))
 
 
-def _with_dcc(books: DataFrame) -> DataFrame:
-    return books.withColumn("dcc", dot(F.col("c"), F.col("c")))
+def _keyed(books: DataFrame) -> DataFrame:
+    """(sub, k, c): a codebook in the centroid shape :func:`nearest` reads."""
+    return books.withColumnRenamed("code", "k")
 
 
 def pq_codebooks(e: DataFrame) -> DataFrame:
-    """Per-subspace codebooks as pure dataflow: PQ_ITERS Lloyd rounds over
-    the bounded training relation, all PQ_M subspaces trained in ONE plan
-    (the subspace id is just another group key). Returns
+    """Per-subspace codebooks as pure dataflow: PQ_ITERS :func:`lloyd`
+    rounds over the bounded training relation, all PQ_M subspaces trained
+    in ONE plan (the subspace id is the ``group`` key). Returns
     (sub, code, c double[]) — ≤ PQ_M·PQ_K rows.
 
     Product quantization (Jégou et al., PAMI 2011 — the FAISS IVF-PQ
     design) is the 100 TB memory story for vector search: an M-byte code
     per vector replaces the 4·D-byte float embedding (here 8 codes vs
     256 bytes, 32×), and training cost is scale-invariant because the
-    sample never grows. Same decimal-exact algebra as
-    :func:`ivf_quantizer` — broadcast codebook join, min-struct argmin
-    over the shared sequential fold, order-free decimal(16,6) means — so
-    the DuckDB oracle reproduces every codebook bit-for-bit. Seeding:
-    per subspace, the PQ_K smallest vec_ids' sub-vectors (code =
+    sample never grows. The trainer is the one :func:`ivf_quantizer`
+    and ``kmeans_assign`` use, so the DuckDB oracle (:func:`lloyd_ctes`
+    with the same group key) reproduces every codebook bit-for-bit.
+    Seeding: per subspace, the PQ_K smallest vec_ids' sub-vectors (code =
     vec_id); an emptied code drops out of later rounds on both engines."""
     n = e.sparkSession.sparkContext.defaultParallelism
     s = (
@@ -94,40 +88,11 @@ def pq_codebooks(e: DataFrame) -> DataFrame:
         .repartition(n, F.col("vec_id"), F.col("sub"))
         .localCheckpoint()
     )
-    books = s.filter(F.col("vec_id") < PQ_K).select(
-        "sub", F.col("vec_id").alias("code"), F.col("sv").alias("c")
+    seeds = s.filter(F.col("vec_id") < PQ_K).select(
+        "sub", F.col("vec_id").alias("k"), F.col("v").alias("c")
     )
-    for _ in range(PQ_ITERS):
-        assigned = (
-            s.join(F.broadcast(_with_dcc(books)), "sub")
-            .withColumn("score", _code_score())
-            .groupBy("vec_id", "sub")
-            .agg(
-                F.min(F.struct("score", "code")).alias("b"),
-                # sv is functionally dependent on the (vec_id, sub) group
-                # key — first() is exact, no join-back shuffle
-                F.first("sv").alias("sv"),
-            )
-            .select("sub", F.col("b.code").alias("code"), "sv")
-        )
-        books = (
-            assigned.select("sub", "code", F.posexplode("sv").alias("pos", "x"))
-            .groupBy("sub", "code", "pos")
-            .agg(
-                (
-                    F.sum(F.col("x").cast("decimal(16,6)")).cast("double")
-                    / F.count("*")
-                ).alias("m")
-            )
-            .groupBy("sub", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda st: st["m"],
-                ).alias("c")
-            )
-        )
-    return books.localCheckpoint()  # bounded: ≤ PQ_M·PQ_K rows
+    books = lloyd(s, seeds, PQ_ITERS, group=("sub",))
+    return books.withColumnRenamed("k", "code").localCheckpoint()  # ≤ M·K rows
 
 
 def pq_books(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
@@ -153,20 +118,13 @@ def pq_encode(e: DataFrame, books: DataFrame) -> DataFrame:
 
     r15 A/B (guide §4.2, VERDICT r14 item 5): the bit-exact numpy
     mapInArrow twin measured FLAT for ann_adc (kernel 1.65-1.86 vs
-    relational 1.59-1.73 min-of-8/10, plans/r15/ab_ann.py +
-    ab_focused.py) — below the >15% adoption bar; the kernel pays off
+    relational 1.59-1.73 min-of-8/10, OPTIMIZATION_r15.md) — below the
+    >15% adoption bar; the kernel pays off
     only where it collapses the assign AND encode passes into one
     (ivfpq_index / ivfpq_residual_index), so this single-pass encode
     stays relational."""
-    best = (
-        _pq_subs(e)
-        .join(F.broadcast(_with_dcc(books)), "sub")
-        .withColumn("score", _code_score())
-        .groupBy("vec_id", "sub")
-        .agg(F.min(F.struct("score", "code")).alias("b"))
-    )
-    return best.select(
-        "vec_id", "sub", F.col("b.code").cast("int").alias("code")
+    return nearest(_pq_subs(e), _keyed(books), group=("sub",)).select(
+        "vec_id", "sub", F.col("k").cast("int").alias("code")
     )
 
 
@@ -178,30 +136,23 @@ def q_embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar-int8 study; PQ is the FAISS-style vector-codebook variant).
 
     The corpus-sized work is one encode pass (broadcast codebook,
-    two-term argmin); distortion adds the per-row ||sv||² fold so the
-    reported number is the TRUE squared distance ||sv||² + (||c||² -
-    2 sv·c). The mean is the order-free decimal(16,6) sum, rounded
-    once — hash-exact cross-engine."""
+    two-term argmin); distortion adds the per-row ||sv||² fold, carried
+    through the argmin, so the reported number is the TRUE squared
+    distance ||sv||² + (||c||² - 2 sv·c). The mean is the order-free
+    decimal(16,6) sum, rounded once — hash-exact cross-engine."""
     plain = load(spark, sf_dir, "embeddings").select(
         "vec_id", to_double(F.col("embedding")).alias("v")
     )
     books = pq_books(spark, sf_dir, plain)
-    best = (
-        _pq_subs(_ivf_relation(spark, sf_dir))
-        .withColumn("dsv", dot(F.col("sv"), F.col("sv")))
-        .join(F.broadcast(_with_dcc(books)), "sub")
-        .withColumn("score", _code_score())
-        .groupBy("vec_id", "sub")
-        .agg(
-            F.min(F.struct("score", "code")).alias("b"),
-            F.first("dsv").alias("dsv"),
-        )
+    subs = _pq_subs(_ivf_relation(spark, sf_dir)).withColumn(
+        "dsv", dot(F.col("v"), F.col("v"))
     )
+    best = nearest(subs, _keyed(books), group=("sub",), carry=("dsv",))
     return (
         best.select(
             F.col("sub").cast("int").alias("sub"),
-            F.col("b.code").cast("int").alias("code"),
-            (F.col("dsv") + F.col("b.score")).alias("d"),
+            F.col("k").cast("int").alias("code"),
+            (F.col("dsv") + F.col("score")).alias("d"),
         )
         .groupBy("sub", "code")
         .agg(
@@ -215,60 +166,37 @@ def q_embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SLICE = f"list_slice(v, m * {PQ_SUBDIM} + 1, (m + 1) * {PQ_SUBDIM})"
+
+
 def _pq_train_sql() -> str:
-    """Shared oracle CTE chain ending in the trained codebook ``b{last}``
-    plus the corpus subspace relation ``csubs``. Linear references only
-    (each round CTE consumed exactly once; the cheap base CTEs are the
-    sole multi-reference ones) — the exponential-inlining trap doesn't
-    apply."""
-    score = "list_dot_product(b.c, b.c) - 2 * list_dot_product(s.sv, b.c)"
-    rounds = []
-    prev_b = "b0"
-    for i in range(1, PQ_ITERS + 1):
-        rounds.append(f"""
-    a{i} AS (
-        SELECT vec_id, sub, code FROM (
-            SELECT s.vec_id, s.sub, b.code,
-                   ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
-                                      ORDER BY {score}, b.code) AS rn
-            FROM subs s JOIN {prev_b} b USING (sub)) WHERE rn = 1),
-    u{i} AS (
-        SELECT a.sub, a.code, i AS pos,
-               CAST(SUM(CAST(s.sv[i] AS DECIMAL(16,6))) AS DOUBLE)
-                   / COUNT(*) AS m
-        FROM a{i} a JOIN subs s ON a.vec_id = s.vec_id AND a.sub = s.sub,
-             LATERAL UNNEST(generate_series(1, {PQ_SUBDIM})) t(i)
-        GROUP BY a.sub, a.code, i),
-    b{i} AS (SELECT sub, code, LIST(m ORDER BY pos) AS c
-             FROM u{i} GROUP BY sub, code)""")
-        prev_b = f"b{i}"
-    slice_expr = (
-        f"list_slice(v, m * {PQ_SUBDIM} + 1, (m + 1) * {PQ_SUBDIM})"
-    )
+    """Shared oracle CTE chain ending in the trained codebook
+    :data:`_PQ_FINAL_B` (sub, k, c) plus the corpus subspace relation
+    ``csubs`` (vec_id, sub, v): the PQ :func:`lloyd_ctes` chain over the
+    bounded sample ``subs``, prefixed ``p``."""
     return f"""
     WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
     csubs AS (
-        SELECT vec_id, CAST(m AS INTEGER) AS sub, {slice_expr} AS sv
+        SELECT vec_id, CAST(m AS INTEGER) AS sub, {_SLICE} AS v
         FROM e, LATERAL UNNEST(generate_series(0, {PQ_M - 1})) t(m)),
-    subs AS (SELECT * FROM csubs WHERE vec_id < {PQ_TRAIN_SAMPLE}),
-    b0 AS (SELECT sub, vec_id AS code, sv AS c FROM subs
-           WHERE vec_id < {PQ_K}),{",".join(rounds)}"""
+    subs AS (SELECT * FROM csubs WHERE vec_id < {PQ_TRAIN_SAMPLE}),{
+        lloyd_ctes("subs", PQ_K, PQ_ITERS, "p", ("sub",))}"""
 
 
-_PQ_FINAL_B = f"b{PQ_ITERS}"
+_PQ_FINAL_B = f"pc{PQ_ITERS}"
 
 SQL_EMBEDDING_PQ = f"""{_pq_train_sql()},
     best AS (
         SELECT sub, code, dsv + score AS d FROM (
-            SELECT s.sub, b.code,
-                   list_dot_product(s.sv, s.sv) AS dsv,
+            SELECT s.sub, b.k AS code,
+                   list_dot_product(s.v, s.v) AS dsv,
                    list_dot_product(b.c, b.c)
-                       - 2 * list_dot_product(s.sv, b.c) AS score,
+                       - 2 * list_dot_product(s.v, b.c) AS score,
                    ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
                        ORDER BY list_dot_product(b.c, b.c)
-                                - 2 * list_dot_product(s.sv, b.c),
-                                b.code) AS rn
+                                - 2 * list_dot_product(s.v, b.c),
+                                b.k) AS rn
             FROM csubs s JOIN {_PQ_FINAL_B} b USING (sub)) WHERE rn = 1)
     SELECT CAST(sub AS INTEGER) AS sub, CAST(code AS INTEGER) AS code,
            CAST(COUNT(*) AS BIGINT) AS n_vectors,
@@ -296,7 +224,7 @@ def q_similarity_ann_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     FAISS search shape (approximate scan → exact rerank of a bounded
     candidate set). The per-query ||q_m||² terms are a constant shift
     that cancels in ADC ranking, so both engines compute the
-    rank-equivalent two-term form (same rationale as _cell_score);
+    rank-equivalent two-term form (same rationale as _score);
     partials are cast to decimal(16,6) BEFORE the sum so the M-way
     addition is order-free — shortlist membership and the final scores
     are hash-exact cross-engine. At scale nothing but the narrow code
@@ -307,7 +235,7 @@ def q_similarity_ann_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     books = pq_books(spark, sf_dir, plain)
     codes = pq_encode(_ivf_relation(spark, sf_dir), books)
     qsubs = _pq_subs(plain.filter(F.col("vec_id") < N_QUERIES)).select(
-        F.col("vec_id").alias("query_id"), "sub", "sv"
+        F.col("vec_id").alias("query_id"), "sub", "v"
     )
     lut = (
         qsubs.join(_with_dcc(books), "sub")
@@ -315,7 +243,7 @@ def q_similarity_ann_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "sub",
             "code",
-            _code_score().cast("decimal(16,6)").alias("d"),
+            _score().cast("decimal(16,6)").alias("d"),
         )
     )
     scored = (
@@ -358,16 +286,16 @@ def q_similarity_ann_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_ANN_ADC = f"""{_pq_train_sql()},
     codes AS (
         SELECT vec_id, sub, code FROM (
-            SELECT s.vec_id, s.sub, b.code,
+            SELECT s.vec_id, s.sub, b.k AS code,
                    ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
                        ORDER BY list_dot_product(b.c, b.c)
-                                - 2 * list_dot_product(s.sv, b.c),
-                                b.code) AS rn
+                                - 2 * list_dot_product(s.v, b.c),
+                                b.k) AS rn
             FROM csubs s JOIN {_PQ_FINAL_B} b USING (sub)) WHERE rn = 1),
     lut AS (
-        SELECT q.vec_id AS query_id, q.sub, b.code,
+        SELECT q.vec_id AS query_id, q.sub, b.k AS code,
                CAST(list_dot_product(b.c, b.c)
-                    - 2 * list_dot_product(q.sv, b.c) AS DECIMAL(16,6)) AS d
+                    - 2 * list_dot_product(q.v, b.c) AS DECIMAL(16,6)) AS d
         FROM (SELECT * FROM csubs WHERE vec_id < {N_QUERIES}) q
         JOIN {_PQ_FINAL_B} b USING (sub)),
     scored AS (
@@ -469,7 +397,7 @@ def q_similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "sub",
             "code",
-            _code_score().cast("decimal(16,6)").alias("d"),
+            _score().cast("decimal(16,6)").alias("d"),
         )
     )
     scored = (
@@ -512,11 +440,10 @@ def q_similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the combined oracle: the PQ training chain (e, csubs, subs, b*) plus the
-# IVF training chain (s, c0.., round CTEs prefixed "i" to avoid colliding
-# with the PQ rounds' bare a{i}/u{i}), then assignment, probes, codes, LUT,
-# ADC within probed cells, shortlist, exact rerank
-SQL_ANN_IVFPQ = f"""{_pq_train_sql()},{_ivf_train_ctes("i")},
+# the combined oracle: the PQ training chain (e, csubs, subs, pc*) plus the
+# IVF training chain (s, ic*), then assignment, probes, codes, LUT, ADC
+# within probed cells, shortlist, exact rerank
+SQL_ANN_IVFPQ = f"""{_pq_train_sql()},{_ivf_train_ctes()},
     assigned AS (
         SELECT vec_id, k AS cell FROM (
             SELECT e.vec_id, c.k,
@@ -536,16 +463,16 @@ SQL_ANN_IVFPQ = f"""{_pq_train_sql()},{_ivf_train_ctes("i")},
             CROSS JOIN {_IVF_FINAL_C} c) WHERE rn <= {IVF_PROBE}),
     codes AS (
         SELECT vec_id, sub, code FROM (
-            SELECT s.vec_id, s.sub, b.code,
+            SELECT s.vec_id, s.sub, b.k AS code,
                    ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
                        ORDER BY list_dot_product(b.c, b.c)
-                                - 2 * list_dot_product(s.sv, b.c),
-                                b.code) AS rn
+                                - 2 * list_dot_product(s.v, b.c),
+                                b.k) AS rn
             FROM csubs s JOIN {_PQ_FINAL_B} b USING (sub)) WHERE rn = 1),
     lut AS (
-        SELECT q.vec_id AS query_id, q.sub, b.code,
+        SELECT q.vec_id AS query_id, q.sub, b.k AS code,
                CAST(list_dot_product(b.c, b.c)
-                    - 2 * list_dot_product(q.sv, b.c) AS DECIMAL(16,6)) AS d
+                    - 2 * list_dot_product(q.v, b.c) AS DECIMAL(16,6)) AS d
         FROM (SELECT * FROM csubs WHERE vec_id < {N_QUERIES}) q
         JOIN {_PQ_FINAL_B} b USING (sub)),
     cand AS (
@@ -641,20 +568,10 @@ def residuals(e: DataFrame, cents: DataFrame) -> DataFrame:
     v − c_cell. Residuals are what FAISS's IndexIVFPQ quantizes by
     default (by_residual=True): within one cell they spread over a far
     smaller ball than raw vectors, so the same K codes per subspace buy
-    less distortion. One broadcast argmin (same shape as ivf_assign,
-    carrying v through first()) plus a 16-row broadcast join-back for
+    less distortion. One :func:`nearest` pass (carrying v) plus a 16-row broadcast join-back for
     the winning centroid; the subtraction is element-wise zip_with —
     exact IEEE, bit-identical to the oracle's list_transform."""
-    assigned = (
-        e.crossJoin(F.broadcast(_with_cc(cents)))
-        .withColumn("score", _cell_score())
-        .groupBy("vec_id")
-        .agg(
-            F.min(F.struct("score", "k")).alias("b"),
-            F.first("v").alias("v"),
-        )
-        .select("vec_id", F.col("b.k").alias("k"), "v")
-    )
+    assigned = nearest(e, cents, carry=("v",))
     return assigned.join(
         F.broadcast(cents.select("k", F.col("c").alias("cc"))), "k"
     ).select(
@@ -667,8 +584,8 @@ def residuals(e: DataFrame, cents: DataFrame) -> DataFrame:
 def pq_residual_books(
     spark: SparkSession, sf_dir: str, e: DataFrame, cents: DataFrame
 ) -> DataFrame:
-    """Train-once residual codebooks: the SAME decimal-exact Lloyd
-    trainer (:func:`pq_codebooks`), fed the residual relation of the
+    """Train-once residual codebooks: the SAME decimal-exact
+    :func:`pq_codebooks` trainer, fed the residual relation of the
     bounded training sample instead of raw vectors. Cache key carries
     both PQ and IVF hyperparameters (the codebooks depend on the coarse
     quantizer)."""
@@ -691,16 +608,6 @@ def pq_residual_books(
                 e.filter(F.col("vec_id") < PQ_TRAIN_SAMPLE), cents
             ).select("vec_id", "v")
         ),
-    )
-
-
-def _sub_slices(col: str) -> F.Column:
-    """array of the PQ_M contiguous sub-vector slices of ``col``."""
-    return F.array(
-        *[
-            F.slice(col, m * PQ_SUBDIM + 1, PQ_SUBDIM)
-            for m in range(PQ_M)
-        ]
     )
 
 
@@ -733,7 +640,7 @@ def q_similarity_ann_ivfpq_residual(
     order-free, shortlist then exact-cosine rerank. Both models come
     from the train-once cache; the coarse-distance addition `qnorm +
     (dcc − 2 q·c)` is parenthesized IDENTICALLY in the oracle (float
-    addition is not associative — the _cell_score discipline)."""
+    addition is not associative — the _score discipline)."""
     plain = load(spark, sf_dir, "embeddings").select(
         "vec_id", to_double(F.col("embedding")).alias("v")
     )
@@ -742,8 +649,8 @@ def q_similarity_ann_ivfpq_residual(
     idx = ivfpq_residual_index(_ivf_relation(spark, sf_dir), cents, books)
     qd = (
         plain.filter(F.col("vec_id") < N_QUERIES)
-        .crossJoin(F.broadcast(_with_cc(cents)))
-        .withColumn("score", _cell_score())
+        .crossJoin(F.broadcast(_with_dcc(cents)))
+        .withColumn("score", _score())
     )
     wq = Window.partitionBy("vec_id").orderBy("score", "k")
     probes = (
@@ -759,7 +666,7 @@ def q_similarity_ann_ivfpq_residual(
     qsubs = probes.select(
         "query_id",
         "cell",
-        F.posexplode(_sub_slices("rv")).alias("sub", "sv"),
+        F.posexplode(_sub_slices("rv")).alias("sub", "v"),
     )
     # explicit broadcast: qsubs descends from a window over a crossJoin,
     # so its size estimate is opaque and the ≤ M·K-row codebook side
@@ -769,7 +676,7 @@ def q_similarity_ann_ivfpq_residual(
         "cell",
         "sub",
         "code",
-        _code_score().cast("decimal(16,6)").alias("d"),
+        _score().cast("decimal(16,6)").alias("d"),
     )
     coarse = probes.select("query_id", "cell", "cd")
     scored = (
@@ -812,39 +719,8 @@ def q_similarity_ann_ivfpq_residual(
     )
 
 
-def _pq_round_ctes(subs: str, prefix: str) -> str:
-    """Unrolled PQ Lloyd rounds reading a given subspace CTE, all round
-    CTEs prefixed — the residual oracle trains over ``rsubs`` with
-    prefix ``r`` while the raw chain (:func:`_pq_train_sql`) keeps the
-    bare names. Linear references only."""
-    score = "list_dot_product(b.c, b.c) - 2 * list_dot_product(s.sv, b.c)"
-    rounds = []
-    prev_b = f"{prefix}b0"
-    for i in range(1, PQ_ITERS + 1):
-        rounds.append(f"""
-    {prefix}a{i} AS (
-        SELECT vec_id, sub, code FROM (
-            SELECT s.vec_id, s.sub, b.code,
-                   ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
-                                      ORDER BY {score}, b.code) AS rn
-            FROM {subs} s JOIN {prev_b} b USING (sub)) WHERE rn = 1),
-    {prefix}u{i} AS (
-        SELECT a.sub, a.code, i AS pos,
-               CAST(SUM(CAST(s.sv[i] AS DECIMAL(16,6))) AS DOUBLE)
-                   / COUNT(*) AS m
-        FROM {prefix}a{i} a
-        JOIN {subs} s ON a.vec_id = s.vec_id AND a.sub = s.sub,
-             LATERAL UNNEST(generate_series(1, {PQ_SUBDIM})) t(i)
-        GROUP BY a.sub, a.code, i),
-    {prefix}b{i} AS (SELECT sub, code, LIST(m ORDER BY pos) AS c
-                     FROM {prefix}u{i} GROUP BY sub, code)""")
-        prev_b = f"{prefix}b{i}"
-    return ",".join(rounds)
+_R_FINAL_B = f"rc{PQ_ITERS}"
 
-
-_R_FINAL_B = f"rb{PQ_ITERS}"
-
-_SLICE = f"list_slice(v, m * {PQ_SUBDIM} + 1, (m + 1) * {PQ_SUBDIM})"
 _CELL_ARGMIN = (
     "list_dot_product(c.c, c.c) - 2 * list_dot_product({side}.v, c.c)"
 )
@@ -867,7 +743,7 @@ if PQ_TRAIN_SAMPLE != IVF_TRAIN_SAMPLE:
 SQL_ANN_IVFPQ_RESIDUAL = f"""
     WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    {_ivf_train_ctes("i")},
+    {_ivf_train_ctes()},
     scell AS (
         SELECT vec_id, k, c FROM (
             SELECT s.vec_id, c.k, c.c,
@@ -880,10 +756,9 @@ SQL_ANN_IVFPQ_RESIDUAL = f"""
                               i -> s.v[i] - sc.c[i]) AS v
         FROM s JOIN scell sc USING (vec_id)),
     rsubs AS (
-        SELECT vec_id, CAST(m AS INTEGER) AS sub, {_SLICE} AS sv
-        FROM sres, LATERAL UNNEST(generate_series(0, {PQ_M - 1})) t(m)),
-    rb0 AS (SELECT sub, vec_id AS code, sv AS c FROM rsubs
-            WHERE vec_id < {PQ_K}),{_pq_round_ctes("rsubs", "r")},
+        SELECT vec_id, CAST(m AS INTEGER) AS sub, {_SLICE} AS v
+        FROM sres, LATERAL UNNEST(generate_series(0, {PQ_M - 1})) t(m)),{
+        lloyd_ctes("rsubs", PQ_K, PQ_ITERS, "r", ("sub",))},
     cassign AS (
         SELECT vec_id, k AS cell, c FROM (
             SELECT e.vec_id, c.k, c.c,
@@ -896,15 +771,15 @@ SQL_ANN_IVFPQ_RESIDUAL = f"""
                               i -> e.v[i] - a.c[i]) AS v
         FROM e JOIN cassign a USING (vec_id)),
     crsubs AS (
-        SELECT vec_id, cell, CAST(m AS INTEGER) AS sub, {_SLICE} AS sv
+        SELECT vec_id, cell, CAST(m AS INTEGER) AS sub, {_SLICE} AS v
         FROM cres, LATERAL UNNEST(generate_series(0, {PQ_M - 1})) t(m)),
     codes AS (
         SELECT vec_id, cell, sub, code FROM (
-            SELECT s.vec_id, s.cell, s.sub, b.code,
+            SELECT s.vec_id, s.cell, s.sub, b.k AS code,
                    ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
                        ORDER BY list_dot_product(b.c, b.c)
-                                - 2 * list_dot_product(s.sv, b.c),
-                                b.code) AS rn
+                                - 2 * list_dot_product(s.v, b.c),
+                                b.k) AS rn
             FROM crsubs s JOIN {_R_FINAL_B} b USING (sub)) WHERE rn = 1),
     qprobe AS (
         SELECT query_id, cell, c, cd FROM (
@@ -922,12 +797,12 @@ SQL_ANN_IVFPQ_RESIDUAL = f"""
                               i -> q.v[i] - p.c[i]) AS v
         FROM qprobe p JOIN e q ON q.vec_id = p.query_id),
     qrsubs AS (
-        SELECT query_id, cell, CAST(m AS INTEGER) AS sub, {_SLICE} AS sv
+        SELECT query_id, cell, CAST(m AS INTEGER) AS sub, {_SLICE} AS v
         FROM qres, LATERAL UNNEST(generate_series(0, {PQ_M - 1})) t(m)),
     lut AS (
-        SELECT q.query_id, q.cell, q.sub, b.code,
+        SELECT q.query_id, q.cell, q.sub, b.k AS code,
                CAST(list_dot_product(b.c, b.c)
-                    - 2 * list_dot_product(q.sv, b.c) AS DECIMAL(16,6)) AS d
+                    - 2 * list_dot_product(q.v, b.c) AS DECIMAL(16,6)) AS d
         FROM qrsubs q JOIN {_R_FINAL_B} b USING (sub)),
     scored AS (
         SELECT p.query_id, c.vec_id,

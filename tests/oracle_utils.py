@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import math
 from datetime import date, datetime
-from decimal import Decimal
+from decimal import ROUND_HALF_UP, Decimal
 
 import duckdb
 import numpy as np
@@ -140,3 +140,54 @@ def union_find_labels(pairs) -> dict:
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     return {n: find(n) for n in parent}
+
+
+def _seq_dot(a, b) -> float:
+    """functions.vectors.dot: products rounded once, folded in index
+    order from +0.0."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc
+
+
+def nearest_reference(points: dict, cents: dict) -> dict:
+    """{vec_id: (k, score)} with the engines' two-term score
+    ``dcc - 2·v·c``; ties go to the smallest k."""
+    dcc = {k: _seq_dot(c, c) for k, c in cents.items()}
+    out = {}
+    for vid, v in points.items():
+        best = None
+        for k in sorted(cents):
+            score = dcc[k] - 2 * _seq_dot(v, cents[k])
+            if best is None or score < best[1]:
+                best = (k, score)
+        out[vid] = best
+    return out
+
+
+def lloyd_reference(points: dict, seeds: dict, rounds: int) -> dict:
+    """Ground truth for every Lloyd trainer (IVF quantizer, PQ codebooks,
+    k-means): plain Python over {vec_id: [float]} points and {k: [float]}
+    seeds, returning {k: [float]} after ``rounds`` update rounds. The
+    update is the decimal(16,6) mean — each coordinate rounded half-up to
+    6 places from its shortest decimal repr (Spark's double→decimal
+    cast), summed exactly, then one double division by the count. A
+    centroid that wins no point drops out."""
+    q = Decimal("1e-6")
+    cents = dict(seeds)
+    for _ in range(rounds):
+        members: dict = {}
+        for vid, (k, _score) in nearest_reference(points, cents).items():
+            members.setdefault(k, []).append(points[vid])
+        cents = {
+            k: [
+                float(
+                    sum(Decimal(repr(x)).quantize(q, ROUND_HALF_UP) for x in col)
+                )
+                / len(vs)
+                for col in zip(*vs)
+            ]
+            for k, vs in members.items()
+        }
+    return cents

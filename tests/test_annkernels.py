@@ -18,15 +18,13 @@ from pyspark.sql import functions as F
 
 from kafka_connect_minio_pipeline_spark.operators import similarity, similarity_pq
 from kafka_connect_minio_pipeline_spark.operators.similarity import (
-    _cell_score,
     _ivf_relation,
-    _with_cc,
     ivf_centroids,
+    nearest,
 )
 from kafka_connect_minio_pipeline_spark.operators.similarity_pq import (
-    _code_score,
+    _keyed,
     _sub_slices,
-    _with_dcc,
     pq_books,
     pq_residual_books,
     residuals,
@@ -44,28 +42,25 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _encode(subs, books):
+    """Relational PQ encode of (vec_id, cell, sub, v) sub-vectors."""
+    return nearest(subs, _keyed(books), group=("sub",), carry=("cell",)).select(
+        "vec_id", "cell", "sub", F.col("k").cast("int").alias("code")
+    )
+
+
 def test_ivfpq_index_kernel_matches_relational(spark, sf_dir):
     e = _ivf_relation(spark, sf_dir)
     plain = _plain(spark, sf_dir)
     cents = ivf_centroids(spark, sf_dir, plain)
     books = pq_books(spark, sf_dir, plain)
-    assigned = (
-        e.crossJoin(F.broadcast(_with_cc(cents)))
-        .withColumn("score", _cell_score())
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("score", "k")).alias("b"), F.first("v").alias("v"))
-        .select("vec_id", F.col("b.k").cast("int").alias("cell"), "v")
+    assigned = nearest(e, cents, carry=("v",)).select(
+        "vec_id", F.col("k").cast("int").alias("cell"), "v"
     )
     subs = assigned.select(
-        "vec_id", "cell", F.posexplode(_sub_slices("v")).alias("sub", "sv")
+        "vec_id", "cell", F.posexplode(_sub_slices("v")).alias("sub", "v")
     )
-    reference = (
-        subs.join(F.broadcast(_with_dcc(books)), "sub")
-        .withColumn("score", _code_score())
-        .groupBy("vec_id", "sub")
-        .agg(F.min(F.struct("score", "code")).alias("b"), F.first("cell").alias("cell"))
-        .select("vec_id", "cell", "sub", F.col("b.code").cast("int").alias("code"))
-    )
+    reference = _encode(subs, books)
     assert _rows(similarity_pq.ivfpq_index(e, cents, books)) == _rows(reference)
 
 
@@ -76,15 +71,9 @@ def test_ivfpq_residual_index_kernel_matches_relational(spark, sf_dir):
     books = pq_residual_books(spark, sf_dir, plain, cents)
     res = residuals(e, cents)
     subs = res.select(
-        "vec_id", "cell", F.posexplode(_sub_slices("v")).alias("sub", "sv")
+        "vec_id", "cell", F.posexplode(_sub_slices("v")).alias("sub", "v")
     )
-    reference = (
-        subs.join(F.broadcast(_with_dcc(books)), "sub")
-        .withColumn("score", _code_score())
-        .groupBy("vec_id", "sub")
-        .agg(F.min(F.struct("score", "code")).alias("b"), F.first("cell").alias("cell"))
-        .select("vec_id", "cell", "sub", F.col("b.code").cast("int").alias("code"))
-    )
+    reference = _encode(subs, books)
     assert _rows(similarity_pq.ivfpq_residual_index(e, cents, books)) == _rows(
         reference
     )

@@ -20,7 +20,7 @@ from kafka_connect_minio_pipeline_spark.operators.multimodal import (
     decode_image,
     extract_features,
 )
-from oracle_utils import union_find_labels
+from oracle_utils import lloyd_reference, nearest_reference, union_find_labels
 
 
 def _pairs(df, cols=("d1", "d2")):
@@ -146,6 +146,58 @@ def test_ann_ivf_recall_vs_bruteforce(spark, sf_dir):
     assigned = similarity.ivf_assign(e, similarity.ivf_quantizer(e))
     biggest = assigned.groupBy("cell").count().agg(F.max("count")).collect()[0][0]
     assert similarity.IVF_PROBE * biggest < n_corpus, "cells do not partition corpus"
+
+
+def test_lloyd_trainers_equal_python_reference(spark, sf_dir):
+    """The IVF quantizer, every PQ subspace codebook and the k-means
+    labels all come from one Lloyd trainer (``similarity.lloyd``) whose
+    DuckDB twin shares its algebra, so an algebra slip would move both
+    engines at once and the parity net could not see it. Pin all three
+    callers to an independent pure-Python Lloyd, exactly: sequential
+    double dots, the two-term score with smallest-k ties, and the
+    decimal(16,6) mean."""
+    plain = similarity.load(spark, sf_dir, "embeddings").select(
+        "vec_id", similarity.to_double(F.col("embedding")).alias("v")
+    )
+    pts = {r.vec_id: list(r.v) for r in plain.collect()}
+
+    sample = {i: v for i, v in pts.items() if i < similarity.IVF_TRAIN_SAMPLE}
+    want = lloyd_reference(
+        sample,
+        {i: v for i, v in sample.items() if i < similarity.IVF_CELLS},
+        similarity.IVF_ITERS,
+    )
+    got = {r.k: list(r.c) for r in similarity.ivf_quantizer(plain).collect()}
+    assert got == want
+
+    d = similarity_pq.PQ_SUBDIM
+    got_books = {
+        (r.sub, r.code): list(r.c)
+        for r in similarity_pq.pq_codebooks(plain).collect()
+    }
+    for m in range(similarity_pq.PQ_M):
+        subs = {
+            i: v[m * d : (m + 1) * d]
+            for i, v in pts.items()
+            if i < similarity_pq.PQ_TRAIN_SAMPLE
+        }
+        want = lloyd_reference(
+            subs,
+            {i: v for i, v in subs.items() if i < similarity_pq.PQ_K},
+            similarity_pq.PQ_ITERS,
+        )
+        got = {code: c for (sub, code), c in got_books.items() if sub == m}
+        assert got == want, f"subspace {m}"
+
+    cents = lloyd_reference(
+        pts,
+        {i: v for i, v in pts.items() if i < similarity.KMEANS_K},
+        similarity.KMEANS_ITERS - 1,
+    )
+    want = {i: k for i, (k, _score) in nearest_reference(pts, cents).items()}
+    emb = similarity.load(spark, sf_dir, "embeddings")
+    got = {r.vec_id: r.cluster for r in similarity.kmeans_assign(emb).collect()}
+    assert got == want
 
 
 def test_ann_adc_recall_vs_bruteforce(spark, sf_dir):
@@ -810,22 +862,14 @@ def test_ann_ivfpq_residual_recall_and_distortion(spark, sf_dir):
     cents = similarity.ivf_centroids(spark, sf_dir, plain)
 
     def total_distortion(rel, books):
-        subs = rel.select(
-            "vec_id",
-            F.posexplode(similarity_pq._sub_slices("v")).alias("sub", "sv"),
+        subs = similarity_pq._pq_subs(rel).withColumn(
+            "dsv", similarity.dot(F.col("v"), F.col("v"))
         )
-        best = (
-            subs.withColumn("dsv", similarity.dot(F.col("sv"), F.col("sv")))
-            .join(F.broadcast(similarity_pq._with_dcc(books)), "sub")
-            .withColumn("score", similarity_pq._code_score())
-            .groupBy("vec_id", "sub")
-            .agg(
-                F.min(F.struct("score", "code")).alias("b"),
-                F.first("dsv").alias("dsv"),
-            )
+        best = similarity.nearest(
+            subs, similarity_pq._keyed(books), group=("sub",), carry=("dsv",)
         )
         return best.select(
-            (F.col("dsv") + F.col("b.score")).alias("d")
+            (F.col("dsv") + F.col("score")).alias("d")
         ).agg(F.sum("d")).collect()[0][0]
 
     raw = total_distortion(plain, similarity_pq.pq_books(spark, sf_dir, plain))
