@@ -106,7 +106,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    spark = get_spark(app_name="bench", cores=cpus, driver_memory="96g")
+    spark = get_spark(app_name="bench", cores=cpus)
 
     queries = {n: q for n, q in all_queries().items() if q.headline}
     spark.range(1).count()  # JVM warmup

@@ -9,6 +9,9 @@ chosen to also be the right default on a 1000-executor cluster:
   coalescing makes the initial number far less sensitive.
 - UTC session timezone so timestamp semantics are deployment-independent.
 - Arrow enabled for any pandas interchange (vectorized, not per-row pickling).
+- driver heap sized from the machine (``driver_memory_for``), never a literal.
+- Python workers fork from this package's ``daemon`` (stat-gated zip-archive
+  invalidation) and import the package from any working directory.
 """
 
 from __future__ import annotations
@@ -16,6 +19,29 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory holding this package, for the Python workers' import path
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def driver_memory_for(meminfo: str) -> str | None:
+    """Driver heap from ``/proc/meminfo`` text: a quarter of ``MemTotal``,
+    at least 1 GiB and at most 16 GiB. In local mode the Python workers, the
+    JVM's off-heap memory and the page cache share the rest. None (Spark's
+    default) when ``MemTotal`` is missing."""
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            mib = int(line.split()[1]) // 1024 // 4
+            return f"{max(1024, min(16 * 1024, mib))}m"
+    return None
+
+
+def _machine_driver_memory() -> str | None:
+    try:
+        with open("/proc/meminfo") as f:
+            return driver_memory_for(f.read())
+    except OSError:
+        return None
 
 
 def get_spark(
@@ -32,6 +58,8 @@ def get_spark(
         # without tiny-task overhead. On a cluster this would be
         # 2-3x total cores; AQE coalesces the excess either way.
         shuffle_partitions = max(cores, 4)
+    if driver_memory is None:
+        driver_memory = _machine_driver_memory()
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -45,6 +73,10 @@ def get_spark(
         # the driver-generated events table stores TIMESTAMP(NANOS); Spark
         # reads it as long nanos which tables.load() converts explicitly.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Spark merges this with its own pyspark/py4j path and the
+        # environment's PYTHONPATH when it starts the workers
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config("spark.python.daemon.module", f"{__package__}.daemon")
     )
     if driver_memory:
         builder = builder.config("spark.driver.memory", driver_memory)

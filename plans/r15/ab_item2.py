@@ -17,7 +17,7 @@ from kafka_connect_minio_pipeline_spark.operators import dedup, graph
 SF_DIR = "/root/testdata/sf0.1"
 PASSES = int(sys.argv[1]) if len(sys.argv) > 1 else 8
 
-spark = get_spark(app_name="ab_item2", cores=32, driver_memory="96g")
+spark = get_spark(app_name="ab_item2")
 spark.range(1).count()
 
 

@@ -10,7 +10,7 @@ from kafka_connect_minio_pipeline_spark.operators.multimodal import (
 from kafka_connect_minio_pipeline_spark.operators.dedup import connected_components_ls
 
 SF = "/root/testdata/sf0.1"
-spark = get_spark(app_name="ab_phash_sort", cores=32, driver_memory="96g")
+spark = get_spark(app_name="ab_phash_sort")
 spark.range(1).count()
 
 def clusters(ordered: bool):

@@ -24,7 +24,7 @@ from kafka_connect_minio_pipeline_spark.scratch import scratch_dir
 SF_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
 PASSES = int(sys.argv[1]) if len(sys.argv) > 1 else 6
 
-spark = get_spark(app_name="ab_staging", cores=32, driver_memory="96g")
+spark = get_spark(app_name="ab_staging")
 spark.range(1).count()
 
 

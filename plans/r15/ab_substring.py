@@ -93,7 +93,7 @@ def clean_v2(spark, sf_dir):
     )
 
 
-spark = get_spark(app_name="ab_substring", cores=32, driver_memory="96g")
+spark = get_spark(app_name="ab_substring")
 spark.range(1).count()
 
 

@@ -37,7 +37,7 @@ from kafka_connect_minio_pipeline_spark.functions.barrier import filter_above
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sfbig"
 PASSES = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 
-spark = get_spark(app_name="ab_wedge_common", cores=32, driver_memory="96g")
+spark = get_spark(app_name="ab_wedge_common")
 spark.range(1).count()
 
 

@@ -14,7 +14,7 @@ from kafka_connect_minio_pipeline_spark.operators.graph import (
     _adjacency_fits_broadcast,
 )
 
-spark = get_spark(app_name="analyze_wedges", cores=32, driver_memory="96g")
+spark = get_spark(app_name="analyze_wedges")
 
 for sf_dir in ("/root/testdata/sf0.1", "/tmp/sfbig"):
     e = part_cooccurrence_edges(spark, sf_dir)

@@ -24,7 +24,7 @@ NAMES = (
     "llm_substring_clean",
 )
 
-spark = get_spark(app_name=f"bench_sf1_c{CORES}", cores=CORES, driver_memory="96g")
+spark = get_spark(app_name=f"bench_sf1_c{CORES}", cores=CORES)
 spark.range(1).count()
 qs = all_queries()
 

@@ -26,7 +26,7 @@ NAMES = (
 )
 SF_DIR = "/root/testdata/sf0.1"
 
-spark = get_spark(app_name="dump_plans", cores=32, driver_memory="96g")
+spark = get_spark(app_name="dump_plans")
 qs = all_queries()
 for name in NAMES:
     df = qs[name].fn(spark, SF_DIR)

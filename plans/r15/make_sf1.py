@@ -29,7 +29,7 @@ SRC = "/root/testdata/sf0.1"
 OUT = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sfbig"
 REPLICAS = int(sys.argv[2]) if len(sys.argv) > 2 else 10
 
-spark = get_spark(app_name="make_sf1", cores=32, driver_memory="96g")
+spark = get_spark(app_name="make_sf1")
 os.makedirs(OUT, exist_ok=True)
 
 for small in ("region", "nation", "customer", "supplier", "part", "orders"):
