@@ -624,16 +624,14 @@ SQL_AGG_LINREG = """
 MEDIAN_BUCKET_WIDTH = 1000  # price units per histogram bucket (pass 1)
 
 
-def exact_median_twopass(
-    df: DataFrame, value_col: str, bucket_width: int = MEDIAN_BUCKET_WIDTH
-) -> DataFrame:
+def exact_median_twopass(df: DataFrame, value_col: str) -> DataFrame:
     """EXACT lower median of ``value_col`` without a global sort: the
     two-pass histogram selection that replaces ORDER BY on 100 TB.
 
     A naive exact median is a full sort of the column — a single-task
     catastrophe at scale. Instead: pass 1 builds a fixed-width bucket
     histogram (one partial-aggregated groupBy; the collected histogram is
-    BOUNDED — value_range / bucket_width rows, never data-sized), the
+    BOUNDED — value_range / MEDIAN_BUCKET_WIDTH rows, never data-sized), the
     driver walks the cumulative counts to find the bucket holding the
     target rank, and pass 2 re-scans ONLY that bucket — the range
     predicate is pushed into the parquet scan as min/max bucket bounds —
@@ -649,7 +647,7 @@ def exact_median_twopass(
     price = dec2(F.col(value_col))
     hist = (
         df.groupBy(
-            F.floor(price / bucket_width).cast("bigint").alias("bucket")
+            F.floor(price / MEDIAN_BUCKET_WIDTH).cast("bigint").alias("bucket")
         )
         .agg(F.count("*").alias("cnt"))
         .orderBy("bucket")
@@ -670,8 +668,8 @@ def exact_median_twopass(
             bucket, rank_in_bucket = r["bucket"], k - cum
             break
         cum += r["cnt"]
-    lo = bucket * bucket_width
-    hi = (bucket + 1) * bucket_width
+    lo = bucket * MEDIAN_BUCKET_WIDTH
+    hi = (bucket + 1) * MEDIAN_BUCKET_WIDTH
     in_bucket = df.filter(
         (F.col(value_col) >= F.lit(lo)) & (F.col(value_col) < F.lit(hi))
     ).select(price.alias("price"))

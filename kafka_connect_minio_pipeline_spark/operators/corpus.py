@@ -27,43 +27,38 @@ N_SHARDS = 8
 SPLIT_BOUNDS = (0.90, 0.95)
 
 
-def shuffle_split(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    n_shards: int = N_SHARDS,
-    bounds: tuple[float, float] = SPLIT_BOUNDS,
-) -> DataFrame:
+def shuffle_split(df: DataFrame) -> DataFrame:
     """Deterministic shuffle + shard + split assignment per document.
 
     Two INDEPENDENT hashes (salted differently) drive split membership
     and shuffle order, so the validation set is itself shuffled rather
     than being the tail of the training order. Shard = pmod(order_hash,
-    n_shards) spreads documents evenly; position = row_number within
+    N_SHARDS) spreads documents evenly; position = row_number within
     shard by (order_hash, id) is the loader's read order. The only
     shuffle is the per-shard window, whose partition count is
-    ``n_shards`` — at 100 TB raise ``n_shards`` to O(output files)
+    ``N_SHARDS`` — at 100 TB raise ``N_SHARDS`` to O(output files)
     (it is the write parallelism anyway), or drop the position column
     and let shard files stay unordered (loaders that shuffle in-memory
     don't need it) for a fully narrow plan.
     """
-    split_hash = _portable_hash(F.concat(F.lit("split:"), F.col(id_col)))
-    order_hash = _portable_hash(F.concat(F.lit("order:"), F.col(id_col)))
-    lo = F.floor(F.lit(bounds[0]) * _HASH_SPACE)
-    hi = F.floor(F.lit(bounds[1]) * _HASH_SPACE)
+    split_hash = _portable_hash(F.concat(F.lit("split:"), F.col("doc_id")))
+    order_hash = _portable_hash(F.concat(F.lit("order:"), F.col("doc_id")))
+    lo = F.floor(F.lit(SPLIT_BOUNDS[0]) * _HASH_SPACE)
+    hi = F.floor(F.lit(SPLIT_BOUNDS[1]) * _HASH_SPACE)
     split = (
         F.when(split_hash < lo, "train")
         .when(split_hash < hi, "val")
         .otherwise("test")
     )
     assigned = df.select(
-        id_col,
+        "doc_id",
         split.alias("split"),
-        F.pmod(order_hash, F.lit(n_shards)).cast("int").alias("shard"),
+        F.pmod(order_hash, F.lit(N_SHARDS)).cast("int").alias("shard"),
         order_hash.alias("order_hash"),
     )
-    w = Window.partitionBy("shard").orderBy("order_hash", id_col)
+    w = Window.partitionBy("shard").orderBy("order_hash", "doc_id")
     return assigned.select(
-        id_col,
+        "doc_id",
         "split",
         "shard",
         F.row_number().over(w).cast("int").alias("position"),
@@ -104,7 +99,7 @@ SQL_CORPUS_SHUFFLE_SPLIT = f"""
 VOCAB_TOP_N = 200
 
 
-def vocab_top(docs: DataFrame, n: int = VOCAB_TOP_N) -> DataFrame:
+def vocab_top(docs: DataFrame) -> DataFrame:
     """Top-N vocabulary with cumulative corpus coverage (the seed list a
     BPE/WordPiece trainer starts from).
 
@@ -121,7 +116,7 @@ def vocab_top(docs: DataFrame, n: int = VOCAB_TOP_N) -> DataFrame:
     )
     counts = toks.groupBy("token").agg(F.count("*").alias("n_occur"))
     total = counts.agg(F.sum("n_occur").alias("n_total"))
-    top = counts.orderBy(F.col("n_occur").desc(), "token").limit(n)
+    top = counts.orderBy(F.col("n_occur").desc(), "token").limit(VOCAB_TOP_N)
     w = (
         Window.orderBy(F.col("n_occur").desc(), "token")
         .rowsBetween(Window.unboundedPreceding, 0)
@@ -254,11 +249,7 @@ INTERLEAVE_WEIGHTS = {"en": 1.0, "de": 2.0, "fr": 2.0, "es": 2.0, "zh": 2.0}
 N_INTERLEAVE_SHARDS = 16
 
 
-def interleave(
-    df: DataFrame,
-    stratum_col: str = "lang",
-    n_shards: int = N_INTERLEAVE_SHARDS,
-) -> DataFrame:
+def interleave(df: DataFrame) -> DataFrame:
     """Weighted multi-source interleaving: a deterministic reading order
     where stratum s is visited proportionally to its weight — the
     standard multi-corpus curriculum mix (e.g. upsampling low-resource
@@ -271,14 +262,14 @@ def interleave(
     ``corpus_shuffle_split``.
 
     The output is SHARDED, never globally numbered: the order_key range
-    is cut into ``n_shards`` equal slices (shard boundaries are pure
+    is cut into ``N_INTERLEAVE_SHARDS`` equal slices (shard boundaries are pure
     value functions of order_key, so assignment is embarrassingly
     parallel and engine-portable), and each document gets its position
     WITHIN its shard. Loaders consume shards in shard_id order, rows in
     shard_pos order — the concatenation is exactly the virtual-timeline
     interleave, but no single task ever sees more than one shard.
     Exchanges: stratum window + shard window + one scalar max broadcast;
-    at 100 TB raise ``n_shards`` to O(output files) and the per-shard
+    at 100 TB raise ``N_INTERLEAVE_SHARDS`` to O(output files) and the per-shard
     window stays bounded.
     """
     # unmapped strata default to weight 1.0 — a NULL weight would NULL the
@@ -289,30 +280,32 @@ def interleave(
             F.create_map(
                 *[F.lit(x) for kv in INTERLEAVE_WEIGHTS.items() for x in kv]
             ),
-            F.col(stratum_col),
+            F.col("lang"),
         ).cast("double"),
         F.lit(1.0),
     )
     h = _portable_hash(F.concat(F.lit("ileave:"), F.col("doc_id")))
     rk = F.row_number().over(
-        Window.partitionBy(stratum_col).orderBy(h, "doc_id")
+        Window.partitionBy("lang").orderBy(h, "doc_id")
     )
     staged = df.select(
         "doc_id",
-        stratum_col,
+        "lang",
         (rk.cast("double") / w_expr).alias("order_key"),
     )
     max_ok = staged.agg(F.max("order_key").alias("max_ok"))
     shard = F.least(
-        F.lit(n_shards - 1).cast("long"),
-        F.floor(F.col("order_key") / F.col("max_ok") * F.lit(float(n_shards))),
+        F.lit(N_INTERLEAVE_SHARDS - 1).cast("long"),
+        F.floor(
+            F.col("order_key") / F.col("max_ok") * F.lit(float(N_INTERLEAVE_SHARDS))
+        ),
     ).cast("int")
     bucketed = staged.crossJoin(F.broadcast(max_ok)).select(
-        "doc_id", stratum_col, "order_key", shard.alias("shard_id")
+        "doc_id", "lang", "order_key", shard.alias("shard_id")
     )
     return bucketed.select(
         "doc_id",
-        stratum_col,
+        "lang",
         F.round("order_key", 6).alias("order_key"),
         "shard_id",
         F.row_number()
@@ -322,7 +315,7 @@ def interleave(
             # would silently shift every later shard_pos by one
             Window.partitionBy("shard_id").orderBy(
                 F.col("order_key").asc(),
-                F.col(stratum_col).asc_nulls_last(),
+                F.col("lang").asc_nulls_last(),
                 F.col("doc_id").asc(),
             )
         )
@@ -434,9 +427,7 @@ TOKEN_BUDGET = 20_000
 N_BUDGET_BUCKETS = 32
 
 
-def token_budget_select(
-    docs: DataFrame, budget: int = TOKEN_BUDGET, n_buckets: int = N_BUDGET_BUCKETS
-) -> DataFrame:
+def token_budget_select(docs: DataFrame, budget: int = TOKEN_BUDGET) -> DataFrame:
     """Select documents best-first until a token budget is exhausted —
     the "we can afford N tokens of training data" cut, taken by quality
     rather than at random.
@@ -445,10 +436,10 @@ def token_budget_select(
     token prefix sum; a doc is kept iff its prefix sum ≤ budget.
 
     The prefix sum is computed DECOMPOSED, never as one global window:
-    quality is value-bucketed into ``n_buckets`` equal slices of the
+    quality is value-bucketed into ``N_BUDGET_BUCKETS`` equal slices of the
     [min, max] range (bucket assignment is a pure monotone function of
     the score, so bucket order == global order), per-bucket token totals
-    (one partial-aggregated groupBy over ``n_buckets`` rows) give each
+    (one partial-aggregated groupBy over ``N_BUDGET_BUCKETS`` rows) give each
     bucket its cumulative OFFSET, and the within-bucket prefix sum runs
     partitioned by bucket. offset + within-bucket sum is EXACTLY the
     global prefix sum — integer arithmetic, no approximation — so the
@@ -456,7 +447,7 @@ def token_budget_select(
     whose offset already exceeds the budget are pruned BEFORE their
     window runs: at 100 TB the expensive sort only ever touches the
     budget-adjacent prefix of the corpus. The only single-task steps are
-    the scalar min/max and the ``n_buckets``-row offset window (bounded
+    the scalar min/max and the ``N_BUDGET_BUCKETS``-row offset window (bounded
     cardinality, like ts hourly rollup).
     """
     from .text import quality_features
@@ -469,11 +460,11 @@ def token_budget_select(
         F.when(F.col("max_q") == F.col("min_q"), F.lit(0).cast("long"))
         .otherwise(
             F.least(
-                F.lit(n_buckets - 1).cast("long"),
+                F.lit(N_BUDGET_BUCKETS - 1).cast("long"),
                 F.floor(
                     (F.col("max_q") - F.col("quality_score"))
                     / (F.col("max_q") - F.col("min_q"))
-                    * F.lit(float(n_buckets))
+                    * F.lit(float(N_BUDGET_BUCKETS))
                 ),
             )
         )
@@ -603,14 +594,8 @@ def _sql_corpus_mix_epochs() -> str:
 WMEDIAN_BUCKET = 50  # n_chars per histogram bucket (pass 1)
 
 
-def exact_weighted_median_twopass(
-    weighted: DataFrame,
-    value_col: str = "n_chars",
-    weight_col: str = "w",
-    id_col: str = "doc_id",
-    bucket_width: int = WMEDIAN_BUCKET,
-) -> DataFrame:
-    """WEIGHTED lower median of ``value_col`` under ``weight_col`` —
+def exact_weighted_median_twopass(weighted: DataFrame) -> DataFrame:
+    """WEIGHTED lower median of ``n_chars`` under ``w`` —
     distributed weighted selection (see q_corpus_weighted_median for the
     corpus semantics and the full scale story). Two passes: bounded
     weighted histogram + driver walk, then a running-weight window over
@@ -620,9 +605,9 @@ def exact_weighted_median_twopass(
     """
     hist = (
         weighted.groupBy(
-            F.floor(F.col(value_col) / bucket_width).cast("bigint").alias("b")
+            F.floor(F.col("n_chars") / WMEDIAN_BUCKET).cast("bigint").alias("b")
         )
-        .agg(F.sum(weight_col).alias("bw"))
+        .agg(F.sum("w").alias("bw"))
         .orderBy("b")
         .collect()  # bounded: one row per occupied value bucket
     )
@@ -640,23 +625,23 @@ def exact_weighted_median_twopass(
             bucket, rank_in_bucket = r["b"], target - cum
             break
         cum += r["bw"]
-    lo, hi = bucket * bucket_width, (bucket + 1) * bucket_width
+    lo, hi = bucket * WMEDIAN_BUCKET, (bucket + 1) * WMEDIAN_BUCKET
     in_bucket = weighted.filter(
-        (F.col(value_col) >= F.lit(lo)) & (F.col(value_col) < F.lit(hi))
+        (F.col("n_chars") >= F.lit(lo)) & (F.col("n_chars") < F.lit(hi))
     )
     w_run = (
-        Window.orderBy(value_col, id_col)  # single bucket: bounded rows
+        Window.orderBy("n_chars", "doc_id")  # single bucket: bounded rows
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     hit = (
-        in_bucket.withColumn("cw", F.sum(weight_col).over(w_run))
+        in_bucket.withColumn("cw", F.sum("w").over(w_run))
         .filter(F.col("cw") >= rank_in_bucket)
-        .orderBy(value_col, id_col)
+        .orderBy("n_chars", "doc_id")
         .limit(1)
     )
     return hit.select(
         F.lit(total_w).cast("bigint").alias("total_tokens"),
-        F.col(value_col).cast("bigint").alias("weighted_median_len"),
+        F.col("n_chars").cast("bigint").alias("weighted_median_len"),
     )
 
 
@@ -824,13 +809,7 @@ def _split_leakage_sql() -> str:
 WSAMPLE_K = 25  # docs kept per source
 
 
-def weighted_sample_per_group(
-    df: DataFrame,
-    weight_col: str = "n_chars",
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    k: int = WSAMPLE_K,
-) -> DataFrame:
+def weighted_sample_per_group(df: DataFrame, k: int = WSAMPLE_K) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement, k per group —
     the Efraimidis-Spirakis A-ES scheme: each row draws a reproducible
     uniform u from the portable hash and the k rows with the largest
@@ -852,22 +831,22 @@ def weighted_sample_per_group(
     keeps the total order clean.
     """
     u = (
-        _portable_hash(F.concat(F.lit("ws|"), F.col(id_col).cast("string")))
+        _portable_hash(F.concat(F.lit("ws|"), F.col("doc_id").cast("string")))
         .cast("double")
         + F.lit(1.0)
     ) / F.lit(float(_HASH_SPACE))
-    w = F.greatest(F.lit(1), F.col(weight_col)).cast("double")
+    w = F.greatest(F.lit(1), F.col("n_chars")).cast("double")
     key = F.log(u) / w
     staged = df.select(
-        group_col, id_col, F.col(weight_col).alias("weight"), key.alias("k")
+        "source", "doc_id", F.col("n_chars").alias("weight"), key.alias("k")
     )
-    win = Window.partitionBy(group_col).orderBy(F.col("k").desc(), id_col)
+    win = Window.partitionBy("source").orderBy(F.col("k").desc(), "doc_id")
     return (
         staged.withColumn("sample_rank", F.row_number().over(win))
         .filter(F.col("sample_rank") <= k)
         .select(
-            group_col,
-            id_col,
+            "source",
+            "doc_id",
             "weight",
             "sample_rank",
             F.round("k", 9).alias("sample_key"),
@@ -1168,7 +1147,7 @@ def doc_urls(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", url.alias("url"))
 
 
-def url_filter(docs: DataFrame, cap: int = DOMAIN_CAP) -> DataFrame:
+def url_filter(docs: DataFrame) -> DataFrame:
     """Domain-level curation verdicts, one row per document: the
     synthesized URL, its registered domain, the blocklist verdict, the
     domain's doc count and cap keep-rate, and whether the doc survives.
@@ -1177,7 +1156,7 @@ def url_filter(docs: DataFrame, cap: int = DOMAIN_CAP) -> DataFrame:
     projection (no UDF); the per-domain rollup is vocabulary-sized
     (registered domains, not URLs) and broadcasts back; the cap is the
     ``llm_target_mix`` zero-shuffle hash threshold — keep iff
-    portable_hash(doc_id) < floor(min(1, cap/n)·2^60) — so capping a
+    portable_hash(doc_id) < floor(min(1, DOMAIN_CAP/n)·2^60) — so capping a
     100 TB crawl is a metadata scan plus one broadcast join, with no
     per-domain window (a row_number() cap would shuffle the corpus on
     domain and die on the one mega-domain every crawl has; the hash
@@ -1202,7 +1181,7 @@ def url_filter(docs: DataFrame, cap: int = DOMAIN_CAP) -> DataFrame:
             F.round(
                 F.least(
                     F.lit(1.0),
-                    F.lit(float(cap)) / F.col("n_domain_docs").cast("double"),
+                    F.lit(float(DOMAIN_CAP)) / F.col("n_domain_docs").cast("double"),
                 ),
                 6,
             ).alias("keep_rate"),

@@ -65,9 +65,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pagerank(
-    edges: DataFrame, n_iter: int = N_ITER, damping: float = DAMPING
-) -> DataFrame:
+def pagerank(edges: DataFrame, n_iter: int = N_ITER) -> DataFrame:
     """Fixed-iteration PageRank on a directed edge relation (src, dst).
 
     Per iteration: rank/out-degree contributions flow along edges (one
@@ -104,8 +102,8 @@ def pagerank(
             .select(
                 "node",
                 (
-                    F.lit((1.0 - damping) / n_nodes)
-                    + F.lit(damping)
+                    F.lit((1.0 - DAMPING) / n_nodes)
+                    + F.lit(DAMPING)
                     * F.coalesce(F.col("inflow").cast("double"), F.lit(0.0))
                 ).alias("rank"),
             )
@@ -517,9 +515,7 @@ def edge_jaccard_topk(
     )
 
 
-def edge_adamic_adar_topk(
-    edges: DataFrame, k: int = JACCARD_TOP_K, mode: str = "auto"
-) -> DataFrame:
+def edge_adamic_adar_topk(edges: DataFrame, mode: str = "auto") -> DataFrame:
     """Top-k edges by Adamic-Adar — the link-prediction staple that
     weights each common neighbor by 1/ln(degree), so sharing a RARE
     neighbor counts far more than sharing a hub (neighborhood Jaccard's
@@ -585,7 +581,7 @@ def edge_adamic_adar_topk(
             F.round(F.col("aa_sum").cast("double"), 6).alias("adamic_adar"),
         )
         .orderBy(F.col("adamic_adar").desc(), "u", "v")
-        .limit(k)
+        .limit(JACCARD_TOP_K)
     )
 
 
@@ -875,7 +871,7 @@ SQL_GRAPH_DEGREE_STATS = f"""
 LPA_ROUNDS = 3
 
 
-def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
+def label_propagation(edges: DataFrame) -> DataFrame:
     """Deterministic synchronous label propagation: every node starts
     labeled with its own id; each round it adopts the most frequent
     label among its neighbors, ties broken by smallest label. Fixed
@@ -897,7 +893,7 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     labels = directed.select(F.col("s").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    for _ in range(rounds):
+    for _ in range(LPA_ROUNDS):
         counts = (
             directed.join(
                 labels.select(F.col("node").alias("d"), "label"), "d"
@@ -956,7 +952,6 @@ KCORE_ORACLE_ROUNDS = 6  # oracle unrolls this many no-op-padded peels
 def kcore(
     edges: DataFrame,
     k: int = KCORE_K,
-    max_rounds: int = KCORE_MAX_ROUNDS,
     oracle_rounds: int | None = None,
 ) -> DataFrame:
     """The k-core of the graph — the maximal subgraph where every node
@@ -1004,7 +999,7 @@ def kcore(
     prev = degrees.count()
     rounds = 0
     converged = False
-    for _ in range(max_rounds):
+    for _ in range(KCORE_MAX_ROUNDS):
         alive = degrees.filter(F.col("deg") >= k).select(
             F.col("s").alias("node")
         )
@@ -1024,7 +1019,7 @@ def kcore(
         prev = cur
     if not converged:
         raise RuntimeError(
-            f"kcore did not reach a fixpoint within {max_rounds} rounds"
+            f"kcore did not reach a fixpoint within {KCORE_MAX_ROUNDS} rounds"
         )
     if oracle_rounds is not None and rounds > oracle_rounds:
         raise RuntimeError(
@@ -1080,7 +1075,7 @@ SQL_GRAPH_KCORE = _kcore_sql()
 HITS_ITER = 3
 
 
-def hits(directed: DataFrame, n_iter: int = HITS_ITER) -> DataFrame:
+def hits(directed: DataFrame) -> DataFrame:
     """Fixed-iteration HITS (Kleinberg 1999) on a directed edge relation
     (src, dst): hubs point at good authorities, authorities are pointed
     at by good hubs. Returns (node, role, score) with role ∈
@@ -1125,7 +1120,7 @@ def hits(directed: DataFrame, n_iter: int = HITS_ITER) -> DataFrame:
             ).alias("score"),
         )
 
-    for _ in range(n_iter):
+    for _ in range(HITS_ITER):
         auth = _half(hub, "src", "dst")
         hub = _half(auth, "dst", "src")
     return hub.select(

@@ -609,12 +609,7 @@ CDC_KEY_SHIFT = 1400  # maps event user_ids onto the customer-key tail so
 # update/delete existing customers, keys beyond it insert new rows
 
 
-def cdc_merge(
-    base: DataFrame,
-    changelog: DataFrame,
-    key: str = "key",
-    val: str = "val",
-) -> DataFrame:
+def cdc_merge(base: DataFrame, changelog: DataFrame) -> DataFrame:
     """MERGE a CDC changelog into a snapshot — the standard upsert/delete
     apply step of any incremental pipeline: last change per key wins;
     a final delete removes the row; an upsert updates an existing row or
@@ -628,14 +623,14 @@ def cdc_merge(
     100 TB the changelog side is typically the small delta (broadcast if
     it fits). No window over the base table, no driver loop.
     """
-    latest = changelog.groupBy(key).agg(
-        F.max_by(F.struct(F.col("op"), F.col(val)), F.col("ord")).alias("c")
-    ).select(key, F.col("c.op").alias("op"), F.col(f"c.{val}").alias("new_val"))
+    latest = changelog.groupBy("key").agg(
+        F.max_by(F.struct(F.col("op"), F.col("val")), F.col("ord")).alias("c")
+    ).select("key", F.col("c.op").alias("op"), F.col("c.val").alias("new_val"))
     # explicit presence marker: "no base row" must be detected by ROW
     # absence, never by the value being NULL — a snapshot legitimately
     # holding (k, NULL) is an UPDATE target, not an insert slot
     joined = base.withColumn("in_base", F.lit(True)).join(
-        latest, key, "full_outer"
+        latest, "key", "full_outer"
     )
     action = (
         F.when(F.col("op").isNull(), F.lit("kept"))
@@ -645,13 +640,13 @@ def cdc_merge(
     )
     return (
         joined.select(
-            key,
+            "key",
             action.alias("action"),
             # cent-exact decimal either way; emitted as double (exact
             # IEEE nearest) because DuckDB's pandas fetch turns DECIMAL
             # into float64 — the sum_dec2 portability rule
             F.when(F.col("op") == "U", F.col("new_val"))
-            .otherwise(F.col(val))
+            .otherwise(F.col("val"))
             .cast("double")
             .alias("final_val"),
         )

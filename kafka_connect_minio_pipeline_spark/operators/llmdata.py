@@ -48,15 +48,10 @@ def _portable_hash(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("long")
 
 
-def sample_stratified(
-    df: DataFrame,
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    frac: float = SAMPLE_FRAC,
-) -> DataFrame:
+def sample_stratified(df: DataFrame) -> DataFrame:
     """Exact, deterministic per-stratum sample of any DataFrame.
 
-    Sampling by ``row_number() <= ceil(frac * n)`` over an md5-derived
+    Sampling by ``row_number() <= ceil(SAMPLE_FRAC * n)`` over an md5-derived
     order gives an EXACT per-stratum count (sample() would be
     approximate and engine-specific) and is reproducible across engines
     and runs — what a training-mix builder needs. One shuffle
@@ -68,19 +63,21 @@ def sample_stratified(
     at bench SF).
     """
     staged = df.select(
-        id_col, stratum_col, _portable_hash(F.col(id_col)).alias("h")
+        "doc_id", "lang", _portable_hash(F.col("doc_id")).alias("h")
     )
-    w = Window.partitionBy(stratum_col).orderBy("h", id_col)
-    n = Window.partitionBy(stratum_col)
+    w = Window.partitionBy("lang").orderBy("h", "doc_id")
+    n = Window.partitionBy("lang")
     return (
         staged.select(
-            id_col,
-            stratum_col,
+            "doc_id",
+            "lang",
             F.row_number().over(w).alias("sample_rank"),
             F.count("*").over(n).alias("n_stratum"),
         )
-        .filter(F.col("sample_rank") <= F.ceil(F.lit(frac) * F.col("n_stratum")))
-        .select(id_col, stratum_col, "sample_rank")
+        .filter(
+            F.col("sample_rank") <= F.ceil(F.lit(SAMPLE_FRAC) * F.col("n_stratum"))
+        )
+        .select("doc_id", "lang", "sample_rank")
     )
 
 
@@ -96,11 +93,9 @@ def q_llm_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HASH_SPACE = 1 << 60  # _portable_hash is 15 hex chars = 60 bits
 
 
-def sample_hash_threshold(
-    df: DataFrame, id_col: str = "doc_id", frac: float = SAMPLE_FRAC
-) -> DataFrame:
+def sample_hash_threshold(df: DataFrame) -> DataFrame:
     """The 100 TB sampling path: keep rows whose portable hash falls
-    below ``frac`` of the hash space — deterministic, reproducible,
+    below ``SAMPLE_FRAC`` of the hash space — deterministic, reproducible,
     ZERO shuffles (a pure filter that fuses into the scan), at the cost
     of per-stratum counts being binomial-approximate rather than exact.
     Pair with :func:`sample_stratified` (the exact spec — one shuffle,
@@ -108,7 +103,7 @@ def sample_hash_threshold(
     brute-force similarity spec: exact when counts must be exact,
     hash-threshold when the corpus is huge and ±sqrt(n) is fine.
     """
-    return df.filter(_portable_hash(F.col(id_col)) < int(frac * _HASH_SPACE))
+    return df.filter(_portable_hash(F.col("doc_id")) < int(SAMPLE_FRAC * _HASH_SPACE))
 
 
 def q_llm_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -149,18 +144,11 @@ SQL_SAMPLE_STRATIFIED = f"""
 CTX_BUDGET = 256
 
 
-def pack_sequences(
-    df: DataFrame,
-    text_col: str = "text",
-    group_col: str = "lang",
-    order_col: str = "doc_id",
-    budget: int = CTX_BUDGET,
-    shard_mod: int | None = None,
-) -> DataFrame:
+def pack_sequences(df: DataFrame, shard_mod: int | None = None) -> DataFrame:
     """Concatenation-offset packing over any corpus DataFrame: assign
     each doc its start bin and offset when the per-group token stream is
     concatenated into fixed-size context windows (docs clipped to the
-    budget, ``order_col`` order).
+    budget, ``doc_id`` order).
 
     Pure prefix-sum packing — one running-sum window per group, no
     state machine — which is what production packers (GPT-style document
@@ -170,37 +158,37 @@ def pack_sequences(
 
     Parallelism: a window partition is a single sort unit, so with few
     groups (5 languages) the scale ceiling is 5-way. ``shard_mod=N``
-    lifts it by packing each ``(group, order_col % N)`` shard as its own
+    lifts it by packing each ``(lang, doc_id % N)`` shard as its own
     independent stream (disjoint ``(group, shard, bin_id)`` spaces — the
     shard id is part of the output identity, exactly how production
     packers shard: each output shard is a self-contained sequence file).
     The registry query keeps ``shard_mod=None`` so the oracle's simple
     per-group prefix sum stays equivalent.
     """
-    n_tok = F.least(F.size(tokens(F.col(text_col))), F.lit(budget))
-    staged = df.select(order_col, group_col, n_tok.alias("n_tok"))
+    n_tok = F.least(F.size(tokens(F.col("text"))), F.lit(CTX_BUDGET))
+    staged = df.select("doc_id", "lang", n_tok.alias("n_tok"))
     if shard_mod is None:
-        part_cols = [group_col]
+        part_cols = ["lang"]
         out_extra: list[str] = []
     else:
         staged = staged.withColumn(
-            "shard", (F.col(order_col) % shard_mod).cast("int")
+            "shard", (F.col("doc_id") % shard_mod).cast("int")
         )
-        part_cols = [group_col, "shard"]
+        part_cols = ["lang", "shard"]
         out_extra = ["shard"]
     w = (
         Window.partitionBy(*part_cols)
-        .orderBy(order_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     prefix = F.coalesce(F.sum("n_tok").over(w), F.lit(0).cast("long"))
     return staged.select(
-        order_col,
-        group_col,
+        "doc_id",
+        "lang",
         *out_extra,
         "n_tok",
-        (prefix / budget).cast("long").alias("bin_id"),
-        (prefix % budget).cast("int").alias("offset_in_bin"),
+        (prefix / CTX_BUDGET).cast("long").alias("bin_id"),
+        (prefix % CTX_BUDGET).cast("int").alias("offset_in_bin"),
     )
 
 
@@ -260,7 +248,7 @@ def _seeded_text() -> Column:
     )
 
 
-def pii_scrub(df: DataFrame, text_col: str = "t") -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """Regex PII redaction with accounting over any DataFrame: emails →
     ``<EMAIL>``, phones → ``<PHONE>``, plus per-doc match counts in
     ``n_emails``/``n_phones`` and the redacted text in ``clean_text``.
@@ -268,13 +256,13 @@ def pii_scrub(df: DataFrame, text_col: str = "t") -> DataFrame:
     pattern scrubbing. Entirely JVM-side regex in one narrow projection —
     embarrassingly parallel at any scale."""
     n_emails = F.size(
-        F.regexp_extract_all(F.col(text_col), F.lit(EMAIL_RE), F.lit(0))
+        F.regexp_extract_all(F.col("t"), F.lit(EMAIL_RE), F.lit(0))
     )
     n_phones = F.size(
-        F.regexp_extract_all(F.col(text_col), F.lit(PHONE_RE), F.lit(0))
+        F.regexp_extract_all(F.col("t"), F.lit(PHONE_RE), F.lit(0))
     )
     clean = F.regexp_replace(
-        F.regexp_replace(F.col(text_col), EMAIL_RE, "<EMAIL>"),
+        F.regexp_replace(F.col("t"), EMAIL_RE, "<EMAIL>"),
         PHONE_RE,
         "<PHONE>",
     )
@@ -330,14 +318,7 @@ BENCH_MOD = 97  # doc_id % 97 == 0 plays the held-out benchmark set
 DECON_N = 8
 
 
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = DECON_N,
-    keep_cols: tuple[str, ...] = ("lang",),
-) -> DataFrame:
+def decontaminate(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Test-set contamination gate over any (corpus, benchmark) pair:
     flag every corpus doc that shares at least one word n-gram with any
     benchmark doc, with the count of distinct shared n-grams.
@@ -348,21 +329,21 @@ def decontaminate(
     for the join; only the per-doc count aggregates (one shuffle). This
     is the shape n-gram decontamination takes at scale.
     """
-    grams = F.array_distinct(word_ngrams(tokens(F.col(text_col)), n))
-    staged = corpus.select(id_col, *keep_cols, grams.alias("g"))
+    grams = F.array_distinct(word_ngrams(tokens(F.col("text")), DECON_N))
+    staged = corpus.select("doc_id", "lang", grams.alias("g"))
     bench_grams = benchmark.select(F.explode(grams).alias("s")).distinct()
     hits = (
-        staged.select(id_col, F.explode("g").alias("s"))
+        staged.select("doc_id", F.explode("g").alias("s"))
         .join(F.broadcast(bench_grams), "s")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count_distinct("s").alias("n_shared"))
     )
     return (
-        staged.select(id_col, *keep_cols)
-        .join(hits, id_col, "left")
+        staged.select("doc_id", "lang")
+        .join(hits, "doc_id", "left")
         .select(
-            id_col,
-            *keep_cols,
+            "doc_id",
+            "lang",
             F.coalesce("n_shared", F.lit(0).cast("long")).alias("n_shared"),
             (F.coalesce("n_shared", F.lit(0).cast("long")) > 0).alias(
                 "contaminated"
@@ -642,9 +623,7 @@ def _decon_semantic_sql() -> str:
 TARGET_MIX = {"en": 0.40, "zh": 0.15, "es": 0.15, "de": 0.15, "fr": 0.15}
 
 
-def target_mix_rates(
-    df: DataFrame, stratum_col: str = "lang", mix: dict[str, float] = TARGET_MIX
-) -> DataFrame:
+def target_mix_rates(df: DataFrame) -> DataFrame:
     """Per-stratum keep-rates that hit a target corpus mix by only
     DOWN-sampling: the binding stratum (largest target/current share
     ratio) keeps rate 1.0 and every other stratum keeps
@@ -656,10 +635,10 @@ def target_mix_rates(
     so the emitted rates hash-match the oracle bit-for-bit.
     """
     target = F.create_map(
-        *[F.lit(x) for kv in mix.items() for x in kv]
-    )[F.col(stratum_col)]
+        *[F.lit(x) for kv in TARGET_MIX.items() for x in kv]
+    )[F.col("lang")]
     counts = (
-        df.groupBy(stratum_col)
+        df.groupBy("lang")
         .agg(F.count("*").alias("n_docs"))
         .withColumn("target_share", target)
     )
@@ -670,7 +649,7 @@ def target_mix_rates(
     return (
         with_ratio.crossJoin(F.broadcast(max_ratio))
         .select(
-            stratum_col,
+            "lang",
             "n_docs",
             "target_share",
             F.round(F.col("ratio") / F.col("max_ratio"), 6).alias("keep_rate"),
@@ -678,26 +657,21 @@ def target_mix_rates(
     )
 
 
-def apply_mix(
-    df: DataFrame,
-    rates: DataFrame,
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def apply_mix(df: DataFrame, rates: DataFrame) -> DataFrame:
     """Materialize the mix: keep rows whose portable hash falls under
     their stratum's rate. The rates relation is |strata| rows →
     broadcast; the corpus side stays a narrow scan+filter (the
     :func:`sample_hash_threshold` scale path, now with a per-stratum
     threshold), so resampling 100 TB to a target mix is shuffle-free."""
     return (
-        df.join(F.broadcast(rates.select(stratum_col, "keep_rate")), stratum_col)
+        df.join(F.broadcast(rates.select("lang", "keep_rate")), "lang")
         # floor() on both engines: a bare double→bigint cast truncates in
         # Spark but ROUNDS in DuckDB, so the thresholds would disagree
         .filter(
-            _portable_hash(F.col(id_col))
+            _portable_hash(F.col("doc_id"))
             < F.floor(F.col("keep_rate") * _HASH_SPACE)
         )
-        .select(id_col, stratum_col)
+        .select("doc_id", "lang")
     )
 
 
@@ -919,9 +893,7 @@ CHUNK_TOKENS = 32
 CHUNK_STRIDE = 24
 
 
-def rag_chunks(
-    docs: DataFrame, size: int = CHUNK_TOKENS, stride: int = CHUNK_STRIDE
-) -> DataFrame:
+def rag_chunks(docs: DataFrame) -> DataFrame:
     """Overlapping fixed-size token chunks per document — the RAG /
     embedding-index splitter (stride < size ⇒ consecutive chunks share
     ``size - stride`` tokens of context, so a passage straddling a chunk
@@ -936,8 +908,9 @@ def rag_chunks(
     """
     toks = tokens(F.col("text"))
     staged = docs.select("doc_id", toks.alias("toks"), F.size(toks).alias("n"))
-    n_chunks = F.when(F.col("n") <= size, F.lit(1).cast("long")).otherwise(
-        F.lit(1) + F.expr(f"(n - {size} + {stride} - 1) div {stride}")
+    n_chunks = F.when(F.col("n") <= CHUNK_TOKENS, F.lit(1).cast("long")).otherwise(
+        F.lit(1)
+        + F.expr(f"(n - {CHUNK_TOKENS} + {CHUNK_STRIDE} - 1) div {CHUNK_STRIDE}")
     )
     exploded = staged.select(
         "doc_id",
@@ -945,12 +918,12 @@ def rag_chunks(
         F.explode(F.sequence(F.lit(0).cast("long"), n_chunks - 1)).alias("chunk_id"),
     )
     chunk = F.slice(
-        F.col("toks"), (F.col("chunk_id") * stride + 1).cast("int"), size
+        F.col("toks"), (F.col("chunk_id") * CHUNK_STRIDE + 1).cast("int"), CHUNK_TOKENS
     )
     return exploded.select(
         "doc_id",
         F.col("chunk_id").cast("int").alias("chunk_id"),
-        (F.col("chunk_id") * stride + 1).cast("int").alias("chunk_start"),
+        (F.col("chunk_id") * CHUNK_STRIDE + 1).cast("int").alias("chunk_start"),
         F.size(chunk).alias("chunk_len"),
         F.concat_ws(" ", chunk).alias("chunk_text"),
     )
@@ -1294,9 +1267,7 @@ SQL_FIM_TRANSFORM = f"""
 PACK_EVAL_BUDGETS = (128, 512, 2048)
 
 
-def pack_fragmentation_eval(
-    docs: DataFrame, budgets: tuple[int, ...] = PACK_EVAL_BUDGETS
-) -> DataFrame:
+def pack_fragmentation_eval(docs: DataFrame) -> DataFrame:
     """Context-length trade-off report for concatenation packing: per
     (stratum, context budget), how many documents STRADDLE a window
     boundary — the fragmentation cost of shorter contexts (a straddled
@@ -1315,7 +1286,7 @@ def pack_fragmentation_eval(
     per stratum.
     """
     budgets_df = docs.sparkSession.createDataFrame(
-        [(b,) for b in budgets], "budget int"
+        [(b,) for b in PACK_EVAL_BUDGETS], "budget int"
     )
     staged = docs.select(
         "doc_id", "lang", F.size(tokens(F.col("text"))).alias("raw_tok")

@@ -6,13 +6,11 @@ prunes bytes without interpreting them). Decode / feature-extraction runs as
 Arrow-batched ``mapInPandas`` so the Python boundary is paid once per batch,
 not per row, and the operator parallelizes like any other map.
 
-The JPEG/PNG/audio decode kernels are STUBS in this environment (no
-image/audio libraries in the container): ``decode_image``/``decode_audio``
-raise NotImplementedError, and the tested pipeline injects
-``fake_decode_features`` — a deterministic byte-statistics kernel with the
-exact signature a real (PIL/torchaudio) decoder would have. The Spark-side
-plumbing — binary column construction, schema, batch iteration,
-partition-parallel execution — is real and oracle-/test-covered.
+There are no JPEG/PNG/audio libraries here, so ``extract_features``
+computes deterministic byte statistics where a deployment would run a
+PIL/torchaudio kernel. The Spark-side plumbing — binary column
+construction, schema, batch iteration, partition-parallel execution — is
+real and oracle-/test-covered.
 Two decode paths need no external library and are therefore REAL end to
 end: ``encode_ppm``/``decode_ppm`` implement the binary PPM (P6) image
 format in pure numpy (full header grammar incl. comments), and
@@ -64,111 +62,70 @@ def binary_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def decode_image(payload: bytes) -> "object":
-    """Real image decode — not available in this container.
+def extract_features(binary_df: DataFrame) -> DataFrame:
+    """Arrow-batched byte-statistics features over the binary column.
 
-    Reference deployments plug PIL/torchvision here; the pipeline contract
-    (bytes in → feature row out) is exercised via fake_decode_features.
-    """
-    raise NotImplementedError("image decoding requires an image library (PIL)")
-
-
-def decode_audio(payload: bytes) -> "object":
-    raise NotImplementedError("audio decoding requires an audio library")
-
-
-def fake_decode_features(payload: bytes) -> dict:
-    """Deterministic stand-in decoder: byte statistics as 'features'.
-
+    mapInPandas: one Python invocation per Arrow batch (not per row). The
+    kernel vectorizes across the whole batch — one concatenation + one
+    cumsum + reduceat, no Python loop per payload. Integer sums are
+    exact and mean_byte is a single IEEE division (int64 sum / float64
+    n), so the oracle's SQL-side statistics match bit for bit.
     Zero-byte payloads (routine in a real object store) have UNDEFINED
     statistics — emitted as NULL, matching the SQL oracle's empty-list
-    semantics, instead of fabricating 0s that look like real bytes."""
-    n = len(payload)
-    return {
-        "n_bytes": n,
-        "mean_byte": (sum(payload) / n) if n else None,
-        "max_byte": max(payload) if n else None,
-        "head_byte": payload[0] if n else None,
-    }
-
-
-def extract_features(binary_df: DataFrame, decoder=fake_decode_features) -> DataFrame:
-    """Arrow-batched feature extraction over the binary column.
-
-    mapInPandas: one Python invocation per Arrow batch (not per row); the
-    decoder is applied to the raw bytes of each payload. Swap ``decoder``
-    for a real image/audio kernel in a full deployment — schema and batch
-    shape stay identical.
+    semantics, instead of fabricating 0s that look like real bytes.
     """
+    import numpy as np
 
-    if decoder is fake_decode_features:
-        # r14 fast path (guide §4.2): the default byte-statistics kernel
-        # vectorizes across the whole Arrow batch — one concatenation +
-        # one cumsum + reduceat instead of a Python loop with sum()/max()
-        # per payload. Integer sums are exact and mean_byte is the same
-        # single IEEE division (int64 sum / float64 n) the per-row path
-        # performs, so results are bit-identical (oracle re-proves).
-        import numpy as np
-
-        def run_vec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                payloads = pdf["payload"]
-                n_docs = len(payloads)
-                if n_docs == 0:
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": pdf["doc_id"].values,
-                            "n_bytes": pd.Series([], dtype="int32"),
-                            "mean_byte": pd.Series([], dtype="float64"),
-                            "max_byte": pd.Series([], dtype="object"),
-                            "head_byte": pd.Series([], dtype="object"),
-                        }
-                    )
-                    continue
-                lens = np.fromiter(
-                    (len(p) for p in payloads), dtype=np.int64, count=n_docs
-                )
-                blob = b"".join(bytes(p) for p in payloads)
-                data = np.frombuffer(blob, dtype=np.uint8)
-                starts = np.concatenate(([0], np.cumsum(lens)))[:-1]
-                nonempty = lens > 0
-                sums = np.zeros(n_docs, dtype=np.int64)
-                maxs = np.zeros(n_docs, dtype=np.int64)
-                heads = np.zeros(n_docs, dtype=np.int64)
-                if data.size:
-                    ne_starts = starts[nonempty]
-                    sums[nonempty] = np.add.reduceat(
-                        data.astype(np.int64), ne_starts
-                    )
-                    maxs[nonempty] = np.maximum.reduceat(data, ne_starts)
-                    heads[nonempty] = data[ne_starts]
-                mean = np.where(nonempty, sums / np.maximum(lens, 1), np.nan)
-                out = pd.DataFrame(
+    def run_vec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = pdf["payload"]
+            n_docs = len(payloads)
+            if n_docs == 0:
+                yield pd.DataFrame(
                     {
                         "doc_id": pdf["doc_id"].values,
-                        "n_bytes": lens.astype("int32"),
-                        "mean_byte": mean,
-                        "max_byte": pd.array(
-                            np.where(nonempty, maxs, 0), dtype="Int64"
-                        ),
-                        "head_byte": pd.array(
-                            np.where(nonempty, heads, 0), dtype="Int64"
-                        ),
+                        "n_bytes": pd.Series([], dtype="int32"),
+                        "mean_byte": pd.Series([], dtype="float64"),
+                        "max_byte": pd.Series([], dtype="object"),
+                        "head_byte": pd.Series([], dtype="object"),
                     }
                 )
-                out.loc[~nonempty, ["mean_byte", "max_byte", "head_byte"]] = None
-                yield out
-
-        return binary_df.mapInPandas(run_vec, schema=FEATURE_SCHEMA)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = pdf["payload"].map(decoder)
-            out = pd.DataFrame(list(feats))
-            out.insert(0, "doc_id", pdf["doc_id"].values)
+                continue
+            lens = np.fromiter(
+                (len(p) for p in payloads), dtype=np.int64, count=n_docs
+            )
+            blob = b"".join(bytes(p) for p in payloads)
+            data = np.frombuffer(blob, dtype=np.uint8)
+            starts = np.concatenate(([0], np.cumsum(lens)))[:-1]
+            nonempty = lens > 0
+            sums = np.zeros(n_docs, dtype=np.int64)
+            maxs = np.zeros(n_docs, dtype=np.int64)
+            heads = np.zeros(n_docs, dtype=np.int64)
+            if data.size:
+                ne_starts = starts[nonempty]
+                sums[nonempty] = np.add.reduceat(
+                    data.astype(np.int64), ne_starts
+                )
+                maxs[nonempty] = np.maximum.reduceat(data, ne_starts)
+                heads[nonempty] = data[ne_starts]
+            mean = np.where(nonempty, sums / np.maximum(lens, 1), np.nan)
+            out = pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"].values,
+                    "n_bytes": lens.astype("int32"),
+                    "mean_byte": mean,
+                    "max_byte": pd.array(
+                        np.where(nonempty, maxs, 0), dtype="Int64"
+                    ),
+                    "head_byte": pd.array(
+                        np.where(nonempty, heads, 0), dtype="Int64"
+                    ),
+                }
+            )
+            out.loc[~nonempty, ["mean_byte", "max_byte", "head_byte"]] = None
             yield out
 
-    return binary_df.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return binary_df.mapInPandas(run_vec, schema=FEATURE_SCHEMA)
 
 
 def q_multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,7 +155,7 @@ SQL_MULTIMODAL_META = """
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The mapInPandas decode pipeline with the deterministic fake kernel.
+    """The mapInPandas feature pipeline with the byte-statistics kernel.
 
     The byte statistics are integer-exact (mean emitted as an exact
     ratio-of-ints double), so even this Python-side path is oracle-checked
@@ -228,14 +185,15 @@ RESIZE_STRIDE = 4  # stand-in for an image resize's downsample factor
 RESIZE_SCHEMA = "doc_id long, n_bytes_in int, n_bytes_out int, out_md5 string"
 
 
-def resize_payload(binary_df: DataFrame, stride: int = RESIZE_STRIDE) -> DataFrame:
-    """'Resize' stub with real mapInPandas plumbing: keep every stride-th
-    byte of the payload (a real deployment swaps in PIL's Image.resize —
-    bytes in, smaller bytes out, same batch shape and schema contract)."""
+def resize_payload(binary_df: DataFrame) -> DataFrame:
+    """'Resize' stub with real mapInPandas plumbing: keep every
+    ``RESIZE_STRIDE``-th byte of the payload (a real deployment swaps in
+    PIL's Image.resize — bytes in, smaller bytes out, same batch shape and
+    schema contract)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = pdf["payload"].map(lambda p: bytes(p)[::stride])
+            out = pdf["payload"].map(lambda p: bytes(p)[::RESIZE_STRIDE])
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].values,
@@ -269,21 +227,20 @@ FRAME_STRIDE = 4  # keep every 4th frame
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame_len int, frame_md5 string"
 
 
-def sample_frames(
-    binary_df: DataFrame, frame_bytes: int = FRAME_BYTES, stride: int = FRAME_STRIDE
-) -> DataFrame:
+def sample_frames(binary_df: DataFrame) -> DataFrame:
     """Frame-sampling stub with real plumbing: chunk the payload into
-    fixed-size 'frames' and keep every stride-th one — the shape of video
-    keyframe extraction (1 input row → N output rows, Arrow-batched)."""
+    fixed-size 'frames' and keep every ``FRAME_STRIDE``-th one — the shape
+    of video keyframe extraction (1 input row → N output rows,
+    Arrow-batched)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 p = bytes(payload)
-                n_frames = (len(p) + frame_bytes - 1) // frame_bytes
-                for idx in range(0, n_frames, stride):
-                    fb = p[idx * frame_bytes : (idx + 1) * frame_bytes]
+                n_frames = (len(p) + FRAME_BYTES - 1) // FRAME_BYTES
+                for idx in range(0, n_frames, FRAME_STRIDE):
+                    fb = p[idx * FRAME_BYTES : (idx + 1) * FRAME_BYTES]
                     rows.append(
                         (doc_id, idx, len(fb), hashlib.md5(fb).hexdigest())
                     )

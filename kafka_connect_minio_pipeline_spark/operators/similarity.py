@@ -95,11 +95,11 @@ SQL_SIMILARITY_TOPK = f"""
 """
 
 
-def brute_topk_batch(em_raw: DataFrame, k: int = 3) -> DataFrame:
-    """Exact top-k neighbors for the first N_QUERIES vectors of a
+def brute_topk_batch(em_raw: DataFrame) -> DataFrame:
+    """Exact top-3 neighbors for the first N_QUERIES vectors of a
     (vec_id, embedding) relation. Queries are broadcast; ranking is a
     per-query window (row_number over cosine desc) — the scalable
-    many-query formulation: corpus scanned once, k·|Q| rows out."""
+    many-query formulation: corpus scanned once, 3·|Q| rows out."""
     em = _with_norms(em_raw)
     queries = em.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -121,7 +121,7 @@ def brute_topk_batch(em_raw: DataFrame, k: int = 3) -> DataFrame:
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 3)
     )
 
 
@@ -763,9 +763,7 @@ SQL_ANN_IVF = _ann_ivf_sql()
 # ---------------------------------------------------------------------------
 
 
-def class_centroids(
-    em: DataFrame, label_col: str = "label", vec_col: str = "embedding"
-) -> DataFrame:
+def class_centroids(em: DataFrame) -> DataFrame:
     """Element-wise per-label mean of the embedding column, exactly.
 
     posexplode → groupBy(label, pos) → decimal sum is the distributed
@@ -779,16 +777,16 @@ def class_centroids(
     double for ONE correctly-rounded IEEE division by the count.
     """
     ex = em.select(
-        label_col, F.posexplode(vec_col).alias("pos0", "e")
-    ).select(label_col, (F.col("pos0") + 1).alias("pos"), "e")
+        "label", F.posexplode("embedding").alias("pos0", "e")
+    ).select("label", (F.col("pos0") + 1).alias("pos"), "e")
     return (
-        ex.groupBy(label_col, "pos")
+        ex.groupBy("label", "pos")
         .agg(
             F.sum(F.col("e").cast("double").cast("decimal(16,6)")).alias("s"),
             F.count("*").alias("n"),
         )
         .select(
-            label_col,
+            "label",
             "pos",
             "n",
             (F.col("s").cast("double") / F.col("n")).alias("centroid"),

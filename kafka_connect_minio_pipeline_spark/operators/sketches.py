@@ -223,11 +223,11 @@ def cms_finish(sketch: DataFrame, hashed: DataFrame, key: str = "user_id") -> Da
     )
 
 
-def countmin_estimates(events: DataFrame, key: str = "user_id") -> DataFrame:
-    """Build a d×w count-min sketch over ``key`` occurrences and report
+def countmin_estimates(events: DataFrame) -> DataFrame:
+    """Build a d×w count-min sketch over ``user_id`` occurrences and report
     the sketch estimate next to the true count for the top keys."""
-    hashed = cms_hashed(events, key)
-    return cms_finish(cms_sketch(hashed), hashed, key)
+    hashed = cms_hashed(events, "user_id")
+    return cms_finish(cms_sketch(hashed), hashed, "user_id")
 
 
 def q_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -519,9 +519,7 @@ QSK_BIN_W = 512.0  # power of two: the bin division is float-exact
 QSK_QUANTILES = (0.5, 0.9, 0.99)
 
 
-def histogram_quantiles(
-    facts: DataFrame, group: str, value: str, bin_w: float = QSK_BIN_W
-) -> DataFrame:
+def histogram_quantiles(facts: DataFrame, group: str, value: str) -> DataFrame:
     """Quantile estimates from a fixed-width histogram sketch — the
     mergeable alternative to an exact per-group sort (``ts_mad``'s
     documented 100 TB swap, made concrete): the corpus collapses to
@@ -531,12 +529,12 @@ def histogram_quantiles(
     with linear interpolation inside the target bin (Prometheus
     ``histogram_quantile`` semantics). Error is bounded by bin width; the
     per-group window that follows runs over BIN COUNTS (bounded
-    cardinality ~ value-range / bin_w), never over rows. Everything
+    cardinality ~ value-range / QSK_BIN_W), never over rows. Everything
     downstream of the first groupBy is deterministic integer/IEEE
     arithmetic, so the DuckDB oracle reproduces the estimates exactly.
     """
     return histogram_quantile_finish(
-        histogram_bins(facts, group, value, bin_w), group, bin_w
+        histogram_bins(facts, group, value, QSK_BIN_W), group, QSK_BIN_W
     )
 
 

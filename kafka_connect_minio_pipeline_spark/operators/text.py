@@ -406,7 +406,7 @@ SQL_TEXT_LANGID = """
 TFIDF_TOP_K = 3
 
 
-def tfidf_top_terms(docs: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
     """Per-document top-k terms by smoothed TF-IDF.
 
     Plan shape (the one that survives 100 TB): explode + groupBy(doc,
@@ -443,7 +443,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TFIDF_TOP_K)
         .select("doc_id", "term", "tf", "df", "tfidf", "rank")
     )
 
@@ -539,7 +539,7 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def bm25_scores(docs: DataFrame, terms: tuple[str, ...] = BM25_TERMS) -> DataFrame:
+def bm25_scores(docs: DataFrame) -> DataFrame:
     """BM25 relevance of every document against a fixed keyword query —
     the retrieval scorer of a RAG / search-index pipeline, with a
     rational IDF surrogate ``(N - df + 0.5) / (df + 0.5)`` (the classic
@@ -563,19 +563,19 @@ def bm25_scores(docs: DataFrame, terms: tuple[str, ...] = BM25_TERMS) -> DataFra
     staged = docs.select(
         "doc_id",
         F.size(toks).alias("dl"),
-        *[term_count(t).alias(f"tf_{t}") for t in terms],
+        *[term_count(t).alias(f"tf_{t}") for t in BM25_TERMS],
     )
     stats = staged.agg(
         F.count("*").alias("n_docs"),
         (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
         *[
             F.sum(F.when(F.col(f"tf_{t}") > 0, 1).otherwise(0)).alias(f"df_{t}")
-            for t in terms
+            for t in BM25_TERMS
         ],
     )
     scored = staged.crossJoin(F.broadcast(stats))
     score = F.lit(0.0)
-    for t in terms:
+    for t in BM25_TERMS:
         tf = F.col(f"tf_{t}").cast("double")
         idf = (
             F.col("n_docs").cast("double") - F.col(f"df_{t}") + F.lit(0.5)
@@ -783,7 +783,7 @@ SQL_TEXT_COLLOCATIONS = f"""
 ZIPF_TOP_N = 500
 
 
-def zipf_fit(docs: DataFrame, top_n: int = ZIPF_TOP_N) -> DataFrame:
+def zipf_fit(docs: DataFrame) -> DataFrame:
     """Per-source Zipf's-law fit: OLS slope of ln(frequency) ~ ln(rank)
     over each source's top-N terms — natural text sits near −1, so the
     slope (with its R²) is a cheap distribution-level quality/anomaly
@@ -809,7 +809,7 @@ def zipf_fit(docs: DataFrame, top_n: int = ZIPF_TOP_N) -> DataFrame:
     w = Window.partitionBy("source").orderBy(F.col("n").desc(), "token")
     ranked = counts.select(
         "source", "n", F.row_number().over(w).alias("rank")
-    ).filter(F.col("rank") <= top_n)
+    ).filter(F.col("rank") <= ZIPF_TOP_N)
     # precision 18: x and y are multiplied before the sum (see dec9)
     x = dec9(F.log(F.col("rank").cast("double")), precision=18)
     y = dec9(F.log(F.col("n").cast("double")), precision=18)

@@ -81,10 +81,8 @@ BPE_MERGES = 8  # learned merge rounds (fixed constant, unrolled identically
 BPE_WORD_RE = "\\A[a-z0-9]+\\z"
 
 
-def _bpe_rounds(
-    words: DataFrame, n_merges: int = BPE_MERGES
-) -> tuple[DataFrame, list[DataFrame]]:
-    """Learn ``n_merges`` BPE merges over a (word, cnt) relation; return
+def _bpe_rounds(words: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
+    """Learn ``BPE_MERGES`` BPE merges over a (word, cnt) relation; return
     (final segmentations, per-round 1-row winner relations (pr, w) — pr
     NULL when the pair supply was exhausted) — the train half of a
     byte-pair tokenizer as pure dataflow (the inference half is
@@ -125,7 +123,7 @@ def _bpe_rounds(
         " ELSE CAST(array() AS ARRAY<STRING>) END"
     )
     winners: list[DataFrame] = []
-    for _ in range(n_merges):
+    for _ in range(BPE_MERGES):
         staged = cur.withColumn(
             "syms", F.split(F.expr("substring(seq, 2, length(seq) - 2)"), "><")
         )
@@ -155,9 +153,9 @@ def _bpe_rounds(
     return cur, winners
 
 
-def bpe_learn_segment(words: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
+def bpe_learn_segment(words: DataFrame) -> DataFrame:
     """Final per-word segmentations only (see :func:`_bpe_rounds`)."""
-    cur, _ = _bpe_rounds(words, n_merges)
+    cur, _ = _bpe_rounds(words)
     return cur
 
 
@@ -170,7 +168,7 @@ def bpe_apply_merges(
     of a subword vocab). Same representation and fold as the trainer:
     wrap every char, apply each 1-row broadcast winner in merge order
     via ``replace`` (exhausted rounds carry the unmatchable sentinel).
-    |words| rows × n_merges vocabulary-sized folds; never corpus-sized."""
+    |words| rows × BPE_MERGES vocabulary-sized folds; never corpus-sized."""
     cur = words.select(
         "w", F.regexp_replace(F.col("w"), "(.)", "<$1>").alias("seq")
     )
@@ -304,7 +302,7 @@ def q_text_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_cte_chain(n_merges: int = BPE_MERGES) -> tuple[str, str]:
+def _bpe_cte_chain() -> tuple[str, str]:
     """(CTE body, final-segmentation CTE name) shared by the
     vocab/apply/fertility oracles — the DuckDB twin of
     :func:`_corpus_words` + :func:`_bpe_rounds`. Each round's winner CTE
@@ -313,7 +311,7 @@ def _bpe_cte_chain(n_merges: int = BPE_MERGES) -> tuple[str, str]:
     coalesce) and its weight."""
     rounds = []
     prev = "s0"
-    for m in range(1, n_merges + 1):
+    for m in range(1, BPE_MERGES + 1):
         rounds.append(f"""
     p{m} AS (
         SELECT '<' || syms[i] || '><' || syms[i + 1] || '>' AS pr,
@@ -353,8 +351,8 @@ def _bpe_cte_chain(n_merges: int = BPE_MERGES) -> tuple[str, str]:
     return chain, prev
 
 
-def _bpe_apply_sql(n_merges: int = BPE_MERGES) -> str:
-    chain, prev = _bpe_cte_chain(n_merges)
+def _bpe_apply_sql() -> str:
+    chain, prev = _bpe_cte_chain()
     return f"""
     WITH {chain}
     SELECT d.doc_id,
@@ -367,12 +365,12 @@ def _bpe_apply_sql(n_merges: int = BPE_MERGES) -> str:
 """
 
 
-def _bpe_vocab_sql(n_merges: int = BPE_MERGES) -> str:
-    chain, _ = _bpe_cte_chain(n_merges)
+def _bpe_vocab_sql() -> str:
+    chain, _ = _bpe_cte_chain()
     arms = "\n    UNION ALL ".join(
         f"SELECT CAST({m} AS INTEGER) AS merge_rank, pr AS pair,"
         f" CAST(w AS BIGINT) AS n_occ FROM b{m} WHERE pr <> chr(1)"
-        for m in range(1, n_merges + 1)
+        for m in range(1, BPE_MERGES + 1)
     )
     return f"""
     WITH {chain}
@@ -380,8 +378,8 @@ def _bpe_vocab_sql(n_merges: int = BPE_MERGES) -> str:
 """
 
 
-def _bpe_fertility_sql(n_merges: int = BPE_MERGES) -> str:
-    chain, prev = _bpe_cte_chain(n_merges)
+def _bpe_fertility_sql() -> str:
+    chain, prev = _bpe_cte_chain()
     return f"""
     WITH {chain},
     perdoc AS (

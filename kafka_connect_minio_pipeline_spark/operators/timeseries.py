@@ -40,17 +40,11 @@ def _micros(c: Column) -> Column:
     return F.unix_micros(c.cast("timestamp"))
 
 
-def sessionize(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-    gap_min: int = SESSION_GAP_MIN,
-) -> DataFrame:
+def sessionize(df: DataFrame) -> DataFrame:
     """Assign gap-based sessions and aggregate per-session stats.
 
     A session is a maximal run of a user's events where consecutive gaps
-    are <= ``gap_min`` minutes — computed as a running sum of new-session
+    are <= ``SESSION_GAP_MIN`` minutes — computed as a running sum of new-session
     flags (lag + cumulative sum share one partition/order, so Catalyst
     plans ONE exchange + one sort for both window passes). The per-session
     rollup is the second and last shuffle. No state machine, no Python:
@@ -59,28 +53,28 @@ def sessionize(
     (at 100 TB, salt the rollup only if single-user timelines outgrow a
     partition — they don't for human-scale activity).
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, tiebreak_col)
-    prev_ts = F.lag(ts_col).over(w)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    prev_ts = F.lag("ts").over(w)
     is_new = (
         prev_ts.isNull()
-        | (F.col(ts_col) - prev_ts > F.expr(f"interval {gap_min} minutes"))
+        | (F.col("ts") - prev_ts > F.expr(f"interval {SESSION_GAP_MIN} minutes"))
     ).cast("int")
     # two selects: a window function can't nest inside another window's
     # aggregate. Same partition/order spec → Catalyst stacks both Window
     # operators behind ONE exchange + sort.
-    flagged = df.select(user_col, ts_col, tiebreak_col, is_new.alias("new_sess"))
+    flagged = df.select("user_id", "ts", "event_id", is_new.alias("new_sess"))
     seq = flagged.withColumn(
         "session_seq",
         F.sum("new_sess")
         .over(w.rowsBetween(Window.unboundedPreceding, 0))
         .cast("int"),
     )
-    return seq.groupBy(user_col, "session_seq").agg(
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
+    return seq.groupBy("user_id", "session_seq").agg(
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
         F.count("*").alias("n_events"),
         (
-            (_micros(F.max(ts_col)) - _micros(F.min(ts_col)))
+            (_micros(F.max("ts")) - _micros(F.min("ts")))
             / F.lit(1_000_000)
         )
         .cast("long")
@@ -122,13 +116,7 @@ SQL_SESSIONIZE = f"""
 # ---------------------------------------------------------------------------
 
 
-def gapfill_hourly(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def gapfill_hourly(df: DataFrame) -> DataFrame:
     """Resample each user's stream onto an hourly grid, carrying the last
     observed value forward across empty buckets.
 
@@ -142,34 +130,34 @@ def gapfill_hourly(
     explode fans out proportionally to wall-clock coverage, not event
     count — the right shape when events are heavily skewed per user.
     """
-    bucket = F.date_trunc("hour", F.col(ts_col))
-    wobs = Window.partitionBy(user_col, "bucket").orderBy(
-        F.desc(ts_col), F.desc(tiebreak_col)
+    bucket = F.date_trunc("hour", F.col("ts"))
+    wobs = Window.partitionBy("user_id", "bucket").orderBy(
+        F.desc("ts"), F.desc("event_id")
     )
     obs = (
-        df.select(user_col, bucket.alias("bucket"), ts_col, tiebreak_col, value_col)
+        df.select("user_id", bucket.alias("bucket"), "ts", "event_id", "value")
         .withColumn("rn", F.row_number().over(wobs))
         .filter(F.col("rn") == 1)
-        .select(user_col, "bucket", F.col(value_col).alias("obs_value"))
+        .select("user_id", "bucket", F.col("value").alias("obs_value"))
     )
     grid = (
-        df.groupBy(user_col)
+        df.groupBy("user_id")
         .agg(
-            F.date_trunc("hour", F.min(ts_col)).alias("lo"),
-            F.date_trunc("hour", F.max(ts_col)).alias("hi"),
+            F.date_trunc("hour", F.min("ts")).alias("lo"),
+            F.date_trunc("hour", F.max("ts")).alias("hi"),
         )
         .select(
-            user_col,
+            "user_id",
             F.explode(F.expr("sequence(lo, hi, interval 1 hour)")).alias("bucket"),
         )
     )
     wff = (
-        Window.partitionBy(user_col)
+        Window.partitionBy("user_id")
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    return grid.join(obs, [user_col, "bucket"], "left").select(
-        user_col,
+    return grid.join(obs, ["user_id", "bucket"], "left").select(
+        "user_id",
         F.col("bucket").cast("timestamp_ntz").alias("bucket"),
         F.last("obs_value", ignorenulls=True).over(wff).alias("value_ffill"),
         F.col("obs_value").isNotNull().alias("observed"),
@@ -215,42 +203,36 @@ SQL_GAPFILL = """
 FUNNEL_STEPS = ("signup", "click", "purchase")
 
 
-def funnel(
-    df: DataFrame,
-    steps: tuple[str, ...] = FUNNEL_STEPS,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def funnel(df: DataFrame) -> DataFrame:
     """Per-user staged funnel: the earliest time each step completed,
     where step k counts only at-or-after step k-1's completion time.
 
-    One aggregation per step, each keyed on ``user_col`` — Catalyst
+    One aggregation per step, each keyed on ``user_id`` — Catalyst
     plans every stage join co-partitioned on the same key, so after the
     first exchange the later stages reuse the partitioning (and the
     per-step relations only shrink). At 100 TB this is k passes over an
     ever-smaller survivor set, not a per-user sort of the full history.
     """
-    base = df.select(user_col, type_col, ts_col)
-    users = base.select(user_col).distinct()
+    base = df.select("user_id", "event_type", "ts")
+    users = base.select("user_id").distinct()
     out = users
     prev_col: str | None = None
-    for step in steps:
+    for step in FUNNEL_STEPS:
         step_ts = f"ts_{step}"
-        cand = base.filter(F.col(type_col) == step)
+        cand = base.filter(F.col("event_type") == step)
         if prev_col is not None:
             cand = cand.join(
-                out.filter(F.col(prev_col).isNotNull()).select(user_col, prev_col),
-                user_col,
-            ).filter(F.col(ts_col) >= F.col(prev_col))
-        reached = cand.groupBy(user_col).agg(F.min(ts_col).alias(step_ts))
-        out = out.join(reached, user_col, "left")
+                out.filter(F.col(prev_col).isNotNull()).select("user_id", prev_col),
+                "user_id",
+            ).filter(F.col("ts") >= F.col(prev_col))
+        reached = cand.groupBy("user_id").agg(F.min("ts").alias(step_ts))
+        out = out.join(reached, "user_id", "left")
         prev_col = step_ts
     stage = F.lit(0)
-    for i, step in enumerate(steps):
+    for i, step in enumerate(FUNNEL_STEPS):
         stage = F.when(F.col(f"ts_{step}").isNotNull(), i + 1).otherwise(stage)
     return out.select(
-        user_col, *[f"ts_{s}" for s in steps], stage.cast("int").alias("stage")
+        "user_id", *[f"ts_{s}" for s in FUNNEL_STEPS], stage.cast("int").alias("stage")
     )
 
 
@@ -293,13 +275,7 @@ SQL_FUNNEL = """
 Z_THRESHOLD = 2.5
 
 
-def zscore_outliers(
-    df: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-    id_col: str = "event_id",
-    threshold: float = Z_THRESHOLD,
-) -> DataFrame:
+def zscore_outliers(df: DataFrame) -> DataFrame:
     """Flag events whose value is a per-user z-score outlier.
 
     Per-key moments come from exact decimal sums (the ``agg_stats``
@@ -312,8 +288,8 @@ def zscore_outliers(
     correct, chosen at runtime), then the z expression is one
     IEEE-identical double tree so even ROUND agrees bit-for-bit.
     """
-    v6 = F.col(value_col).cast("double").cast("decimal(18,6)")
-    stats = df.groupBy(key_col).agg(
+    v6 = F.col("value").cast("double").cast("decimal(18,6)")
+    stats = df.groupBy("user_id").agg(
         F.count("*").alias("n"),
         F.sum(v6).alias("s"),
         F.sum(v6 * v6).alias("sq"),
@@ -325,17 +301,17 @@ def zscore_outliers(
     # z-score is 0/0, an ANSI DIVIDE_BY_ZERO crash unguarded (found by
     # the degenerate-events net) and definitionally has no outliers;
     # NULL z drops at the threshold filter on both engines
-    z = F.when(var > 0, (F.col(value_col) - mean) / F.sqrt(var))
+    z = F.when(var > 0, (F.col("value") - mean) / F.sqrt(var))
     return (
-        df.select(id_col, key_col, value_col)
-        .join(stats.filter(F.col("n") > 1), key_col)
+        df.select("event_id", "user_id", "value")
+        .join(stats.filter(F.col("n") > 1), "user_id")
         .select(
-            id_col,
-            key_col,
-            value_col,
+            "event_id",
+            "user_id",
+            "value",
             F.round(z, 6).alias("zscore"),
         )
-        .filter(F.abs(F.col("zscore")) >= threshold)
+        .filter(F.abs(F.col("zscore")) >= Z_THRESHOLD)
     )
 
 
@@ -371,13 +347,7 @@ SQL_TS_ZSCORE = f"""
 # ---------------------------------------------------------------------------
 
 
-def scd2(
-    df: DataFrame,
-    key_col: str = "user_id",
-    attr_col: str = "event_type",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def scd2(df: DataFrame) -> DataFrame:
     """Build a type-2 slowly-changing dimension from an event stream:
     per key, the validity intervals of each attribute value, consecutive
     duplicates collapsed (CDC compaction), ``valid_to`` open on the
@@ -391,19 +361,21 @@ def scd2(
     the key's change history, so 100 TB of events with human-scale keys
     partitions evenly; no join, no second pass over the raw stream.
     """
-    w = Window.partitionBy(key_col).orderBy(ts_col, tiebreak_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     changes = (
-        df.select(key_col, attr_col, ts_col, tiebreak_col)
-        .withColumn("prev_attr", F.lag(attr_col).over(w))
-        .filter(F.col("prev_attr").isNull() | (F.col("prev_attr") != F.col(attr_col)))
+        df.select("user_id", "event_type", "ts", "event_id")
+        .withColumn("prev_attr", F.lag("event_type").over(w))
+        .filter(
+            F.col("prev_attr").isNull() | (F.col("prev_attr") != F.col("event_type"))
+        )
     )
     return changes.select(
-        key_col,
-        attr_col,
-        F.col(ts_col).alias("valid_from"),
-        F.lead(ts_col).over(w).alias("valid_to"),
+        "user_id",
+        "event_type",
+        F.col("ts").alias("valid_from"),
+        F.lead("ts").over(w).alias("valid_to"),
         F.row_number().over(w).cast("int").alias("version"),
-        F.lead(ts_col).over(w).isNull().alias("is_current"),
+        F.lead("ts").over(w).isNull().alias("is_current"),
     )
 
 
@@ -435,7 +407,7 @@ EWMA_ALPHA = 0.3
 EWMA_LOOKBACK = 32  # frame length; (1-α)^32 ≈ 1e-5 — the dropped tail
 
 
-def ewma(events: DataFrame, alpha: float = EWMA_ALPHA) -> DataFrame:
+def ewma(events: DataFrame) -> DataFrame:
     """Truncated exponentially-weighted moving average of ``value`` per
     user (the streaming-metrics smoother: anomaly baselines, rate
     trends).
@@ -469,7 +441,7 @@ def ewma(events: DataFrame, alpha: float = EWMA_ALPHA) -> DataFrame:
     smoothed = F.aggregate(
         F.slice(F.col("frame"), 2, EWMA_LOOKBACK - 1),
         F.element_at(F.col("frame"), 1),
-        lambda acc, x: F.lit(alpha) * x + F.lit(1.0 - alpha) * acc,
+        lambda acc, x: F.lit(EWMA_ALPHA) * x + F.lit(1.0 - EWMA_ALPHA) * acc,
     )
     return staged.select(
         "event_id", "user_id", "ts", "value", smoothed.alias("ewma")
@@ -717,9 +689,9 @@ SQL_TS_OVERLAP = f"""
 MAD_K = 3.0
 
 
-def mad_outliers(ev: DataFrame, k: float = MAD_K) -> DataFrame:
+def mad_outliers(ev: DataFrame) -> DataFrame:
     """Robust anomaly stats per series: median, MAD (median absolute
-    deviation), and the count of points beyond ``k·MAD`` — the
+    deviation), and the count of points beyond ``MAD_K·MAD`` — the
     outlier detector that, unlike :func:`zscore_outliers`, is not itself
     dragged by the outliers it hunts (every extreme point contaminates a
     mean/stddev; medians shrug it off).
@@ -748,7 +720,7 @@ def mad_outliers(ev: DataFrame, k: float = MAD_K) -> DataFrame:
             F.count("*").alias("n"),
             F.sum(
                 F.when(
-                    F.abs(F.col("value") - F.col("med")) > F.lit(k) * F.col("mad"),
+                    F.abs(F.col("value") - F.col("med")) > F.lit(MAD_K) * F.col("mad"),
                     1,
                 ).otherwise(0)
             ).alias("n_outliers"),
@@ -927,7 +899,6 @@ def cross_correlation(
     ev: DataFrame,
     type_a: str = CROSS_CORR_A,
     type_b: str = CROSS_CORR_B,
-    max_lag_h: int = CROSS_CORR_MAX_LAG_H,
 ) -> DataFrame:
     """Lagged cross-correlation between two event streams ("do clicks
     lead purchases, and by how many hours?") — the leading-indicator
@@ -976,7 +947,7 @@ def cross_correlation(
         F.coalesce("a_cnt", F.lit(0)).alias("a_cnt"),
         F.coalesce("b_cnt", F.lit(0)).alias("b_cnt"),
     )
-    lags = ev.sparkSession.range(0, max_lag_h + 1).select(
+    lags = ev.sparkSession.range(0, CROSS_CORR_MAX_LAG_H + 1).select(
         F.col("id").cast("bigint").alias("lag_hours")
     )
     x = series.select("hour", "a_cnt")
@@ -1154,13 +1125,7 @@ SQL_TS_WOW = """
 # ---------------------------------------------------------------------------
 
 
-def markov_transitions(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def markov_transitions(df: DataFrame) -> DataFrame:
     """First-order Markov transition matrix of event types: for every
     ordered pair of consecutive events in a user's timeline, the count
     and conditional probability P(next | current) — the classic user-
@@ -1174,10 +1139,10 @@ def markov_transitions(
     data-sized cost is the one user-keyed shuffle; skew is bounded by
     the busiest single user, same argument as sessionize.
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, tiebreak_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = df.select(
-        F.col(type_col).alias("from_type"),
-        F.lead(type_col).over(w).alias("to_type"),
+        F.col("event_type").alias("from_type"),
+        F.lead("event_type").over(w).alias("to_type"),
     ).filter(F.col("to_type").isNotNull())
     counts = pairs.groupBy("from_type", "to_type").agg(F.count("*").alias("n"))
     wrow = Window.partitionBy("from_type")
@@ -1346,13 +1311,7 @@ SQL_TS_CHANGEPOINT = """
 # ---------------------------------------------------------------------------
 
 
-def interpolate_hourly(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def interpolate_hourly(df: DataFrame) -> DataFrame:
     """Gap-fill by LINEAR INTERPOLATION instead of forward-fill: missing
     hours get the straight line between the surrounding observations —
     the densification a rate/metric series wants when step-functions
@@ -1375,48 +1334,48 @@ def interpolate_hourly(
     to forward-fill. Buckets-per-user is wall-clock-bounded, same scale
     argument as gapfill.
     """
-    bucket = F.date_trunc("hour", F.col(ts_col))
-    wobs = Window.partitionBy(user_col, "bucket").orderBy(
-        F.desc(ts_col), F.desc(tiebreak_col)
+    bucket = F.date_trunc("hour", F.col("ts"))
+    wobs = Window.partitionBy("user_id", "bucket").orderBy(
+        F.desc("ts"), F.desc("event_id")
     )
     obs = (
-        df.select(user_col, bucket.alias("bucket"), ts_col, tiebreak_col, value_col)
+        df.select("user_id", bucket.alias("bucket"), "ts", "event_id", "value")
         .withColumn("rn", F.row_number().over(wobs))
         .filter(F.col("rn") == 1)
         .select(
-            user_col,
+            "user_id",
             "bucket",
-            F.col(value_col).cast("decimal(18,6)").alias("obs_value"),
+            F.col("value").cast("decimal(18,6)").alias("obs_value"),
         )
     )
     grid = (
-        df.groupBy(user_col)
+        df.groupBy("user_id")
         .agg(
-            F.date_trunc("hour", F.min(ts_col)).alias("lo"),
-            F.date_trunc("hour", F.max(ts_col)).alias("hi"),
+            F.date_trunc("hour", F.min("ts")).alias("lo"),
+            F.date_trunc("hour", F.max("ts")).alias("hi"),
         )
         .select(
-            user_col,
+            "user_id",
             F.explode(F.expr("sequence(lo, hi, interval 1 hour)")).alias("bucket"),
         )
     )
-    joined = grid.join(obs, [user_col, "bucket"], "left")
+    joined = grid.join(obs, ["user_id", "bucket"], "left")
     hidx = F.expr(
         "timestampdiff(HOUR, TIMESTAMP'2024-01-01 00:00:00', bucket)"
     ).cast("bigint")
     obs_h = F.when(F.col("obs_value").isNotNull(), hidx)
     wprev = (
-        Window.partitionBy(user_col)
+        Window.partitionBy("user_id")
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     wnext = (
-        Window.partitionBy(user_col)
+        Window.partitionBy("user_id")
         .orderBy("bucket")
         .rowsBetween(0, Window.unboundedFollowing)
     )
     staged = joined.select(
-        user_col,
+        "user_id",
         "bucket",
         hidx.alias("h"),
         F.col("obs_value").isNotNull().alias("observed"),
@@ -1439,7 +1398,7 @@ def interpolate_hourly(
         .when(F.col("pv").isNotNull(), F.col("pv"))
     )
     return staged.select(
-        user_col,
+        "user_id",
         F.col("bucket").cast("timestamp_ntz").alias("bucket"),
         "observed",
         interp.alias("value_interp"),
@@ -1610,12 +1569,10 @@ SQL_TS_CONCURRENCY = """
 SEASONAL_Z = 3.0
 
 
-def seasonal_adjusted_outliers(
-    df: DataFrame, threshold: float = SEASONAL_Z
-) -> DataFrame:
+def seasonal_adjusted_outliers(df: DataFrame) -> DataFrame:
     """Anomalies AFTER removing the hour-of-day pattern: an event is
     flagged when its value deviates from its series' seasonal mean for
-    that hour by ≥ ``threshold`` residual standard deviations. A plain
+    that hour by ≥ ``SEASONAL_Z`` residual standard deviations. A plain
     z-score (ts_zscore) flags every rush-hour peak; this flags what is
     unusual GIVEN the hour — the difference between "traffic is high at
     9am" (normal) and "traffic is high at 3am" (incident).
@@ -1670,7 +1627,7 @@ def seasonal_adjusted_outliers(
             F.round(seasonal_mean, 6).alias("seasonal_mean"),
             F.round(z, 6).alias("z_adj"),
         )
-        .filter(F.abs(F.col("z_adj")) >= threshold)
+        .filter(F.abs(F.col("z_adj")) >= SEASONAL_Z)
     )
 
 
@@ -1721,7 +1678,7 @@ SQL_TS_ANOMALY_SEASONAL = f"""
 SNAIVE_SEASON_H = 168  # weekly seasonality on the hourly grid
 
 
-def snaive_backtest(ev: DataFrame, season_h: int = SNAIVE_SEASON_H) -> DataFrame:
+def snaive_backtest(ev: DataFrame) -> DataFrame:
     """Backtest of the SEASONAL-NAIVE forecaster (ŷ(t) = y(t − 1 week))
     on the hourly event rate — the baseline every forecasting system
     must beat, and the honest way to report it: walk the real history,
@@ -1759,7 +1716,7 @@ def snaive_backtest(ev: DataFrame, season_h: int = SNAIVE_SEASON_H) -> DataFrame
         "event_type",
         "hour",
         "y",
-        F.lag("y", season_h).over(w).alias("yhat"),
+        F.lag("y", SNAIVE_SEASON_H).over(w).alias("yhat"),
     ).filter(F.col("yhat").isNotNull())
     abs_err = F.abs(F.col("yhat") - F.col("y"))
     smape_term = dec9(

@@ -360,15 +360,8 @@ SQL_WINDOW_ROLLING_SLOPE = f"""
 ROLL_MED_PRECEDING = 6  # frame: current row + 6 preceding = last 7 events
 
 
-def rolling_median(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    preceding: int = ROLL_MED_PRECEDING,
-) -> DataFrame:
-    """EXACT rolling (lower) median of each user's last ``preceding``+1
+def rolling_median(df: DataFrame) -> DataFrame:
+    """EXACT rolling (lower) median of each user's last ``ROLL_MED_PRECEDING``+1
     values — the robust smoother where a rolling mean chases outliers.
 
     No engine exposes median as a frame aggregate, so the frame is
@@ -383,19 +376,19 @@ def rolling_median(
     unbounded running medians use agg_median_twopass's histogram
     selection instead.
     """
-    val = F.col(value_col).cast("decimal(18,6)")
+    val = F.col("value").cast("decimal(18,6)")
     w = (
-        Window.partitionBy(key_col)
-        .orderBy(ts_col, tiebreak_col)
-        .rowsBetween(-preceding, 0)
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-ROLL_MED_PRECEDING, 0)
     )
     frame = F.array_sort(F.collect_list(val).over(w))
     med = F.element_at(
         frame, F.floor((F.size(frame) + F.lit(1)) / 2).cast("int")
     )
     return df.select(
-        key_col,
-        tiebreak_col,
+        "user_id",
+        "event_id",
         F.size(frame).alias("n_in_frame"),
         med.cast("double").alias("rolling_median"),
     )

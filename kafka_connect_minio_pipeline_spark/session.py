@@ -6,7 +6,8 @@ chosen to also be the right default on a 1000-executor cluster:
 - AQE on (runtime partition coalescing, skew-join splitting) — at 100 TB the
   static shuffle-partition count is always wrong for some stage; AQE fixes it.
 - shuffle partitions sized to core count locally; on a real cluster AQE's
-  coalescing makes the initial number far less sensitive.
+  coalescing makes the initial number far less sensitive. ``tables.load``
+  fills in the same count only for a session that never set the key.
 - UTC session timezone so timestamp semantics are deployment-independent.
 - Arrow enabled for any pandas interchange (vectorized, not per-row pickling).
 - driver heap sized from the machine (``driver_memory_for``), never a literal.
@@ -17,6 +18,8 @@ chosen to also be the right default on a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -57,7 +60,7 @@ def get_spark(
         # local mode: one shuffle partition per core keeps every stage busy
         # without tiny-task overhead. On a cluster this would be
         # 2-3x total cores; AQE coalesces the excess either way.
-        shuffle_partitions = max(cores, 4)
+        shuffle_partitions = cores
     if driver_memory is None:
         driver_memory = _machine_driver_memory()
     builder = (
@@ -83,3 +86,30 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def conf_is_set(spark: SparkSession, key: str) -> bool:
+    """Whether the session holds ``key`` itself (from the builder or a
+    runtime set) rather than reading Spark's default for it."""
+    return spark._jsparkSession.sessionState().conf().contains(key)
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set session confs for the duration of a block, then put the session
+    back as it was: a key it held gets its old value again, a key it did
+    not hold is unset (so it reads Spark's default, not a pinned copy)."""
+    before = {
+        key: spark.conf.get(key) if conf_is_set(spark, key) else None
+        for key in confs
+    }
+    for key, val in confs.items():
+        spark.conf.set(key, val)
+    try:
+        yield
+    finally:
+        for key, old in before.items():
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from .session import conf_scope
+
 MB = 1024 * 1024
 
 
@@ -111,21 +113,8 @@ def write_compacted(
         ),
         "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
     }
-    before = {}
-    for key, val in overrides.items():
-        try:
-            before[key] = spark.conf.get(key)
-        except Exception:
-            before[key] = None
-        spark.conf.set(key, val)
-    try:
+    with conf_scope(spark, overrides):
         df.hint("rebalance").write.mode(mode).format(fmt).save(path)
-    finally:
-        for key, old in before.items():
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
 
 
 def write_clustered(

@@ -11,11 +11,11 @@ from __future__ import annotations
 
 import itertools
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..scratch import scratch_dir
+from ..session import conf_scope
 from ..staging import table_parts
 
 _counter = itertools.count()
@@ -57,29 +57,16 @@ def state_partitions(input_bytes: int) -> int:
     )
 
 
-@contextmanager
 def _scaled_state_partitions(spark: SparkSession, input_bytes: int | None):
     """Scope spark.sql.shuffle.partitions to the data-derived count for
     the duration of one streaming query (the conf is read at query
     START, so the scope need only cover .start()..awaitTermination).
     Restores the session value after — batch plans keep their AQE-
     coalesced sizing either way."""
-    if input_bytes is None:
-        yield
-        return
-    key = "spark.sql.shuffle.partitions"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, str(state_partitions(input_bytes)))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    confs = {}
+    if input_bytes is not None:
+        confs["spark.sql.shuffle.partitions"] = str(state_partitions(input_bytes))
+    return conf_scope(spark, confs)
 
 
 def _ckpt_dir() -> str:
@@ -95,7 +82,6 @@ ROCKSDB_PROVIDER = (
 )
 
 
-@contextmanager
 def rocksdb_state(spark: SparkSession):
     """Run streaming queries with the RocksDB state store.
 
@@ -107,19 +93,9 @@ def rocksdb_state(spark: SparkSession):
     session-conf scope: queries started inside the block use RocksDB,
     previously-running queries are untouched. Results must be identical
     to the default provider (asserted in tests/test_streaming.py)."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    return conf_scope(
+        spark, {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}
+    )
 
 
 def _await_or_raise(q, timeout_s: int) -> None:

@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .session import conf_is_set
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -32,32 +34,26 @@ TABLE_NAMES = (
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
-    """Runtime-settable confs the engine relies on, applied idempotently.
-
-    The driver may hand us an arbitrary session; all confs below are safe
-    to set at runtime:
+    """The confs the table readers need, applied idempotently to whatever
+    session the caller hands in:
     - UTC session tz → timestamp display/NTZ-strip is machine-independent
       (determinism);
     - nanosAsLong → events.parquet (TIMESTAMP_NANOS) is readable at all
       (correctness);
-    - AQE + partition coalescing → a bare session defaults to 200 shuffle
-      partitions regardless of data size; AQE right-sizes every exchange at
-      runtime, which is also exactly the knob that keeps these plans sane
-      from sf0.01 up to 100 TB (skew-join splitting comes free with it);
-    - shuffle.partitions → AQE ignores it for batch, but Structured
-      Streaming disables AQE for stateful plans and allocates one state
-      store per shuffle partition, so the 200 default means 200 tiny
-      RocksDB/HDFS state handles per stateful op locally. Sized to the
-      executor thread count; a real cluster deployment sets it to the
-      cluster's core count before the first checkpoint pins it.
+    - shuffle.partitions, only when the session never set it → AQE ignores
+      it for batch, but Structured Streaming disables AQE for stateful
+      plans and allocates one state store per shuffle partition, so the
+      200 default means 200 tiny RocksDB/HDFS state handles per stateful
+      op locally. Filled in as the executor thread count; a value the
+      session chose (``get_spark``, a test, a cluster deployment) stands.
+    AQE is Spark's default and ``get_spark`` sets it; it is not set here.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
+    if not conf_is_set(spark, "spark.sql.shuffle.partitions"):
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        )
 
 
 def spread(df: DataFrame, *keys: str) -> DataFrame:
@@ -242,12 +238,12 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view (for the SQL-expressed operators:
     grouping sets, asof emulation, ... Catalyst plans SQL and DataFrame code
     identically, so this is a syntax choice, not an engine fork)."""
     for name in TABLE_NAMES:
-        load(spark, sf_dir, name).createOrReplaceTempView(f"{prefix}{name}")
+        load(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def sql(spark: SparkSession, query: str, sf_dir: str) -> DataFrame:

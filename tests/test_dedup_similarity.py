@@ -17,7 +17,6 @@ from kafka_connect_minio_pipeline_spark.operators import (
 )
 from kafka_connect_minio_pipeline_spark.operators.multimodal import (
     binary_table,
-    decode_image,
     extract_features,
 )
 from oracle_utils import lloyd_reference, nearest_reference, union_find_labels
@@ -342,27 +341,12 @@ def test_langid_deterministic_and_total(spark, sf_dir):
 
 
 def test_multimodal_stub_contract(spark, sf_dir):
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
     b = binary_table(spark, sf_dir)
     assert dict(b.dtypes)["payload"] == "binary"
     feats = extract_features(b)
     assert feats.columns == ["doc_id", "n_bytes", "mean_byte", "max_byte", "head_byte"]
     row = feats.orderBy("doc_id").first()
     assert row["n_bytes"] > 0 and 0 <= row["mean_byte"] <= 255
-
-
-def test_multimodal_custom_decoder_injection(spark, sf_dir):
-    """A custom kernel slots into the same mapInPandas plumbing."""
-    calls = []
-
-    def fake(payload: bytes) -> dict:
-        calls.append(1)
-        return {"n_bytes": len(payload), "mean_byte": 1.0, "max_byte": 2, "head_byte": 3}
-
-    feats = extract_features(binary_table(spark, sf_dir), decoder=fake)
-    out = feats.agg(F.min("mean_byte"), F.max("max_byte")).first()
-    assert (out[0], out[1]) == (1.0, 2)
 
 
 def test_connected_components_transitive_chain(spark):

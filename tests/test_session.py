@@ -1,6 +1,7 @@
-"""Session sizing and the Python worker daemon (``session.get_spark``,
-``daemon``): the stat-gated zip-archive invalidation, the machine-sized
-driver heap, and workers that import the package from any directory."""
+"""Session sizing, session confs and the Python worker daemon
+(``session.get_spark``, ``daemon``): the stat-gated zip-archive
+invalidation, the machine-sized driver heap, workers that import the
+package from any directory, and who owns each session conf."""
 
 from __future__ import annotations
 
@@ -16,7 +17,12 @@ import zipimport
 import pytest
 
 from kafka_connect_minio_pipeline_spark import daemon
-from kafka_connect_minio_pipeline_spark.session import driver_memory_for
+from kafka_connect_minio_pipeline_spark.session import (
+    conf_is_set,
+    conf_scope,
+    driver_memory_for,
+)
+from kafka_connect_minio_pipeline_spark.tables import load
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -189,3 +195,43 @@ def test_workers_import_package_from_any_directory(tmp_path):
     expected = "invalidate_caches" if hasattr(zipimport.zipimporter, "_get_files") \
         else "_invalidate_caches"
     assert row["gate"] == expected
+
+
+SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+def test_load_keeps_the_sessions_shuffle_partitions(spark, sf_dir):
+    """A shuffle-partition count the session chose survives ``load``."""
+    orig = spark.conf.get(SHUFFLE)
+    try:
+        spark.conf.set(SHUFFLE, "37")
+        load(spark, sf_dir, "orders")
+        assert spark.conf.get(SHUFFLE) == "37"
+    finally:
+        spark.conf.set(SHUFFLE, orig)
+
+
+def test_load_fills_in_shuffle_partitions_the_session_never_set(spark, sf_dir):
+    orig = spark.conf.get(SHUFFLE)
+    try:
+        spark.conf.unset(SHUFFLE)
+        assert not conf_is_set(spark, SHUFFLE)
+        load(spark, sf_dir, "orders")
+        assert spark.conf.get(SHUFFLE) == str(spark.sparkContext.defaultParallelism)
+    finally:
+        spark.conf.set(SHUFFLE, orig)
+
+
+def test_conf_scope_restores_a_held_value_and_unsets_a_default(spark):
+    held = "spark.sql.files.maxRecordsPerFile"
+    unheld = "spark.sql.files.openCostInBytes"
+    spark.conf.set(held, "5")
+    spark.conf.unset(unheld)
+    try:
+        with conf_scope(spark, {held: "7", unheld: "1234"}):
+            assert spark.conf.get(held) == "7"
+            assert spark.conf.get(unheld) == "1234"
+        assert spark.conf.get(held) == "5"
+        assert not conf_is_set(spark, unheld)
+    finally:
+        spark.conf.unset(held)
