@@ -14,9 +14,11 @@ On a cluster the analogue is executor local SSD / instance store for
 shuffle+staging and durable shared storage for checkpoints — the split
 is the same, only the mount points change.
 
-Every directory handed out here is registered for removal at process
-exit, and callers whose staged relation is a pure function of their
-inputs should take :func:`scratch_dir_keyed` — a memoized per-key path
+:func:`scoped_scratch_dir` is removed when its block exits, for artifacts
+nothing reads afterwards (an availableNow checkpoint). Every other
+directory handed out here is registered for removal at process exit, and
+callers whose staged relation is a pure function of their inputs should
+take :func:`scratch_dir_keyed` — a memoized per-key path
 reused across invocations (each call still rewrites it with
 ``mode("overwrite")``, so no work is skipped; only the mkdtemp-per-call
 directory accumulation in a long-lived session goes away — ADVICE r11).
@@ -29,6 +31,8 @@ import os
 import shutil
 import tempfile
 import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 _CREATED: list[str] = []
 _KEYED: dict[tuple, str] = {}
@@ -51,6 +55,16 @@ def scratch_dir(prefix: str) -> str:
     with _LOCK:
         _CREATED.append(d)
     return d
+
+
+@contextmanager
+def scoped_scratch_dir(prefix: str) -> Iterator[str]:
+    """A fresh throwaway directory, removed when the block exits."""
+    d = tempfile.mkdtemp(prefix=prefix, dir=_base())
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def scratch_dir_keyed(prefix: str, *key) -> str:

@@ -13,6 +13,21 @@ chosen to also be the right default on a 1000-executor cluster:
 - driver heap sized from the machine (``driver_memory_for``), never a literal.
 - Python workers fork from this package's ``daemon`` (stat-gated zip-archive
   invalidation) and import the package from any working directory.
+- stream metadata logs (``offsets/``, ``commits/``, a file source's
+  ``sources/0``, a file sink's ``_spark_metadata``, HDFS-backed state-store
+  deltas) go through ``FileSystemBasedCheckpointFileManager``:
+  ``FileSystem.create`` of a temporary file, then ``FileSystem.rename``.
+  Spark's default, the FileContext manager, checks each rename's paths
+  with link-status calls that, on the local file system without the
+  native Hadoop library, fork a ``readlink`` process each (dozens per
+  micro-batch). Rename semantics: a log write never overwrites
+  (``overwriteIfPossible=false``), so the manager checks ``exists(dst)``
+  and then renames. HDFS ``rename`` refuses an existing destination on
+  its own; local ``rename(2)`` replaces one, so on local disk the
+  ``exists`` check is the guard. That leaves a window only for two
+  concurrent writers on one checkpoint: Spark refuses a second active run
+  of the same query id, and the runner's scratch checkpoints are fresh for
+  each run.
 """
 
 from __future__ import annotations
@@ -25,6 +40,10 @@ from pyspark.sql import SparkSession
 
 # the directory holding this package, for the Python workers' import path
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def driver_memory_for(meminfo: str) -> str | None:
@@ -80,6 +99,8 @@ def get_spark(
         # environment's PYTHONPATH when it starts the workers
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.python.daemon.module", f"{__package__}.daemon")
+        .config("spark.sql.streaming.checkpointFileManagerClass",
+                CHECKPOINT_FILE_MANAGER)
     )
     if driver_memory:
         builder = builder.config("spark.driver.memory", driver_memory)

@@ -15,7 +15,7 @@ from ..pipeline.profile import TRANSFORM_SQL
 from ..registry import Query
 from . import windows as W
 from .pipeline import streaming_profile_pipeline
-from .runner import run_to_memory, source_bytes
+from .runner import run_available_now, run_to_memory, source_bytes
 from ..scratch import scratch_dir, scratch_dir_keyed
 
 
@@ -312,15 +312,7 @@ def q_stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = stream_table(spark, sf_dir, "events")
-    from .runner import _await_or_raise, _ckpt_dir
-
-    q = (
-        src.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", _ckpt_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_raise(q, 300)
+    run_available_now(src.writeStream.foreachBatch(merge_batch), 300)
     versions = [
         int(d.split("_")[1])
         for d in os.listdir(root)

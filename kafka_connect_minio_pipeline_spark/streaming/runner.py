@@ -2,9 +2,10 @@
 
 ``trigger(availableNow=True)`` processes everything currently in the
 source then stops — the deterministic-test execution mode for Structured
-Streaming. Results land in a memory sink (driver-side table); checkpoints
-go to a throwaway temp dir. Query names are uniquified so repeated runs in
-one session (the driver runs every query twice for hashing) never collide.
+Streaming. Results land in a memory sink (driver-side table); each run's
+checkpoint goes to a throwaway scratch dir removed when the run ends.
+Query names are uniquified so repeated runs in one session (the driver
+runs every query twice for hashing) never collide.
 """
 
 from __future__ import annotations
@@ -13,8 +14,9 @@ import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
-from ..scratch import scratch_dir
+from ..scratch import scoped_scratch_dir
 from ..session import conf_scope
 from ..staging import table_parts
 
@@ -69,14 +71,6 @@ def _scaled_state_partitions(spark: SparkSession, input_bytes: int | None):
     return conf_scope(spark, confs)
 
 
-def _ckpt_dir() -> str:
-    """Throwaway checkpoint dir for availableNow runs — these satisfy the
-    streaming commit protocol within one deterministic run and are never
-    restarted from, so RAM-backed scratch is strictly better (see
-    scratch.py; durable-checkpoint restart safety is tested separately
-    with on-disk dirs)."""
-    return scratch_dir("kcm_ckpt_")
-
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -98,14 +92,30 @@ def rocksdb_state(spark: SparkSession):
     )
 
 
-def _await_or_raise(q, timeout_s: int) -> None:
-    """awaitTermination(timeout) returns False on timeout — a silently
-    part-filled sink would be WRONG results, so stop the query and fail."""
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {q.name or q.id} did not finish within {timeout_s}s"
+def run_available_now(writer: DataStreamWriter, timeout_s: int) -> None:
+    """Start a prepared ``writeStream`` with ``trigger(availableNow=True)``
+    on a throwaway checkpoint, wait for it, and remove the checkpoint.
+
+    The checkpoint only carries the streaming commit protocol through this
+    one deterministic run and is never restarted from, so it lives in
+    RAM-backed scratch (scratch.py) for the run alone: a long session does
+    not pile up one checkpoint per stream call. Durable-checkpoint restart
+    safety is tested separately with on-disk dirs.
+
+    ``awaitTermination(timeout)`` returns False on timeout: a silently
+    part-filled sink would be WRONG results, so the query is stopped and
+    the run fails."""
+    with scoped_scratch_dir("kcm_ckpt_") as ckpt:
+        q = (
+            writer.option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
+        if not q.awaitTermination(timeout_s):
+            q.stop()
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} did not finish within {timeout_s}s"
+            )
 
 
 def run_to_memory(
@@ -121,15 +131,10 @@ def run_to_memory(
     name = f"kcm_stream_{next(_counter)}"
     spark: SparkSession = sdf.sparkSession
     with _scaled_state_partitions(spark, input_bytes):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", _ckpt_dir())
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),
+            timeout_s,
         )
-        _await_or_raise(q, timeout_s)
     return spark.table(name)
 
 
@@ -154,13 +159,7 @@ def run_foreach_batch(
     def write_batch(bdf: DataFrame, batch_id: int) -> None:
         bdf.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
 
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", _ckpt_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_raise(q, timeout_s)
+    run_available_now(sdf.writeStream.foreachBatch(write_batch), timeout_s)
 
 
 def run_to_files(
@@ -172,12 +171,7 @@ def run_to_files(
     """File sink with checkpointing — the engine's equivalent of the
     reference's S3 sink task (SURVEY.md A5-A7): at-least-once upgraded to
     exactly-once via the checkpoint + file-sink commit log."""
-    q = (
-        sdf.writeStream.format(fmt)
-        .option("path", path)
-        .option("checkpointLocation", _ckpt_dir())
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        sdf.writeStream.format(fmt).option("path", path).outputMode("append"),
+        timeout_s,
     )
-    _await_or_raise(q, timeout_s)

@@ -1,7 +1,8 @@
 """Session sizing, session confs and the Python worker daemon
 (``session.get_spark``, ``daemon``): the stat-gated zip-archive
 invalidation, the machine-sized driver heap, workers that import the
-package from any directory, and who owns each session conf."""
+package from any directory, who owns each session conf, and the
+checkpoint file manager stream logs are written through."""
 
 from __future__ import annotations
 
@@ -235,3 +236,15 @@ def test_conf_scope_restores_a_held_value_and_unsets_a_default(spark):
         assert not conf_is_set(spark, unheld)
     finally:
         spark.conf.unset(held)
+
+
+def test_stream_logs_go_through_the_filesystem_checkpoint_manager(spark, tmp_path):
+    """Stream metadata logs are written with ``FileSystem.create`` and
+    ``FileSystem.rename``, not the FileContext manager, whose every rename
+    forks a ``readlink`` process on a local disk without libhadoop."""
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf())
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"

@@ -355,7 +355,7 @@ def test_kafka_bytes_exact_e2e_fixture(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream did not finish"
     out = {r["user_id"]: r for r in spark.sql(
         "SELECT * FROM kafka_e2e_fixture").collect()}
 

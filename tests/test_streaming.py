@@ -1,5 +1,6 @@
 """Streaming semantics that need controlled multi-batch arrival order:
-watermark late-data drops and exactly-once file-sink restarts.
+watermark late-data drops, exactly-once file-sink restarts, and the
+metadata logs and throwaway checkpoints the runs leave behind.
 """
 
 from __future__ import annotations
@@ -221,7 +222,7 @@ def test_file_sink_exactly_once_on_rerun(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120), "stream did not finish"
 
     run_once()
     n1 = spark.read.json(out).count()
@@ -229,6 +230,63 @@ def test_file_sink_exactly_once_on_rerun(spark, sf_dir):
     n2 = spark.read.json(out).count()
     assert n1 > 0
     assert n2 == n1, f"rerun duplicated rows: {n1} -> {n2}"
+
+
+def _committed_logs(log_dir: str) -> set[str]:
+    """The batch files of one metadata log; asserts that nothing else (a
+    rename's temporary file) is left beside them and their checksums."""
+    names = set(os.listdir(log_dir))
+    committed = {n for n in names if not n.startswith(".")}
+    assert names - committed <= {f".{n}.crc" for n in committed}, sorted(names)
+    return committed
+
+
+def test_file_sink_logs_hold_exactly_the_committed_batches(spark, tmp_path):
+    """A file-sink run on a durable checkpoint leaves one file per batch in
+    each log its micro-batches wrote, and no temporary file of a rename."""
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "sink", "ckpt"))
+    n_files = 3
+    for i in range(n_files):
+        spark.range(i * 10, i * 10 + 10).coalesce(1).write.parquet(f"{src}/f{i}")
+    q = (
+        spark.readStream.schema("id long")
+        .option("recursiveFileLookup", "true")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream.format("json")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120), "stream did not finish"
+    batches = {str(i) for i in range(n_files)}
+    for log in ("offsets", "commits", "sources/0"):
+        assert _committed_logs(f"{ckpt}/{log}") == batches, log
+    assert _committed_logs(f"{out}/_spark_metadata") == batches
+    assert spark.read.json(out).count() == 10 * n_files
+
+
+def test_available_now_run_removes_its_checkpoint(spark, tmp_path, monkeypatch):
+    """The runner's throwaway checkpoint lives in scratch for the run alone."""
+    from kafka_connect_minio_pipeline_spark import scratch
+    from kafka_connect_minio_pipeline_spark.streaming.runner import (
+        run_available_now,
+    )
+
+    base = tmp_path / "scratch"
+    base.mkdir()
+    monkeypatch.setattr(scratch, "_base", lambda: str(base))
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+    seen = []
+    writer = spark.readStream.schema("id long").parquet(src).writeStream.foreachBatch(
+        lambda bdf, batch_id: seen.append(sorted(os.listdir(base)))
+    )
+    run_available_now(writer, 120)
+    assert len(seen) == 1 and len(seen[0]) == 1, seen
+    assert seen[0][0].startswith("kcm_ckpt_")
+    assert os.listdir(base) == []
 
 
 def test_stream_quality_equals_batch_filter(spark, sf_dir):
@@ -285,7 +343,7 @@ def test_file_sink_incremental_restart_processes_only_new_files(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120), "stream did not finish"
 
     def expected(frame):
         return profile_transform(users_from_customer(frame)).count()
